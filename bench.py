@@ -204,9 +204,10 @@ def format_records(
 def parse_pair_spec(spec: str) -> list[tuple[str, str, str]]:
     """Parse ``key=valA|valB[;key2=...]`` into ``[(key, valA, valB), ...]``.
 
-    Keys starting with ``spark.`` are applied as runtime session confs
-    (``spark.conf.set``); any other key is applied as an environment
-    variable (for ``TSDL_*`` knobs the engine reads at plan-build time).
+    Every key must be a ``spark.*`` runtime conf: the arms are applied with
+    ``spark.conf.set`` on the one live session. The package reads no
+    environment variable at plan-build time, so any other key would leave
+    both arms identical; it is rejected by name.
     """
     out = []
     for part in spec.split(";"):
@@ -220,7 +221,15 @@ def parse_pair_spec(spec: str) -> list[tuple[str, str, str]]:
                 f"--matched-pairs: bad spec segment {part!r} "
                 "(expected key=valA|valB)"
             )
-        out.append((key.strip(), a.strip(), b.strip()))
+        key = key.strip()
+        if not key.startswith("spark."):
+            raise SystemExit(
+                f"--matched-pairs: {key!r} is not a runtime conf; only "
+                "spark.* keys can differ between arms of one session (e.g. "
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize="
+                "64k|256k)"
+            )
+        out.append((key, a.strip(), b.strip()))
     if not out:
         raise SystemExit("--matched-pairs: empty spec")
     return out
@@ -260,15 +269,10 @@ def matched_pairs_main(argv: list[str]) -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark(app_name="tsdl-bench-pairs")
     spark.sparkContext.setLogLevel("ERROR")
-    saved_env = {k: os.environ.get(k) for k, _, _ in arms if not k.startswith("spark.")}
 
     def apply(arm: int) -> None:
         for key, a, b in arms:
-            val = a if arm == 0 else b
-            if key.startswith("spark."):
-                spark.conf.set(key, val)
-            else:
-                os.environ[key] = val
+            spark.conf.set(key, a if arm == 0 else b)
 
     def run(name: str, measured: bool) -> float:
         fn = Q.QUERIES[name]
@@ -279,36 +283,29 @@ def matched_pairs_main(argv: list[str]) -> None:
         return round(elapsed, 3) if measured else elapsed
 
     results: dict[str, dict] = {}
-    try:
-        for name in names:
-            spark.sparkContext.setJobDescription(f"pairs:{name}")
-            for arm in (0, 1):  # one unmeasured warm run per arm
-                apply(arm)
-                run(name, measured=False)
-            a_times: list[float] = []
-            b_times: list[float] = []
-            for _ in range(pairs):
-                apply(0)
-                a_times.append(run(name, measured=True))
-                apply(1)
-                b_times.append(run(name, measured=True))
-            a_min, b_min = min(a_times), min(b_times)
-            results[name] = {
-                "a": a_times,
-                "b": b_times,
-                "a_min": a_min,
-                "b_min": b_min,
-                # per-pair sign votes: how many pairs arm B won outright
-                "b_wins": sum(1 for x, y in zip(a_times, b_times) if y < x),
-                "b_over_a_min": round(b_min / a_min, 3) if a_min else None,
-            }
-            spark.sparkContext.setJobDescription(None)
-    finally:
-        for k, v in saved_env.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+    for name in names:
+        spark.sparkContext.setJobDescription(f"pairs:{name}")
+        for arm in (0, 1):  # one unmeasured warm run per arm
+            apply(arm)
+            run(name, measured=False)
+        a_times: list[float] = []
+        b_times: list[float] = []
+        for _ in range(pairs):
+            apply(0)
+            a_times.append(run(name, measured=True))
+            apply(1)
+            b_times.append(run(name, measured=True))
+        a_min, b_min = min(a_times), min(b_times)
+        results[name] = {
+            "a": a_times,
+            "b": b_times,
+            "a_min": a_min,
+            "b_min": b_min,
+            # per-pair sign votes: how many pairs arm B won outright
+            "b_wins": sum(1 for x, y in zip(a_times, b_times) if y < x),
+            "b_over_a_min": round(b_min / a_min, 3) if a_min else None,
+        }
+        spark.sparkContext.setJobDescription(None)
 
     line = json.dumps(
         {

@@ -85,12 +85,16 @@ def test_matched_pairs_spec_parses_and_rejects_garbage():
     assert bench.parse_pair_spec(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize=64k|1m"
     ) == [("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k", "1m")]
-    assert bench.parse_pair_spec("TSDL_X=0|2048; spark.a=1|2") == [
-        ("TSDL_X", "0", "2048"),
+    assert bench.parse_pair_spec("spark.a=1|2; spark.b=x|y") == [
         ("spark.a", "1", "2"),
+        ("spark.b", "x", "y"),
     ]
     import pytest
 
+    # arms apply to one live session, so a non-runtime key would compare
+    # two identical arms: refused by name, pointing at the spark.* form
+    with pytest.raises(SystemExit, match=r"'TSDL_X'.*spark\.sql\.adaptive"):
+        bench.parse_pair_spec("TSDL_X=0|2048; spark.a=1|2")
     with pytest.raises(SystemExit):
         bench.parse_pair_spec("no_pipe=1")
     with pytest.raises(SystemExit):

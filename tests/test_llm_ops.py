@@ -819,3 +819,16 @@ def test_spread_small_bytes_guard(spark, sf_dir, tmp_path, monkeypatch):
     assert D.spread_small(df).rdd.getNumPartitions() == target  # small: spreads
     monkeypatch.setattr(D, "_SPREAD_MAX_BYTES", 1)  # pretend it is huge
     assert D.spread_small(df).rdd.getNumPartitions() == 1  # big: untouched
+    # Lengths come from the session's Hadoop FileSystem (not os.path), so
+    # the same guard serves s3a:// and hdfs:// scans; on this file: input
+    # the bound must sit exactly at the bytes on disk.
+    import os
+
+    files = df.inputFiles()
+    assert files and all(f.startswith("file:") for f in files)
+    on_disk = sum(os.path.getsize(f.removeprefix("file:")) for f in files)
+    assert D._input_bytes(spark, files) == on_disk
+    monkeypatch.setattr(D, "_SPREAD_MAX_BYTES", on_disk - 1)
+    assert D.spread_small(df) is df
+    monkeypatch.setattr(D, "_SPREAD_MAX_BYTES", on_disk)
+    assert D.spread_small(df).rdd.getNumPartitions() == target

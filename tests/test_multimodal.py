@@ -1656,78 +1656,6 @@ def test_png_palette_index_out_of_range_is_value_error():
     assert np.array_equal(out[1], pal[[3, 2, 1, 0]])
 
 
-def test_codec_backend_env_contract(monkeypatch):
-    # Default (pure) must return exactly the reference codecs — the
-    # oracle-gated queries pin their bit-determinism on this.
-    from time_series_and_data_lakes_spark.operators import multimodal as M
-
-    monkeypatch.delenv("TSDL_CODEC_BACKEND", raising=False)
-    assert M.active_pixel_codecs() is M._PIXEL_CODECS
-    monkeypatch.setenv("TSDL_CODEC_BACKEND", "pure")
-    assert M.active_pixel_codecs() is M._PIXEL_CODECS
-
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-
-    monkeypatch.setenv("TSDL_CODEC_BACKEND", "auto")
-    auto = M.active_pixel_codecs()
-    assert set(M._PIXEL_CODECS) <= set(auto)
-    if not has_pil:
-        # auto degrades to pure when PIL is absent; native refuses
-        assert all(auto[c] == M._PIXEL_CODECS[c] for c in auto)
-        monkeypatch.setenv("TSDL_CODEC_BACKEND", "native")
-        with pytest.raises(RuntimeError, match="PIL is not installed"):
-            M.active_pixel_codecs()
-    monkeypatch.setenv("TSDL_CODEC_BACKEND", "bogus")
-    with pytest.raises(ValueError, match="pure/auto/native"):
-        M.active_pixel_codecs()
-
-
-def test_native_backend_cross_validates_against_pure_codecs():
-    """Skipped unless PIL is installed (round-5 verdict item 5): the
-    native backend must agree with the reference codecs — identical
-    dimensions everywhere, bit-identical pixels for lossless codecs, and
-    bounded per-sample deltas for JPEG (the spec fixes the bitstream, not
-    the IDCT rounding)."""
-    pytest.importorskip("PIL")
-    import numpy as np
-
-    from time_series_and_data_lakes_spark.operators import multimodal as M
-
-    native = M._native_codecs()
-    assert native, "PIL importable but native registry empty"
-    rng = np.random.default_rng(99)
-    arr = rng.integers(0, 256, (24, 17, 3), dtype=np.uint8)
-
-    for codec in ("bmp", "ppm", "png"):
-        pure_dec, pure_enc = M._PIXEL_CODECS[codec]
-        nat_dec, nat_enc = native[codec]
-        payload = pure_enc(arr)
-        # native decode of a pure-encoded stream: bit-identical (lossless)
-        assert np.array_equal(nat_dec(payload), arr)
-        # pure decode of a native-encoded stream: bit-identical
-        assert np.array_equal(pure_dec(nat_enc(arr)), arr)
-
-    # GIF: pure encode is lossless for <=256 distinct colors
-    few_colors = (arr // 64) * 64
-    assert np.array_equal(
-        native["gif"][0](M._PIXEL_CODECS["gif"][1](few_colors)), few_colors
-    )
-
-    # JPEG: same bitstream, decoders may round differently — dims equal,
-    # per-sample delta bounded
-    payload = M._PIXEL_CODECS["jpeg"][1](arr)
-    pure_px = M._PIXEL_CODECS["jpeg"][0](payload)
-    nat_px = native["jpeg"][0](payload)
-    assert pure_px.shape == nat_px.shape
-    delta = np.abs(pure_px.astype(np.int32) - nat_px.astype(np.int32))
-    assert int(delta.max()) <= 2
-
-
 def test_on_error_skip_drops_only_bad_rows_and_media_errors_reports_them(spark):
     """At corpus scale some payloads WILL be corrupt; on_error='skip'
     costs one row per bad payload instead of the job, and media_errors
@@ -1959,7 +1887,7 @@ def test_decode_media_reports_avi_header_dims(spark):
     assert (row["width"], row["height"], row["n_frames"]) == (8, 6, 4)
 
 
-def test_media_docs_python_stage_partitions_are_row_bounded(spark, sf_dir, monkeypatch):
+def test_media_docs_python_stage_partitions_are_row_bounded(spark, sf_dir):
     # r11: the multimodal fixture chains (2-3 mapInPandas stages) size their
     # task count by rows-per-task from parquet footer metadata, not by core
     # count — every Python stage task pays a worker round trip even when
@@ -1980,13 +1908,6 @@ def test_media_docs_python_stage_partitions_are_row_bounded(spark, sf_dir, monke
         ),
     )
     assert QE._media_docs(spark, sf_dir).rdd.getNumPartitions() == expect
-    # the 0 arm reproduces the old core-count spread bit-for-bit (this is
-    # the matched-pairs baseline arm used for the r11 adjudication)
-    monkeypatch.setenv("TSDL_PY_ROWS_PER_TASK", "0")
-    assert (
-        QE._media_docs(spark, sf_dir).rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
 
 
 def test_parquet_footer_rows_conservative_none(tmp_path):

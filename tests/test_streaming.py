@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import random
+import time
 
 import pytest
 
@@ -834,20 +835,11 @@ def test_kafka_decode_drops_tombstones_and_garbage(spark, tmp_path):
     assert all(r["sensor_id"] is not None for r in got)
 
 
-def test_read_json_stream_source_dir_alias(spark, tmp_path):
-    # ADVICE_r3: source_dir is the deprecated pre-round-3 keyword for
-    # source; both spell the same stream, passing both is an error.
+def test_read_json_stream_requires_source(spark, tmp_path):
     rows = sensor_readings(seed=31, sensors=2, span_seconds=10)
     src = _write_json_batches(tmp_path, rows, n_batches=1)
-    assert read_json_stream(spark, source_dir=src).isStreaming
-    assert read_json_stream(spark, src).schema == read_json_stream(
-        spark, source_dir=src
-    ).schema
-    import pytest
-
-    with pytest.raises(TypeError, match="not both"):
-        read_json_stream(spark, src, source_dir=src)
-    with pytest.raises(TypeError, match="missing required"):
+    assert read_json_stream(spark, src).isStreaming
+    with pytest.raises(TypeError, match="missing 1 required"):
         read_json_stream(spark)
 
 
@@ -1657,6 +1649,19 @@ def test_smoother_state_ttl_evicts_silent_keys_outputs_unchanged(
     assert spark.table("holt_ttl").count() > 0
 
 
+def _backlog_consumed(q, n_files: int) -> bool:
+    """True once a file-source batch's end offset covers ``n_files`` files
+    (one file per trigger) and a later batch has reported progress."""
+    done = None
+    for p in q.recentProgress:
+        if done is not None and p["batchId"] > done:
+            return True
+        end = json.loads(p.json)["sources"][0]["endOffset"]
+        if done is None and end and end["logOffset"] >= n_files - 1:
+            done = p["batchId"]
+    return False
+
+
 def test_tws_state_ttl_validation_and_native_ttl_run(spark, tmp_path):
     """TWS binding's state_ttl: (a) a TTL shorter than WITHIN (+ lateness,
     when event-time mode is on) is rejected, and (b) with a valid TTL the
@@ -1700,7 +1705,22 @@ def test_tws_state_ttl_validation_and_native_ttl_run(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    # With state_ttl the AvailableNow query never terminates by itself (see
+    # match_error_pattern_tws), so stop it once the batch that read the
+    # last of the 3 files has been followed by another batch.
+    deadline = time.monotonic() + 120
+    try:
+        while not _backlog_consumed(q, n_files=3):
+            if not q.isActive:  # stopped on its own: must not have failed
+                assert q.exception() is None, q.exception()
+                break
+            assert time.monotonic() < deadline, (
+                "backlog not consumed within 120 s: "
+                f"{[(p['batchId'], p['numInputRows']) for p in q.recentProgress]}"
+            )
+            time.sleep(0.5)
+    finally:
+        q.stop()
     got = sorted(tuple(r) for r in spark.table("cep_tws_ttl").collect())
     batch_df = spark.createDataFrame(
         [

@@ -25,7 +25,6 @@ count — not corpus² — bounds the quadratic stage, which is the point of LSH
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -51,20 +50,33 @@ def spread_small(df: DataFrame) -> DataFrame:
     properly-split scan is never touched) AND by input bytes — on a large
     cluster a mid-size table (say 10 GB in 80 partitions on 8000 cores)
     passes the count guard, but round-robinning 10 GB of raw rows ahead of
-    an aggregation shuffles the full payload for nothing. Unknown input
-    size (non-file sources) keeps the small-reference-file assumption."""
-    target = df.sparkSession.sparkContext.defaultParallelism
+    an aggregation shuffles the full payload for nothing. File lengths come
+    from the session's Hadoop ``FileSystem``, so the guard holds for any
+    scheme (``file:``, ``s3a://``, ``hdfs://``). Unknown input size
+    (non-file sources) keeps the small-reference-file assumption."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
     try:
-        size = sum(
-            os.path.getsize(p.removeprefix("file:")) for p in df.inputFiles()
-        )
+        size = _input_bytes(spark, df.inputFiles())
     except Exception:
         size = None
     if size is not None and size > _SPREAD_MAX_BYTES:
         return df
     return df.repartition(target)
+
+
+def _input_bytes(spark, paths: list[str]) -> int:
+    """Total length of ``paths``, resolved per path through the Hadoop
+    ``FileSystem`` its scheme maps to."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    total = 0
+    for p in paths:
+        path = hpath(p)
+        total += path.getFileSystem(conf).getFileStatus(path).getLen()
+    return total
 
 
 def h64(col: Column, seed: int | str = 0) -> Column:
@@ -305,17 +317,14 @@ def minhash_lsh_dedup(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    if int(os.environ.get("TSDL_MINHASH_VERIFY_SPREAD", "1")):
-        # Verify-stage width (r11): the dedup exchange's output is a few
-        # bytes per pair, so AQE's byte-based coalescing lands the exact-
-        # Jaccard verify — heavy array_intersect work per row once the
-        # shingle arrays are joined in below — on 1-2 tasks. Re-spread the
-        # DEDUPED pairs (ids only, the smallest frame in the query) so the
-        # verify runs at cluster width; user-numbered repartitions are
-        # exempt from AQE coalescing, which is the point.
-        cands = cands.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
+    # Verify-stage width (r11): the dedup exchange's output is a few bytes
+    # per pair, so AQE's byte-based coalescing lands the exact-Jaccard
+    # verify — heavy array_intersect work per row once the shingle arrays
+    # are joined in below — on 1-2 tasks. Re-spread the DEDUPED pairs (ids
+    # only, the smallest frame in the query) so the verify runs at cluster
+    # width; user-numbered repartitions are exempt from AQE coalescing,
+    # which is the point.
+    cands = cands.repartition(df.sparkSession.sparkContext.defaultParallelism)
     # Verify only the candidates: shingle arrays join in here, bounded by the
     # candidate count, not corpus².
     sh = sigs.select("doc_id", "sh")

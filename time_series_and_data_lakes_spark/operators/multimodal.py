@@ -56,9 +56,7 @@ unchanged.
 
 from __future__ import annotations
 
-import io
 import math
-import os
 import struct
 import zlib
 from collections.abc import Iterator
@@ -976,106 +974,6 @@ _PIXEL_CODECS = {
     "jpg": (_jpeg_decode, _jpeg_encode),
 }
 
-# Optional accelerated backend (round-5 verdict item 5): the pure
-# numpy/stdlib codecs above are the REFERENCE implementation — complete,
-# deterministic, what every oracle-gated query pins — at an honest
-# ~0.3-0.7 s/720p JPEG; at 100 TB a native decoder is the difference
-# between feasible and not. With PIL installed the same API is served by it:
-#
-#   TSDL_CODEC_BACKEND=pure    (default) pure codecs only — bit-determinism
-#   TSDL_CODEC_BACKEND=auto    native where available, pure otherwise
-#   TSDL_CODEC_BACKEND=native  native required; raises if PIL is absent
-#
-# The env var is read per-process, so it reaches executor Python workers in
-# local mode and via spark.executorEnv on a cluster. Cross-validation
-# (tests/test_multimodal.py, skipped without PIL): identical dimensions;
-# bit-identical pixels for the lossless codecs (bmp/ppm/png/gif frames);
-# bounded per-sample deltas for JPEG (the spec fixes the bitstream, not the
-# IDCT rounding).
-
-
-def _native_codecs() -> dict:
-    """PIL-backed (decode, encode) pairs per codec; {} when PIL is absent.
-    Decodes convert to RGB uint8 (alpha dropped / palette resolved /
-    grayscale replicated) and keep the repo's error taxonomy: PIL's own
-    failures (UnidentifiedImageError/OSError/...) re-raise as ValueError
-    = corrupt stream. The native DECODE surface is a superset of the pure
-    codecs' (e.g. progressive-arithmetic JPEG decodes here instead of
-    raising NotImplementedError); the
-    cross-validation test pins bit-agreement on the common surface. GIF
-    keeps the pure contract exactly: decode guards animations behind the
-    same NotImplementedError :func:`gif_decode` raises (PIL would
-    silently return frame 0 and drop the rest), and encode delegates to
-    the lossless-or-raise pure :func:`gif_encode` (PIL's GIF save
-    median-cut-quantizes, which is neither lossless nor deterministic
-    across PIL versions)."""
-    try:
-        from PIL import Image
-    except ImportError:
-        return {}
-
-    save_fmt = {
-        "bmp": "BMP",
-        "ppm": "PPM",
-        "png": "PNG",
-        "gif": "GIF",
-        "jpeg": "JPEG",
-        "jpg": "JPEG",
-    }
-
-    def make(fmt: str):
-        def dec(payload: bytes) -> "np.ndarray":
-            try:
-                im = Image.open(io.BytesIO(bytes(payload)))
-                if fmt == "gif" and getattr(im, "n_frames", 1) > 1:
-                    raise NotImplementedError(
-                        f"single-image decode of an animated GIF (got "
-                        f"{im.n_frames} frames) would drop frames — use "
-                        f"gif_decode_frames/extract_frames"
-                    )
-                return np.asarray(im.convert("RGB"), dtype=np.uint8)
-            except (NotImplementedError, ValueError):
-                raise
-            except Exception as e:
-                raise ValueError(
-                    f"corrupt {fmt} stream (native decode: {e})"
-                ) from e
-
-        def enc(arr: "np.ndarray") -> bytes:
-            buf = io.BytesIO()
-            Image.fromarray(np.ascontiguousarray(arr), "RGB").save(
-                buf, format=save_fmt[fmt]
-            )
-            return buf.getvalue()
-
-        # gif binds the pure encoder DIRECTLY (see docstring) — which also
-        # keeps the registry-wide contract that the gif encode entry
-        # accepts gif_encode's ``quantize=`` kwarg (_transcode_resize
-        # passes it for averaging resamplers)
-        return (dec, gif_encode) if fmt == "gif" else (dec, enc)
-
-    return {fmt: make(fmt) for fmt in save_fmt}
-
-
-def active_pixel_codecs() -> dict:
-    """The (decode, encode) registry the pixel operators dispatch on,
-    honoring ``TSDL_CODEC_BACKEND`` (see the backend note above)."""
-    # empty string (a shell's `export TSDL_CODEC_BACKEND=`) means unset
-    backend = os.environ.get("TSDL_CODEC_BACKEND") or "pure"
-    if backend == "pure":
-        return _PIXEL_CODECS
-    if backend not in ("auto", "native"):
-        raise ValueError(
-            f"TSDL_CODEC_BACKEND must be pure/auto/native, got {backend!r}"
-        )
-    native = _native_codecs()
-    if backend == "native" and not native:
-        raise RuntimeError(
-            "TSDL_CODEC_BACKEND=native but PIL is not installed; "
-            "use 'auto' to fall back to the pure codecs"
-        )
-    return {**_PIXEL_CODECS, **native}
-
 
 def _decode_payload(payload: bytes, codec: str) -> tuple[int, int, int]:
     """Container-header decode. PNG/JPEG/GIF dimension parsing is REAL
@@ -1318,22 +1216,17 @@ def _transcode_resize(
     codec: str,
     max_width: int,
     max_height: int,
-    codecs: dict | None = None,
     method: str = "nearest",
 ) -> bytes:
     """One payload through the aspect-fit resize. ``bmp``/``ppm``/``png``
     get a REAL pixel transcode (decode -> :func:`nn_resize` -> re-encode,
     same codec — every codec registered in ``_PIXEL_CODECS``, which is
     now every image format: bmp/ppm/png/gif/jpeg); ``tsdl-fake`` gets
-    the header rewrite; compressed AV codecs need ffmpeg and raise.
-    Dispatch honors ``TSDL_CODEC_BACKEND`` (:func:`active_pixel_codecs`);
-    per-row callers pass the registry in to avoid rebuilding it."""
-    if codecs is None:
-        codecs = active_pixel_codecs()
+    the header rewrite; compressed AV codecs need ffmpeg and raise."""
     if codec is None:
         raise ValueError("null meta struct: row carries no codec")
-    if codec in codecs:
-        decode, encode = codecs[codec]
+    if codec in _PIXEL_CODECS:
+        decode, encode = _PIXEL_CODECS[codec]
         arr = decode(bytes(payload))
         h, w = arr.shape[:2]
         nw, nh = _resize_dims(w, h, max_width, max_height)
@@ -1345,10 +1238,7 @@ def _transcode_resize(
             # the GIF format caps at 256, so opt in to the deterministic
             # median-cut reduction (still lossless while <=256 colors
             # survive). The <=256-invariant gif_encode relies on by default
-            # holds only for nearest-neighbor. Routed through the registry
-            # encode so backend dispatch stays intact — every backend's gif
-            # encode entry must keep gif_encode's ``quantize=`` contract
-            # (both current backends bind gif_encode itself).
+            # holds only for nearest-neighbor.
             return encode(resampled, quantize=True)
         return encode(resampled)
     if codec == "tsdl-fake":
@@ -1386,14 +1276,13 @@ def resize_media(
         )
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codecs = active_pixel_codecs()  # loop-invariant: once per task
         for pdf in batches:
             sub, payloads = _attempt_rows(
                 pdf,
                 on_error,
                 _transcode_resize,
                 (
-                    (p, c, max_width, max_height, codecs, method)
+                    (p, c, max_width, max_height, method)
                     for p, c in zip(
                         pdf["payload"], pdf["meta"].map(_codec_of)
                     )
@@ -1431,24 +1320,23 @@ def pixel_stats(
     ``on_error='skip'`` drops undecodable rows (see :func:`_row_attempt`)."""
     _check_on_error(on_error)
 
-    def one(p, c, codecs):
-        if c not in codecs:
+    def one(p, c):
+        if c not in _PIXEL_CODECS:
             raise NotImplementedError(
                 f"pixel_stats needs a pixel codec "
-                f"({'/'.join(sorted(codecs))}), got {c!r}"
+                f"({'/'.join(sorted(_PIXEL_CODECS))}), got {c!r}"
             )
-        arr = codecs[c][0](bytes(p))
+        arr = _PIXEL_CODECS[c][0](bytes(p))
         return arr.shape[1], arr.shape[0], int(arr.sum(dtype=np.int64)), len(p)
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codecs = active_pixel_codecs()  # loop-invariant: once per task
         for pdf in batches:
             sub, rows = _attempt_rows(
                 pdf,
                 on_error,
                 one,
                 (
-                    (p, c, codecs)
+                    (p, c)
                     for p, c in zip(
                         pdf["payload"], pdf["meta"].map(_codec_of)
                     )
@@ -1971,12 +1859,12 @@ def media_errors(df: DataFrame) -> DataFrame:
     frames; route animations through :func:`extract_frames` instead).
     This report is about bad bytes, not about which op fits which row."""
 
-    def one(p, codec, codecs):
+    def one(p, codec):
         b = bytes(p)
         if codec == "gif":
             gif_decode_frames(b)
-        elif codec in codecs:
-            codecs[codec][0](b)
+        elif codec in _PIXEL_CODECS:
+            _PIXEL_CODECS[codec][0](b)
         elif codec == "wav":
             wav_decode(b)
         elif codec == "avi":
@@ -1985,7 +1873,6 @@ def media_errors(df: DataFrame) -> DataFrame:
             _decode_payload(b, codec)
 
     def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        codecs = active_pixel_codecs()  # loop-invariant: once per task
         for pdf in batches:
             ids, cods, kinds, msgs = [], [], [], []
             for mid, p, c in zip(
@@ -1998,7 +1885,7 @@ def media_errors(df: DataFrame) -> DataFrame:
                     kinds.append("null"); msgs.append("null payload")
                     continue
                 try:
-                    one(p, c, codecs)
+                    one(p, c)
                 except ValueError as e:
                     ids.append(mid); cods.append(c)
                     kinds.append("corrupt"); msgs.append(str(e))

@@ -10,7 +10,6 @@ determinism contract is documented in each operator module.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -90,9 +89,7 @@ def _load_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # task's Arrow batches amortize the per-stage Python worker round trip
 # (~0.2 s even for a near-empty task — the r10 host fact) while staying a
 # fraction of spark.sql.execution.arrow.maxRecordsPerBatch (10k) so a task
-# still streams multiple batches. Env-overridable for A/B adjudication
-# (bench.py --matched-pairs); 0 disables the bound (falls back to
-# spread_small's core-count spread).
+# still streams multiple batches.
 _PY_ROWS_PER_TASK = 2048
 
 
@@ -112,15 +109,12 @@ def _media_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata is unavailable."""
     path = f"{sf_dir}/documents.parquet"
     df = spark.read.parquet(path)
-    rows_per_task = int(
-        os.environ.get("TSDL_PY_ROWS_PER_TASK", str(_PY_ROWS_PER_TASK))
-    )
-    n_rows = parquet_footer_rows(path) if rows_per_task > 0 else None
+    n_rows = parquet_footer_rows(path)
     if n_rows is None:
         return spread_small(df)
     target = max(1, min(
         spark.sparkContext.defaultParallelism,
-        -(-n_rows // rows_per_task),
+        -(-n_rows // _PY_ROWS_PER_TASK),
     ))
     if df.rdd.getNumPartitions() >= target:
         return df
@@ -213,9 +207,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
         # the verify path already emits deduplicated strict doc_a < doc_b
         # pairs (dropDuplicates + the a < b filter): skip the ingress
-        # edge-set dedup exchange (r11; gated TSDL_CC_ASSUME_DISTINCT=0
-        # for matched-pairs re-adjudication)
-        assume_distinct=bool(int(os.environ.get("TSDL_CC_ASSUME_DISTINCT", "1"))),
+        # edge-set dedup exchange
+        assume_distinct=True,
     )
     # No final orderBy: a global presentation sort over the full label set
     # is a range-partitioning exchange that buys nothing at scale (the
@@ -366,9 +359,8 @@ def dedup_retention_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
         # the verify path already emits deduplicated strict doc_a < doc_b
         # pairs (dropDuplicates + the a < b filter): skip the ingress
-        # edge-set dedup exchange (r11; gated TSDL_CC_ASSUME_DISTINCT=0
-        # for matched-pairs re-adjudication)
-        assume_distinct=bool(int(os.environ.get("TSDL_CC_ASSUME_DISTINCT", "1"))),
+        # edge-set dedup exchange
+        assume_distinct=True,
     )
     dropped = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")

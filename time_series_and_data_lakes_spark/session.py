@@ -31,7 +31,7 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("TSDL_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -54,12 +54,11 @@ def get_spark(
         # optimum of the global trade. Inert at cluster scale, where
         # post-shuffle partitions are 100 MB-1 GB (guide-sized via
         # spark.sql.adaptive.advisoryPartitionSizeInBytes) and the
-        # parallelismFirst cap is shuffle.partitions anyway; override for
-        # byte-bound workloads via TSDL_AQE_MIN_PARTITION.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("TSDL_AQE_MIN_PARTITION", "256k"),
-        )
+        # parallelismFirst cap is shuffle.partitions anyway. Byte-bound
+        # workloads override it through ``extra_conf=``; it is a runtime conf,
+        # so ``spark.conf.set`` (and ``bench.py --matched-pairs``) can also
+        # change it on a live session.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow for every pandas interchange (toPandas, pandas UDFs).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -508,6 +508,12 @@ def match_error_pattern_tws(
     ``within`` + ``allowed_lateness`` so eviction only drops candidates
     that could never complete.
 
+    With ``state_ttl`` set, a ``Trigger.AvailableNow`` query does not stop
+    on its own: once the backlog is consumed it keeps running empty
+    (``numInputRows`` 0) micro-batches and ``awaitTermination`` never
+    returns (observed on Spark 4.1.2). Callers must ``stop()`` it
+    themselves once the source's end offset covers the backlog.
+
     Requires ``protobuf`` at runtime (the API's state-server protocol);
     environments without it should use :func:`match_error_pattern_stream`,
     which shares the NFA code path exactly (``_advance_key``).

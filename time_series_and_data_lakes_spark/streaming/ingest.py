@@ -103,12 +103,11 @@ def decode_kafka_json(
 
 def read_json_stream(
     spark: SparkSession,
-    source: str | None = None,
+    source: str,
     schema=SENSOR_READING_SCHEMA,
     max_files_per_trigger: int | None = None,
     source_format: str = "files",
     kafka_options: dict[str, str] | None = None,
-    source_dir: str | None = None,
 ) -> DataFrame:
     """Keyed JSON record stream → typed wide records (S2/S3).
 
@@ -127,17 +126,7 @@ def read_json_stream(
     Either way the computed processing-time column mirrors Flink's
     ``PROCTIME()`` (`notebook.txt:7`) — event time stays payload, as in the
     reference.
-
-    ``source_dir`` is the deprecated pre-round-3 keyword for ``source``
-    (the parameter was renamed when the kafka path made it not always a
-    directory); it keeps working for existing callers.
     """
-    if source_dir is not None:
-        if source is not None:
-            raise TypeError("pass either source or source_dir, not both")
-        source = source_dir
-    if source is None:
-        raise TypeError("read_json_stream() missing required argument: source")
     if source_format == "kafka":
         if max_files_per_trigger is not None:
             raise ValueError(
