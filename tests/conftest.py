@@ -1,29 +1,10 @@
 from __future__ import annotations
 
 import os
-import runpy
-import sys
 
 import pytest
 
 SF_SMOKE = os.environ.get("TSDL_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-_SHIM_DIR = os.path.join(os.path.dirname(__file__), "_protobuf_shim")
-
-
-def _enable_protobuf_shim() -> None:
-    """Activate the bundled pure-Python protobuf for this container (see
-    tests/_protobuf_shim/sitecustomize.py) so the transformWithStateInPandas
-    path runs in CI. Driver process: execute the (self-guarded) shim now.
-    Spark Python workers: put the shim dir on PYTHONPATH *before* the JVM
-    starts, so every spawned worker auto-imports it via sitecustomize."""
-    runpy.run_path(os.path.join(_SHIM_DIR, "sitecustomize.py"))
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (_SHIM_DIR, os.environ.get("PYTHONPATH")) if p
-    )
-
-
-_enable_protobuf_shim()
 
 from time_series_and_data_lakes_spark import get_spark  # noqa: E402
 

@@ -232,7 +232,9 @@ def test_events_nanos_probe_walks_partitioned_store(spark, tmp_path):
     partitioned events store has no top-level part files, and a corrupt
     or sidecar file must be skipped, not treated as "no nanos" — the
     old single-file probe returned False and the read then failed
-    outright on the TIMESTAMP(NANOS) column."""
+    outright on the TIMESTAMP(NANOS) column. A leftover micros part file
+    under ``_temporary/`` (an aborted write's staging tree, which Spark
+    readers skip) sorts first and must be pruned the same way."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -256,6 +258,12 @@ def test_events_nanos_probe_walks_partitioned_store(spark, tmp_path):
     part.mkdir(parents=True)
     (store / "_SUCCESS").touch()  # sidecar: ignored
     pq.write_table(table, str(part / "part-000.parquet"))
+    debris = store / "_temporary" / "0"
+    debris.mkdir(parents=True)
+    pq.write_table(
+        table.set_column(1, "ts", table["ts"].cast(pa.timestamp("us"), safe=False)),
+        str(debris / "part-00000.parquet"),
+    )
     assert _events_ts_is_nanos(str(store)) is True
 
     # probe-only: a corrupt part file is skipped, not read as "no nanos"

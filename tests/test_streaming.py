@@ -8,7 +8,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import random
-import time
 
 import pytest
 
@@ -564,74 +563,6 @@ def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
         for r in match_error_pattern(
             batch_df, key="device", within="INTERVAL 1 MINUTE"
         ).collect()
-    )
-    assert got == want
-    assert len(got) > 0
-
-    # the tws binding shares the schema derivation — construction suffices
-    # to pin it (e2e tws parity runs in test_streaming_cep_tws_equals_batch)
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return
-    from time_series_and_data_lakes_spark.streaming import match_error_pattern_tws
-
-    tws = match_error_pattern_tws(typed, key="device", within="INTERVAL 1 MINUTE")
-    assert dict(tws.dtypes)["device"] == "bigint"
-
-
-def test_streaming_cep_tws_equals_batch(spark, tmp_path):
-    """Same NFA on Spark 4's transformWithStateInPandas typed-state API —
-    the streaming output must equal the batch operator (and therefore the
-    applyInPandasWithState binding) on in-order replays.
-
-    The state-server protocol of transformWithStateInPandas needs protobuf
-    at runtime; skip where it isn't installed (the NFA itself is identical
-    code to the applyInPandasWithState binding tested above)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas requires protobuf")
-    from time_series_and_data_lakes_spark.streaming import match_error_pattern_tws
-
-    rows = sensor_readings(seed=2, sensors=6, span_seconds=120)
-    src = _write_json_batches(tmp_path, rows, n_batches=6)
-
-    wide = read_json_stream(spark, src, max_files_per_trigger=1)
-    typed = wide.select(
-        "sensor_id",
-        F.timestamp_millis("event_time").alias("time"),
-        "status",
-        "temperature",
-    )
-    matches = match_error_pattern_tws(typed, within="INTERVAL 1 MINUTE")
-    q = (
-        matches.writeStream.format("memory")
-        .queryName("cep_tws")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(tuple(r) for r in spark.table("cep_tws").collect())
-
-    batch_df = spark.createDataFrame(
-        [
-            (
-                r["sensor_id"],
-                dt.datetime.utcfromtimestamp(r["event_time"] / 1000.0),
-                r["status"],
-                r["temperature"],
-            )
-            for r in rows
-        ],
-        "sensor_id string, time timestamp, status string, temperature double",
-    )
-    want = sorted(
-        tuple(r)
-        for r in match_error_pattern(batch_df, within="INTERVAL 1 MINUTE").collect()
     )
     assert got == want
     assert len(got) > 0
@@ -1492,9 +1423,17 @@ def test_cep_state_ttl_shorter_than_within_rejected(spark, tmp_path):
         "status",
         "temperature",
     )
-    with pytest.raises(ValueError, match="state_ttl"):
+    with pytest.raises(ValueError, match="shorter than within"):
         match_error_pattern_stream(
             typed, within="INTERVAL 1 MINUTE", state_ttl="INTERVAL 30 SECONDS"
+        )
+    with pytest.raises(ValueError, match="allowed_lateness"):
+        # 65 s covers within alone but not within + allowed_lateness
+        match_error_pattern_stream(
+            typed,
+            within="INTERVAL 1 MINUTE",
+            allowed_lateness="INTERVAL 10 SECONDS",
+            state_ttl="INTERVAL 65 SECONDS",
         )
 
 
@@ -1546,6 +1485,81 @@ def test_cep_event_time_ttl_flushes_stranded_reorder_buffer(spark, tmp_path):
         assert rows[0]["history"] == "OK"  # the flushed stranded match
     finally:
         q.stop()
+
+
+
+def test_cep_ttl_eviction_survives_restart(spark, tmp_path):
+    """The pending eviction is STATE: a query stopped after the data batch
+    but before the TTL fires must, on restart from the same checkpoint with
+    no new data for that key, restore its timeout, flush the stranded match
+    and drop the state — otherwise a rolling redeploy leaks every in-flight
+    silent key's state and the matches buffered in it."""
+    base = 1_700_000_000_000
+    s2 = [
+        {"sensor_id": "s2", "event_time": base, "status": "ERROR", "temperature": 1.0},
+        {"sensor_id": "s2", "event_time": base + 100, "status": "OK", "temperature": 2.0},
+        {"sensor_id": "s2", "event_time": base + 200, "status": "ERROR", "temperature": 3.0},
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    with open(src / "b0.json", "w") as f:
+        for r in s2:
+            f.write(json.dumps(r) + "\n")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+
+    def start_query():
+        typed = read_json_stream(spark, str(src), max_files_per_trigger=1).select(
+            "sensor_id",
+            F.timestamp_millis("event_time").alias("time"),
+            "status",
+            "temperature",
+        )
+        matches = match_error_pattern_stream(
+            typed,
+            within="INTERVAL 1 SECOND",
+            allowed_lateness="INTERVAL 1 SECOND",
+            state_ttl="INTERVAL 20 SECONDS",
+        )
+        return (
+            matches.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(processingTime="250 milliseconds")
+            .start()
+        )
+
+    # phase 1: the data batch commits the buffered rows, then the query
+    # stops well before the 20 s TTL fires, stranding the match
+    q = start_query()
+    try:
+        assert _await_state_rows(q, 1) is not None
+    finally:
+        q.stop()
+    assert spark.read.parquet(out).count() == 0
+
+    # phase 2: restart with no new s2 data — only s2's restored state and
+    # timeout can flush its buffer. After a restart Spark schedules no
+    # micro-batch until new data arrives unless the stop interrupted a
+    # batch (it then re-runs that batch and no-data batches follow), so
+    # one row for an unrelated key gives every restart a batch, as any
+    # other sensor would. A lone ERROR row cannot complete a match.
+    with open(src / "b1.json", "w") as f:
+        f.write(
+            json.dumps(
+                {"sensor_id": "s9", "event_time": base, "status": "ERROR", "temperature": 9.0}
+            )
+            + "\n"
+        )
+    q2 = start_query()
+    try:
+        assert _await_state_rows(q2, 0) is not None
+    finally:
+        q2.stop()
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == 1 and rows[0]["sensor_id"] == "s2"
+    assert rows[0]["history"] == "OK"  # the flushed stranded match
 
 
 def test_smoother_state_ttl_evicts_silent_keys_outputs_unchanged(
@@ -1648,337 +1662,3 @@ def test_smoother_state_ttl_evicts_silent_keys_outputs_unchanged(
         qh.stop()
     assert spark.table("holt_ttl").count() > 0
 
-
-def _backlog_consumed(q, n_files: int) -> bool:
-    """True once a file-source batch's end offset covers ``n_files`` files
-    (one file per trigger) and a later batch has reported progress."""
-    done = None
-    for p in q.recentProgress:
-        if done is not None and p["batchId"] > done:
-            return True
-        end = json.loads(p.json)["sources"][0]["endOffset"]
-        if done is None and end and end["logOffset"] >= n_files - 1:
-            done = p["batchId"]
-    return False
-
-
-def test_tws_state_ttl_validation_and_native_ttl_run(spark, tmp_path):
-    """TWS binding's state_ttl: (a) a TTL shorter than WITHIN (+ lateness,
-    when event-time mode is on) is rejected, and (b) with a valid TTL the
-    operator still produces exactly the batch matches on a prompt replay
-    (native ValueState TTL, arrival-order mode)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas requires protobuf")
-    from time_series_and_data_lakes_spark.streaming import match_error_pattern_tws
-
-    rows = sensor_readings(seed=2, sensors=4, span_seconds=90)
-    src = _write_json_batches(tmp_path, rows, n_batches=3)
-    typed = read_json_stream(spark, src, max_files_per_trigger=1).select(
-        "sensor_id",
-        F.timestamp_millis("event_time").alias("time"),
-        "status",
-        "temperature",
-    )
-
-    with pytest.raises(ValueError, match="shorter than within"):
-        match_error_pattern_tws(
-            typed, within="INTERVAL 1 MINUTE", state_ttl="INTERVAL 10 SECONDS"
-        )
-    with pytest.raises(ValueError, match="allowed_lateness"):
-        # 65s >= within alone but not within + lateness
-        match_error_pattern_tws(
-            typed,
-            within="INTERVAL 1 MINUTE",
-            allowed_lateness="INTERVAL 10 SECONDS",
-            state_ttl="INTERVAL 65 SECONDS",
-        )
-
-    matches = match_error_pattern_tws(
-        typed, within="INTERVAL 1 MINUTE", state_ttl="INTERVAL 10 MINUTES"
-    )
-    q = (
-        matches.writeStream.format("memory")
-        .queryName("cep_tws_ttl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # With state_ttl the AvailableNow query never terminates by itself (see
-    # match_error_pattern_tws), so stop it once the batch that read the
-    # last of the 3 files has been followed by another batch.
-    deadline = time.monotonic() + 120
-    try:
-        while not _backlog_consumed(q, n_files=3):
-            if not q.isActive:  # stopped on its own: must not have failed
-                assert q.exception() is None, q.exception()
-                break
-            assert time.monotonic() < deadline, (
-                "backlog not consumed within 120 s: "
-                f"{[(p['batchId'], p['numInputRows']) for p in q.recentProgress]}"
-            )
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    got = sorted(tuple(r) for r in spark.table("cep_tws_ttl").collect())
-    batch_df = spark.createDataFrame(
-        [
-            (
-                r["sensor_id"],
-                dt.datetime.utcfromtimestamp(r["event_time"] / 1000.0),
-                r["status"],
-                r["temperature"],
-            )
-            for r in rows
-        ],
-        "sensor_id string, time timestamp, status string, temperature double",
-    )
-    want = sorted(
-        tuple(r)
-        for r in match_error_pattern(batch_df, within="INTERVAL 1 MINUTE").collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_tws_event_time_ttl_flushes_stranded_reorder_buffer(spark, tmp_path):
-    """state_ttl + allowed_lateness on the transformWithState binding
-    (round-6 verdict item 4): the eviction clock is a per-key
-    processing-time TIMER (native ValueState TTL has no callback), and
-    ``handleExpiredTimer`` flushes the stranded reorder buffer through the
-    NFA before dropping the state — the same contract
-    test_cep_event_time_ttl_flushes_stranded_reorder_buffer pins on the
-    applyInPandasWithState binding."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas requires protobuf")
-    from time_series_and_data_lakes_spark.streaming import match_error_pattern_tws
-
-    base = 1_700_000_000_000
-    s2 = [
-        {"sensor_id": "s2", "event_time": base, "status": "ERROR", "temperature": 1.0},
-        {"sensor_id": "s2", "event_time": base + 100, "status": "OK", "temperature": 2.0},
-        {"sensor_id": "s2", "event_time": base + 200, "status": "ERROR", "temperature": 3.0},
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    with open(src / "b0.json", "w") as f:
-        for r in s2:
-            f.write(json.dumps(r) + "\n")
-
-    typed = read_json_stream(spark, str(src), max_files_per_trigger=1).select(
-        "sensor_id",
-        F.timestamp_millis("event_time").alias("time"),
-        "status",
-        "temperature",
-    )
-    matches = match_error_pattern_tws(
-        typed,
-        within="INTERVAL 1 SECOND",
-        allowed_lateness="INTERVAL 1 SECOND",
-        state_ttl="INTERVAL 3 SECONDS",
-    )
-    q = (
-        matches.writeStream.format("memory")
-        .queryName("cep_tws_ttl_et")
-        .outputMode("append")
-        .trigger(processingTime="250 milliseconds")
-        .start()
-    )
-    try:
-        b_held = _await_state_rows(q, 1)  # buffer held, match stranded
-        assert b_held is not None
-        assert spark.table("cep_tws_ttl_et").count() == 0
-        assert _await_state_rows(q, 0, after_batch=b_held) is not None  # evicted
-        rows = spark.table("cep_tws_ttl_et").collect()
-        assert len(rows) == 1 and rows[0]["sensor_id"] == "s2"
-        assert rows[0]["history"] == "OK"  # the flushed stranded match
-    finally:
-        q.stop()
-
-
-def test_tws_timer_eviction_survives_restart(spark, tmp_path):
-    """The eviction timer is STATE: a query stopped after the data batch
-    but before the TTL fires must, on restart from the same checkpoint
-    with no new data, restore the registered timer from the store's timer
-    column family, fire it, and flush the stranded match — otherwise a
-    rolling redeploy leaks every in-flight silent key's state forever."""
-    import time as _time
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas requires protobuf")
-    from time_series_and_data_lakes_spark.streaming import match_error_pattern_tws
-
-    base = 1_700_000_000_000
-    s2 = [
-        {"sensor_id": "s2", "event_time": base, "status": "ERROR", "temperature": 1.0},
-        {"sensor_id": "s2", "event_time": base + 100, "status": "OK", "temperature": 2.0},
-        {"sensor_id": "s2", "event_time": base + 200, "status": "ERROR", "temperature": 3.0},
-    ]
-
-    def make_start_query(src, ckpt, out, ttl_s):
-        def start_query():
-            typed = read_json_stream(
-                spark, str(src), max_files_per_trigger=1
-            ).select(
-                "sensor_id",
-                F.timestamp_millis("event_time").alias("time"),
-                "status",
-                "temperature",
-            )
-            matches = match_error_pattern_tws(
-                typed,
-                within="INTERVAL 1 SECOND",
-                allowed_lateness="INTERVAL 1 SECOND",
-                state_ttl=f"INTERVAL {ttl_s} SECONDS",
-            )
-            return (
-                matches.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(processingTime="250 milliseconds")
-                .start()
-            )
-
-        return start_query
-
-    # phase 1: the data batch commits state + registers the timer, then the
-    # query stops BEFORE the TTL fires, stranding the match. Phase 1 takes
-    # ~2-5 s healthy, but a fixed TTL budget loses the race under host load
-    # in either direction (an 8 s budget lost it in a loaded r9 battery; a
-    # 30 s budget lost it under a triple-concurrent-Spark r10 battery —
-    # phase 1 itself outlived the TTL and the timer fired pre-stop, which
-    # is CORRECT eviction semantics but the wrong scenario). So the
-    # precondition self-repairs: if the match flushed before the stop,
-    # rebuild the whole scenario from scratch with a TTL that dwarfs the
-    # observed phase-1 time instead of failing the battery.
-    for attempt, ttl_s in enumerate((30, 150)):
-        src = tmp_path / f"src{attempt}"
-        src.mkdir()
-        with open(src / "b0.json", "w") as f:
-            for r in s2:
-                f.write(json.dumps(r) + "\n")
-        ckpt = str(tmp_path / f"ckpt{attempt}")
-        out = str(tmp_path / f"out_parquet{attempt}")
-        start_query = make_start_query(src, ckpt, out, ttl_s)
-        q = start_query()
-        t_phase1 = _time.time()
-        try:
-            assert _await_state_rows(q, 1) is not None
-        finally:
-            q.stop()
-        t_phase1 = _time.time() - t_phase1
-        if spark.read.parquet(out).count() == 0:
-            break  # match stranded — the restart scenario is established
-    else:
-        pytest.fail(
-            f"phase 1 could not strand a match even with a {ttl_s}s TTL "
-            f"(last phase 1 took {t_phase1:.0f}s): host load pathological"
-        )
-
-    # phase 2: restart from the checkpoint; NO new data arrives — only the
-    # restored timer can produce output
-    q2 = start_query()
-    try:
-        # progress-adaptive deadline (VERDICT r9 item 3): the timer needs
-        # the remaining TTL plus however long no-data micro-batches take
-        # under host load. 90 s of NO batch movement fails fast; batches
-        # still advancing extend the wait to the hard cap (scaled with the
-        # TTL the escalation ladder settled on).
-        start = _time.time()
-        hard_cap = start + max(420, ttl_s + 300)
-        last_batch, last_advance = -1, start
-        n = 0
-        restarts = 0
-        nudged = False
-        while _time.time() < hard_cap:
-            if q2.exception() is not None:
-                # a loaded host can race RocksDB's commit against the
-                # changelog checkpoint (CANNOT_WRITE_STATE_STORE) and kill
-                # the query — local mode has no task retries. A production
-                # runner restarts from the checkpoint; doing the same here
-                # re-exercises the restore-the-timer contract, it does not
-                # weaken it (output still only comes from a restored timer).
-                # ONLY that commit-race family is restartable: any other
-                # exception (a deterministic crash on restore) would loop
-                # for 90s and surface as a bare n == 0 timeout with the
-                # root cause swallowed — re-raise it immediately instead.
-                exc = q2.exception()
-                if not any(
-                    tag in str(exc)
-                    for tag in (
-                        "CANNOT_WRITE_STATE_STORE",
-                        "CANNOT_COMMIT",
-                        "STATE_STORE_COMMIT",
-                    )
-                ):
-                    raise exc
-                q2.stop()
-                q2 = start_query()
-                restarts += 1
-                last_batch, last_advance = -1, _time.time()
-            n = spark.read.parquet(out).count()
-            if n:
-                break
-            lp = q2.lastProgress
-            b = lp["batchId"] if lp else -1
-            now = _time.time()
-            if b > last_batch:
-                last_batch, last_advance = b, now
-            elif now - last_advance > 90:
-                # No batch advanced for 90 s with no exception: observed
-                # (r10, under full-battery load) after a commit-race
-                # restart — the engine sits at the replayed batch and
-                # never schedules the no-data micro-batch that would fire
-                # the restored timer (a fresh restart did not re-arm it
-                # either in one battery). Escalate in two steps, neither
-                # of which weakens the restore contract:
-                # 1. one fresh restart (re-reads the timer column family);
-                # 2. a DATA nudge for an unrelated key s9: expired
-                #    processing-time timers fire during ANY micro-batch,
-                #    and an s9 ERROR row cannot fabricate an s2 match —
-                #    the flushed row below can still only come from the
-                #    RESTORED s2 state+timer. (At production scale a busy
-                #    stream always has data batches; Spark's no-data
-                #    scheduling is the rarity this harness stops relying
-                #    on.) Same event_time as s2's batch so the watermark
-                #    cannot move and event-time eviction cannot flush.
-                if restarts < 1:
-                    q2.stop()
-                    q2 = start_query()
-                    restarts += 1
-                    last_batch, last_advance = -1, _time.time()
-                elif not nudged:
-                    with open(src / "b1_nudge.json", "w") as f:
-                        f.write(
-                            json.dumps(
-                                {
-                                    "sensor_id": "s9",
-                                    "event_time": base,
-                                    "status": "ERROR",
-                                    "temperature": 9.0,
-                                }
-                            )
-                            + "\n"
-                        )
-                    nudged = True
-                    last_advance = _time.time()
-                else:
-                    break
-            _time.sleep(0.5)
-        assert n == 1, (
-            f"no flushed match after {_time.time() - start:.0f}s; "
-            f"restarts={restarts} nudged={nudged} last_batch={last_batch} "
-            f"stalled_for={_time.time() - last_advance:.0f}s "
-            f"exception={q2.exception()} "
-            f"recent={[(p.get('batchId'), p.get('numInputRows')) for p in q2.recentProgress[-5:]]}"
-        )
-        (row,) = spark.read.parquet(out).collect()
-        assert row["sensor_id"] == "s2" and row["history"] == "OK"
-        assert _await_state_rows(q2, 0) is not None  # state dropped too
-    finally:
-        q2.stop()

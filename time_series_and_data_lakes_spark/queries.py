@@ -15,8 +15,6 @@ Spark program and the oracle SQL (driver hashes columns sorted by name).
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Callable
 
 import pyarrow.parquet as pq
@@ -43,7 +41,10 @@ from time_series_and_data_lakes_spark.operators.timeseries import (
     unnest_time_series,
 )
 from time_series_and_data_lakes_spark.functions import grafana_macros
-from time_series_and_data_lakes_spark.sources.stats import parquet_footer_max_micros
+from time_series_and_data_lakes_spark.sources.stats import (
+    parquet_footer_max_micros,
+    parquet_part_files,
+)
 
 TABLE_NAMES = [
     "region", "nation", "customer", "supplier", "part",
@@ -57,21 +58,10 @@ GRID_STEP_SQL = "INTERVAL 1 HOUR"
 def _events_ts_is_nanos(path: str) -> bool:
     """Footer peek (driver-side, no Spark job): does events.ts carry
     parquet TIMESTAMP(NANOS)? Decides whether ``load`` must engage the
-    session-wide ``nanosAsLong`` legacy conf. Walks the store RECURSIVELY
-    (a partitioned layout has no top-level part files — probing only those
-    used to return False and the subsequent read failed) and answers from
-    the first part file whose footer yields a readable ``ts`` field,
-    skipping sidecars and corrupt/ts-less files."""
-    if os.path.isdir(path):
-        samples = sorted(
-            os.path.join(root, f)
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    else:
-        samples = [path]
-    for sample in samples:
+    session-wide ``nanosAsLong`` legacy conf. Answers from the first part
+    file a Spark reader would see (``parquet_part_files``) whose footer
+    yields a readable ``ts`` field, skipping corrupt/ts-less files."""
+    for sample in parquet_part_files(path):
         try:
             field = pq.ParquetFile(sample).schema_arrow.field("ts")
         except (KeyError, OSError, ValueError):

@@ -19,6 +19,26 @@ import os
 import pyarrow.parquet as pq
 
 
+def parquet_part_files(path: str) -> list[str]:
+    """The part files a Spark reader of ``path`` would see, sorted: ``path``
+    itself when it is a file, else every ``.parquet`` file below it.
+    Recursive, because a PARTITIONED store has no top-level part files.
+    Hidden/``_`` files AND directories are pruned: sidecars and a mid-write
+    staging tree (``_temporary/``) are invisible to Spark readers, so their
+    footers must not answer for the table. Driver-side listing only."""
+    if not os.path.isdir(path):
+        return [path]
+    paths = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        paths += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+    return sorted(paths)
+
+
 def parquet_footer_rows(path: str) -> int | None:
     """Total row count of ``path`` (a ``.parquet`` file or a directory of
     part files) from footer metadata only — no Spark job, a few KB of
@@ -30,17 +50,7 @@ def parquet_footer_rows(path: str) -> int | None:
     :func:`parquet_footer_max_micros`: ``None`` on any surprise — callers
     fall back to the partition-count-only heuristic."""
     try:
-        if os.path.isdir(path):
-            paths = []
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-                paths += [
-                    os.path.join(root, f)
-                    for f in files
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-        else:
-            paths = [path]
+        paths = parquet_part_files(path)
         if not paths:
             return None
         return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
@@ -60,23 +70,7 @@ def parquet_footer_max_micros(path: str, column: str) -> int | None:
     exactly. ``None`` on any surprise; never raises.
     """
     try:
-        if os.path.isdir(path):
-            # recursive: a PARTITIONED store has no top-level part files,
-            # and the scan fallback there would cost the full extra pass
-            # this helper exists to avoid (part footers still carry min/max)
-            paths = []
-            for root, dirs, files in os.walk(path):
-                # prune hidden/_ DIRECTORIES too: a mid-write staging tree
-                # is invisible to Spark readers, and the anchor must not
-                # see its uncommitted maxima (r10 find)
-                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-                paths += [
-                    os.path.join(root, f)
-                    for f in files
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-        else:
-            paths = [path]
+        paths = parquet_part_files(path)
         if not paths:
             return None
         best, saw_stats = None, False

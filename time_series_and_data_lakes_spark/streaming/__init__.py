@@ -5,7 +5,6 @@ from time_series_and_data_lakes_spark.streaming.ingest import (
 )
 from time_series_and_data_lakes_spark.streaming.cep_stream import (
     match_error_pattern_stream,
-    match_error_pattern_tws,
 )
 from time_series_and_data_lakes_spark.streaming.dedup_stream import (
     dedup_stream_by_content,
@@ -20,7 +19,6 @@ __all__ = [
     "interval_join_streams",
     "dedup_stream_by_id",
     "match_error_pattern_stream",
-    "match_error_pattern_tws",
     "melt_stream",
     "read_json_stream",
     "start_narrow_store_sink",

@@ -80,7 +80,10 @@ def ewma_stream(
     key later resumes, the fold restarts from its first new observation
     (the standard stale-smoother reset — after a silence that long the
     old level is stale by construction). Keys that never resume produce
-    identical output with or without a TTL.
+    identical output with or without a TTL. With ``state_ttl`` set, a
+    ``Trigger.AvailableNow`` query does not stop on its own: it keeps
+    running empty micro-batches after the backlog (observed on Spark
+    4.1.2), so callers ``stop()`` it themselves.
     """
 
     ttl_ms = _ttl_millis(state_ttl)
@@ -159,7 +162,7 @@ def holt_stream(
     triple, same ordered-replay bit-exactness contract as
     :func:`ewma_stream`, and the same ``state_ttl`` silent-key eviction
     (emitted rows carry the full accumulator; an evicted key restarts its
-    fold on resume)."""
+    fold on resume) and AvailableNow caveat."""
 
     ttl_ms = _ttl_millis(state_ttl)
     out_schema = _keyed_output_schema(stream, key, HOLT_OUTPUT_SCHEMA)

@@ -27,7 +27,6 @@ wall-clock timers, so replays stay deterministic).
 
 from __future__ import annotations
 
-import logging
 import math
 from collections.abc import Iterator
 from typing import Any
@@ -35,11 +34,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
+from pyspark.sql.streaming.state import GroupState
 
 from time_series_and_data_lakes_spark.operators.timeseries import _interval_micros
 from time_series_and_data_lakes_spark.streaming.analytics_stream import _keyed_output_schema  # noqa: E501
@@ -49,9 +44,7 @@ from time_series_and_data_lakes_spark.streaming.state_ttl import (
     ttl_millis as _ttl_millis,
 )
 
-_LOG = logging.getLogger(__name__)
-
-# First field is a placeholder: both bindings re-derive the key field's
+# First field is a placeholder: the operator re-derives the key field's
 # name AND type from the input stream (_keyed_output_schema) — a hardcoded
 # sensor_id:string crashes the Arrow conversion for integer/custom keys.
 CEP_OUTPUT_SCHEMA = T.StructType(
@@ -177,11 +170,9 @@ def _advance_key(
 ) -> tuple[tuple, list[dict]]:
     """Feed one micro-batch's rows for one key through the NFA.
 
-    Shared by both stateful-API bindings (``applyInPandasWithState`` and
-    ``transformWithStateInPandas``): restores the candidate + reorder buffer
-    from ``state_tuple``, applies the ordering policy (arrival-order sort vs
-    event-time frontier release), steps the NFA, and returns the new state
-    tuple plus emitted matches.
+    Restores the candidate + reorder buffer from ``state_tuple``, applies
+    the ordering policy (arrival-order sort vs event-time frontier release),
+    steps the NFA, and returns the new state tuple plus emitted matches.
 
     ``flush=True`` (state-TTL eviction of a silent key) advances the
     event-time frontier to infinity: every buffered row feeds the NFA in
@@ -322,11 +313,35 @@ def match_error_pattern_stream(
     stranded are emitted, not lost; if the key later resumes it restarts
     with a fresh frontier (resumed rows older than the flushed buffer
     would have been late/best-effort regardless).
+
+    With ``state_ttl`` set, a ``Trigger.AvailableNow`` query does not stop
+    on its own: once the backlog is consumed it keeps running empty
+    (``numInputRows`` 0) micro-batches and ``awaitTermination`` never
+    returns (observed on Spark 4.1.2). Callers must ``stop()`` it
+    themselves once the source's end offset covers the backlog.
+
+    State lives in the session's state store. Keeping per-key state off
+    the executor heap (state larger than executor memory) is a choice made
+    when the session is built, e.g. ``get_spark(extra_conf={
+    "spark.sql.streaming.stateStore.providerClass":
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"})``.
     """
     within_us = _interval_micros(within)
     lateness_us = _interval_micros(allowed_lateness) if allowed_lateness else None
     ttl_ms = _ttl_millis(state_ttl)
     _check_ttl(ttl_ms, within_us, lateness_us, state_ttl)
+
+    nfa_args = (
+        time_col,
+        status_col,
+        value_col,
+        error_value,
+        min_b,
+        max_b,
+        within_us,
+        round_avg,
+        lateness_us,
+    )
 
     def process(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -337,36 +352,13 @@ def match_error_pattern_stream(
             # mode) so stranded matches emit, then drop the state row
             st = state.get if state.exists else None
             if st is not None and lateness_us is not None and st[4]:
-                _, out = _advance_key(
-                    st,
-                    iter(()),
-                    time_col,
-                    status_col,
-                    value_col,
-                    error_value,
-                    min_b,
-                    max_b,
-                    within_us,
-                    round_avg,
-                    lateness_us,
-                    flush=True,
-                )
+                _, out = _advance_key(st, iter(()), *nfa_args, flush=True)
                 if out:
                     yield _matches_frame(out, key, key_value)
             state.remove()
             return
         new_state, out = _advance_key(
-            state.get if state.exists else None,
-            pdfs,
-            time_col,
-            status_col,
-            value_col,
-            error_value,
-            min_b,
-            max_b,
-            within_us,
-            round_avg,
-            lateness_us,
+            state.get if state.exists else None, pdfs, *nfa_args
         )
         state.update(new_state)
         if ttl_ms is not None:
@@ -382,198 +374,3 @@ def match_error_pattern_stream(
         timeoutConf=_timeout_conf(ttl_ms),
     )
 
-
-class _ErrorPatternProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` binding of the same NFA (T2-T5) —
-    Spark 4's typed-state API (SURVEY §2.8's preferred mapping). The
-    candidate + reorder buffer live in one ValueState row; emitted matches
-    are append-mode rows. Without ``state_ttl`` timeMode stays "None" and
-    the WITHIN bound expires candidates from the data clock, so replays
-    are deterministic. ``state_ttl`` flips timeMode to ProcessingTime and
-    engages one of two wall-clock eviction paths for SILENT keys (match
-    emission itself stays data-clock-driven): native ValueState TTL in
-    arrival-order mode, or — in event-time mode, where eviction must
-    flush the reorder buffer — a per-key timer whose expiry callback
-    (:meth:`handleExpiredTimer`) drains the buffer through the NFA before
-    dropping state."""
-    def __init__(
-        self,
-        key: str,
-        time_col: str,
-        status_col: str,
-        value_col: str,
-        error_value: str,
-        min_b: int,
-        max_b: int,
-        within_us: int,
-        round_avg: int,
-        lateness_us: int | None,
-        ttl_ms: int | None = None,
-        use_timers: bool = False,
-    ) -> None:
-        self._args = (
-            time_col,
-            status_col,
-            value_col,
-            error_value,
-            min_b,
-            max_b,
-            within_us,
-            round_avg,
-            lateness_us,
-        )
-        self._key = key
-        self._ttl_ms = ttl_ms
-        self._use_timers = use_timers
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        # Two TTL modes: native ValueState ttlDurationMs (no eviction
-        # callback — fine when there is no reorder buffer to strand), or
-        # per-key processing-time timers (event-time mode: the expiry
-        # callback flushes the buffer through the NFA before dropping
-        # state). Both require timeMode ProcessingTime; None keeps the
-        # data-clock-only mode.
-        self._handle = handle
-        self._state = handle.getValueState(
-            "cep_candidate",
-            CEP_STATE_SCHEMA,
-            ttlDurationMs=None if self._use_timers else self._ttl_ms,
-        )
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-    ) -> Iterator[pd.DataFrame]:
-        (key_value,) = key
-        new_state, out = _advance_key(self._state.get(), rows, *self._args)
-        self._state.update(new_state)
-        if self._use_timers:
-            # silent-key eviction clock: one live timer per key, re-armed
-            # to now + ttl on every batch that touches the key
-            for expiry in list(self._handle.listTimers()):
-                self._handle.deleteTimer(expiry)
-            self._handle.registerTimer(
-                timerValues.getCurrentProcessingTimeInMs() + self._ttl_ms
-            )
-        if out:
-            yield _matches_frame(out, self._key, key_value)
-
-    def handleExpiredTimer(
-        self, key: Any, timerValues: Any, expiredTimerInfo: Any
-    ) -> Iterator[pd.DataFrame]:
-        # state_ttl expiry for a silent key: flush the reorder buffer
-        # through the NFA in event-time order (frontier -> infinity) so
-        # stranded matches emit, then drop the key's state — the timer
-        # twin of match_error_pattern_stream's hasTimedOut branch.
-        (key_value,) = key
-        st = self._state.get()
-        if st is not None:
-            _, out = _advance_key(st, iter(()), *self._args, flush=True)
-            if out:
-                yield _matches_frame(out, self._key, key_value)
-        self._state.clear()
-
-    def close(self) -> None:
-        pass
-
-
-def match_error_pattern_tws(
-    stream: DataFrame,
-    key: str = "sensor_id",
-    time_col: str = "time",
-    status_col: str = "status",
-    value_col: str = "temperature",
-    error_value: str = "ERROR",
-    min_b: int = 1,
-    max_b: int = 5,
-    within: str = "INTERVAL 1 MINUTE",
-    round_avg: int = 2,
-    allowed_lateness: str | None = None,
-    state_ttl: str | None = None,
-) -> DataFrame:
-    """:func:`match_error_pattern_stream` on the ``transformWithStateInPandas``
-    API — identical semantics and output schema, state in the typed
-    ValueState store (RocksDB-backed on a cluster, so per-key state scales
-    past executor memory).
-
-    ``state_ttl`` (and the ``timeMode`` flip to ProcessingTime it
-    requires) evicts silent keys two ways. Arrival-order mode maps it to
-    the API's NATIVE ValueState TTL — no callback needed, the store
-    drops the candidate itself. Event-time mode (``allowed_lateness``
-    set) cannot use native TTL: eviction would discard a stranded
-    reorder buffer and the matches inside it, so it instead re-arms a
-    per-key processing-time TIMER on every batch; the expiry callback
-    (``handleExpiredTimer``) flushes the buffer through the NFA — the
-    exact twin of :func:`match_error_pattern_stream`'s ``hasTimedOut``
-    branch — then drops the state. Like there, ``state_ttl`` must be >=
-    ``within`` + ``allowed_lateness`` so eviction only drops candidates
-    that could never complete.
-
-    With ``state_ttl`` set, a ``Trigger.AvailableNow`` query does not stop
-    on its own: once the backlog is consumed it keeps running empty
-    (``numInputRows`` 0) micro-batches and ``awaitTermination`` never
-    returns (observed on Spark 4.1.2). Callers must ``stop()`` it
-    themselves once the source's end offset covers the backlog.
-
-    Requires ``protobuf`` at runtime (the API's state-server protocol);
-    environments without it should use :func:`match_error_pattern_stream`,
-    which shares the NFA code path exactly (``_advance_key``).
-
-    transformWithState also requires a state-store provider with
-    multiple-column-family support; the default HDFS-backed store rejects
-    the operator outright, so IF the session still has the default
-    provider, it is switched to the (bundled) RocksDB provider — the one a
-    production deployment wants anyway (per-key state off-heap/on-disk,
-    scales past executor memory). Any provider OTHER than the HDFS default
-    is respected and never overridden (an explicitly-set HDFS provider is
-    indistinguishable from the unset default and is upgraded too — it
-    cannot run this operator either way). NOTE this conf is session-scoped and
-    read at query START: queries checkpointed earlier under a different
-    provider must not be restarted in the same session afterwards (Spark
-    forbids changing the provider across restarts)."""
-    within_us = _interval_micros(within)
-    lateness_us = _interval_micros(allowed_lateness) if allowed_lateness else None
-    ttl_ms = _ttl_millis(state_ttl)
-    _check_ttl(ttl_ms, within_us, lateness_us, state_ttl)
-
-    _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-    _HDFS_DEFAULT = (
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    )
-    current = stream.sparkSession.conf.get(_PROVIDER_CONF, None)
-    if current in (None, "", _HDFS_DEFAULT):
-        _LOG.warning(
-            "match_error_pattern_tws: switching session conf %s to the RocksDB "
-            "provider (transformWithState needs multi-column-family support). "
-            "This affects every streaming query STARTED later in this session; "
-            "do not restart a query checkpointed under the HDFS provider "
-            "afterwards — Spark forbids changing the provider across restarts. "
-            "Set the conf explicitly at session build to silence this warning.",
-            _PROVIDER_CONF,
-        )
-        stream.sparkSession.conf.set(
-            _PROVIDER_CONF,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-
-    processor = _ErrorPatternProcessor(
-        key,
-        time_col,
-        status_col,
-        value_col,
-        error_value,
-        min_b,
-        max_b,
-        within_us,
-        round_avg,
-        lateness_us,
-        ttl_ms,
-        use_timers=ttl_ms is not None and lateness_us is not None,
-    )
-    return stream.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=processor,
-        outputStructType=_keyed_output_schema(stream, key, CEP_OUTPUT_SCHEMA),
-        outputMode="append",
-        # the WITHIN bound expires candidates from the data clock (replay-
-        # deterministic); ProcessingTime is engaged only for native TTL
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )

@@ -1,6 +1,6 @@
 """Shared state-TTL plumbing for the stateful streaming operators.
 
-The CEP bindings (``cep_stream``) and the smoothers (``analytics_stream``)
+The CEP operator (``cep_stream``) and the smoothers (``analytics_stream``)
 all accept a ``state_ttl`` interval string that bounds how long a SILENT
 key's state survives; the parsing/validation rule and the
 ``GroupStateTimeout`` selection are identical across them and live here so
@@ -47,8 +47,7 @@ def check_ttl_covers_window(
 ) -> None:
     """Reject a TTL shorter than the pattern's completion window
     (``within`` + ``allowed_lateness``): eviction would drop candidates
-    that could still complete. One rule shared by both CEP bindings —
-    two hand copies of it once risked drifting apart."""
+    that could still complete."""
     if ttl_ms is not None and ttl_ms * 1000 < within_us + (lateness_us or 0):
         raise ValueError(
             f"state_ttl {state_ttl!r} is shorter than within"
