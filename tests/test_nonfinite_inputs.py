@@ -234,34 +234,58 @@ def test_drop_degenerate_vectors_drops_nonfinite(spark):
 
 def test_cep_stream_nonfinite_avg_no_crash(spark, tmp_path):
     # the streaming NFA's math.floor raised on an Inf-poisoned avg
-    # (cep_stream.py); NaN is out of scope here — the Arrow float64 batch
-    # conflates it with the null measurement by documented contract
+    # (cep_stream.py). Event-time mode over two micro-batches: every key's
+    # candidate and reorder buffer cross the batch boundary in the state
+    # row, so ±Inf/NaN temperatures and a None status must survive it. NaN
+    # is the null measurement here (the Arrow float64 batch conflates the
+    # two, by documented contract): min/max/avg skip it.
+    import json
+
     from pyspark.sql import functions as F
 
     from time_series_and_data_lakes_spark.streaming.cep_stream import (
         match_error_pattern_stream,
     )
-    from tests.test_streaming import _write_json_batches
-
     from time_series_and_data_lakes_spark.streaming.ingest import read_json_stream
 
     t0 = 1_700_000_000_000
-    rows = [  # python json emits the Infinity token; the Spark JSON
-        # reader's allowNonNumericNumbers (default on) parses it back
-        {"sensor_id": k, "event_time": t0 + 7000 * i, "status": s, "temperature": v}
-        for i, (k, s, v) in enumerate(
-            [(k, s, v) for k, _, s, v in _CEP_ROWS if k in ("s1", "s4")]
-        )
-    ]
-    src = _write_json_batches(tmp_path, rows, n_batches=2)
-    typed = read_json_stream(spark, src).select(
+    # key -> (batch-0 rows, batch-1 rows) of (seconds after t0, status, temp);
+    # every key ends on a row 10 s later that moves its frontier past the C
+    seqs = {
+        "s1": ([(0, "ERROR", _INF), (1, "OK", 1.0)], [(2, "ERROR", 2.0)]),
+        "s3": ([(0, "ERROR", _INF), (1, "OK", -_INF)], [(2, "ERROR", 1.0)]),
+        "s4": ([(0, "ERROR", 3.0), (1, "OK", 1.0)], [(2, "ERROR", 2.0)]),
+        "s5": ([(0, "ERROR", 1.0), (1, "OK", _NAN)], [(2, "ERROR", 3.0)]),
+        # the None status kills the first candidate: an "OK"-only history
+        # proves it came back from the state as None
+        "s6": (
+            [(0, "ERROR", 1.0), (1, None, 5.0)],
+            [(2, "ERROR", 2.0), (3, "OK", 3.0), (4, "ERROR", 4.0)],
+        ),
+    }
+    src = tmp_path / "src"
+    src.mkdir()
+    # python json emits the Infinity/NaN tokens; the Spark JSON reader's
+    # allowNonNumericNumbers (default on) parses them back
+    for b in range(2):
+        path = src / f"batch-{b:03d}.json"
+        with open(path, "w") as f:
+            for k, halves in seqs.items():
+                for sec, status, temp in halves[b] + ([(10, "OK", 0.0)] if b else []):
+                    rec = {"sensor_id": k, "event_time": t0 + 1000 * sec,
+                           "status": status, "temperature": temp}
+                    f.write(json.dumps(rec) + "\n")
+        os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
+    typed = read_json_stream(spark, str(src), max_files_per_trigger=1).select(
         "sensor_id",
         F.timestamp_millis("event_time").alias("time"),
         "status",
         "temperature",
     )
     q = (
-        match_error_pattern_stream(typed, within="INTERVAL 1 MINUTE")
+        match_error_pattern_stream(
+            typed, within="INTERVAL 1 MINUTE", allowed_lateness="INTERVAL 1 SECOND"
+        )
         .writeStream.format("memory")
         .queryName("nf_cep")
         .outputMode("append")
@@ -269,6 +293,20 @@ def test_cep_stream_nonfinite_avg_no_crash(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = {r["sensor_id"]: r["avg_temperature"] for r in spark.table("nf_cep").collect()}
-    assert _avg_eq(got["s1"], _INF)
-    assert _avg_eq(got["s4"], 2.0)
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 2
+    got = {r["sensor_id"]: r for r in spark.table("nf_cep").collect()}
+    assert sorted(got) == sorted(seqs)
+    assert all(r["history"] == "OK" for r in got.values())
+    assert _avg_eq(got["s1"]["avg_temperature"], _INF)
+    s3 = got["s3"]  # its NaN avg (Inf + -Inf) leaves through Arrow as null
+    assert (s3["min_temperature"], s3["avg_temperature"], s3["max_temperature"]) == (
+        -_INF, None, _INF
+    )
+    assert _avg_eq(got["s4"]["avg_temperature"], 2.0)
+    s5 = got["s5"]
+    assert (s5["min_temperature"], s5["avg_temperature"], s5["max_temperature"]) == (
+        1.0, 1.33, 3.0
+    )
+    s6 = got["s6"]
+    assert s6["event_time"] == dt.datetime.utcfromtimestamp(t0 / 1000 + 2)
+    assert s6["avg_temperature"] == 3.0

@@ -505,11 +505,19 @@ def test_read_json_stream_rejects_nonpositive_trigger(spark, tmp_path):
         read_json_stream(spark, str(src), max_files_per_trigger=0)
 
 
+def _data_batches(q) -> int:
+    return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+
+
 def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
-    """Both CEP bindings derive the key output field's name AND type from
+    """The CEP operator derives the key output field's name AND type from
     the input stream: a bigint device key used to hit the hardcoded
     sensor_id:string first field and crash the Arrow conversion — the
-    same defect fixed in analytics_stream's _keyed_output_schema."""
+    same defect fixed in analytics_stream's _keyed_output_schema. Three
+    micro-batches carry candidates from one batch's state into the next,
+    including one for a null key and one for an id past 2**53."""
+    import os
+
     rows = [
         {
             "device": int(r["sensor_id"].rsplit("-", 1)[1]),
@@ -519,12 +527,33 @@ def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
         }
         for r in sensor_readings(seed=3, sensors=4, span_seconds=90)
     ]
-    src = _write_json_batches(tmp_path, rows, n_batches=3)
+    base = rows[0]["event_time"]
+    big = 2**60 + 1
+    # (device, batch, ms after base, status): A and B in batch 0, C later
+    spanning = [
+        (None, 0, 0, "ERROR"), (None, 0, 100, "OK"), (None, 1, 200, "ERROR"),
+        (big, 0, 0, "ERROR"), (big, 0, 100, "WARNING"), (big, 2, 300, "ERROR"),
+    ]
+    per = (len(rows) + 2) // 3
+    batches = [rows[b * per : (b + 1) * per] for b in range(3)]
+    for device, b, dt_ms, status in spanning:
+        extra = {"device": device, "event_time": base + dt_ms, "temperature": 1.5, "status": status}
+        batches[b].append(extra)
+        rows.append(extra)
+    src = tmp_path / "src"
+    src.mkdir()
+    for b, chunk in enumerate(batches):
+        path = src / f"batch-{b:03d}.json"
+        with open(path, "w") as f:
+            for r in chunk:
+                f.write(json.dumps(r) + "\n")
+        os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
     typed = (
         spark.readStream.schema(
             "device bigint, event_time long, temperature double, status string"
         )
-        .json(src)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
         .select(
             "device",
             F.timestamp_millis("event_time").alias("time"),
@@ -544,7 +573,8 @@ def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    got = sorted(tuple(r) for r in spark.table("cep_intkey").collect())
+    assert _data_batches(q) == 3
+    got = sorted((tuple(r) for r in spark.table("cep_intkey").collect()), key=repr)
 
     batch_df = spark.createDataFrame(
         [
@@ -559,13 +589,19 @@ def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
         "device bigint, time timestamp, status string, temperature double",
     )
     want = sorted(
-        tuple(r)
-        for r in match_error_pattern(
-            batch_df, key="device", within="INTERVAL 1 MINUTE"
-        ).collect()
+        (
+            tuple(r)
+            for r in match_error_pattern(
+                batch_df, key="device", within="INTERVAL 1 MINUTE"
+            ).collect()
+        ),
+        key=repr,
     )
-    assert got == want
-    assert len(got) > 0
+    # the batch operator's segment join (key equality) drops a null key's
+    # matches; the stream runs the null key's own NFA
+    assert [r for r in got if r[0] is not None] == want
+    assert [r[3] for r in got if r[0] is None] == ["OK"]
+    assert [r[3] for r in want if r[0] == big] == ["WARNING"]
 
 
 def test_stream_dedup_equals_batch_distinct(spark, tmp_path):
@@ -779,7 +815,8 @@ def test_streaming_cep_state_survives_restart(spark, tmp_path):
     of the stream, restart from the same checkpoint over the second half,
     and the union of outputs must equal the batch matcher over the whole
     stream — candidates whose A..C span crosses the restart boundary can
-    only complete if per-key NFA state was restored from the state store."""
+    only complete if per-key NFA state was restored from the state store,
+    also when the restart runs under another shuffle-partition count."""
     import os
 
     rows = sensor_readings(seed=41, sensors=4, span_seconds=240)
@@ -849,7 +886,14 @@ def test_streaming_cep_state_survives_restart(spark, tmp_path):
     run_once()
     first = spark.read.parquet(out).count()
     write_files(rows[half:], 10)
-    run_once()
+    # the restart runs under another shuffle-partition count: Spark keeps
+    # the checkpoint's count for the state, which is keyed by the key alone
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(int(n) + 3))
+    try:
+        run_once()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", n)
 
     got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     batch_df = spark.createDataFrame(
@@ -1560,6 +1604,66 @@ def test_cep_ttl_eviction_survives_restart(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1 and rows[0]["sensor_id"] == "s2"
     assert rows[0]["history"] == "OK"  # the flushed stranded match
+
+
+def test_streaming_cep_micro_batches_compile_no_code(spark, tmp_path):
+    """Steady-state CEP micro-batches reuse the generated code: after the
+    second data batch no further batch compiles a class. An array-typed
+    state row misses the codegen cache on every batch (its MapObjects
+    lambda ids change), compiling two state projections per batch."""
+    import os
+    import time as _time
+
+    jvm_codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return jvm_codegen.METRIC_COMPILATION_TIME().getCount()
+
+    def await_batches(q, want, deadline_s=120):
+        deadline = _time.time() + deadline_s
+        while _data_batches(q) < want and _time.time() < deadline:
+            _time.sleep(0.25)
+        return _data_batches(q)
+
+    rows = sensor_readings(seed=5, sensors=6, span_seconds=300)
+    n_files = 5
+    per = (len(rows) + n_files - 1) // n_files
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def write_file(b):
+        path = src / f"batch-{b:03d}.json"
+        with open(path, "w") as f:
+            for r in rows[b * per : (b + 1) * per]:
+                f.write(json.dumps(r) + "\n")
+        os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
+
+    write_file(0)
+    write_file(1)
+    typed = read_json_stream(spark, str(src), max_files_per_trigger=1).select(
+        "sensor_id",
+        F.timestamp_millis("event_time").alias("time"),
+        "status",
+        "temperature",
+    )
+    q = (
+        match_error_pattern_stream(typed, within="INTERVAL 1 MINUTE")
+        .writeStream.format("memory")
+        .queryName("cep_codegen")
+        .outputMode("append")
+        .trigger(processingTime="250 milliseconds")
+        .start()
+    )
+    try:
+        assert await_batches(q, 2) == 2
+        after_two = compiles()
+        for b in range(2, n_files):
+            write_file(b)
+        assert await_batches(q, n_files) == n_files
+        assert compiles() == after_two
+    finally:
+        q.stop()
+    assert spark.table("cep_codegen").count() > 0
 
 
 def test_smoother_state_ttl_evicts_silent_keys_outputs_unchanged(

@@ -19,7 +19,9 @@ batches conflate null with NaN, so this operator must treat NaN as the
 null measurement (skipped by min/max, excluded from the avg sum), while
 the batch plan lets a true NaN poison its fold and greatest() — data
 carrying real NaN measurements diverges between the two by Arrow's
-design, not by contract. The WITHIN bound also
+design, not by contract. A null key also differs: it runs its own NFA
+here, while the batch operator's segment join drops its matches. The
+WITHIN bound also
 acts as the state timeout: a candidate older than the bound can never
 complete and is dropped on the next row (T3's timer semantics without
 wall-clock timers, so replays stay deterministic).
@@ -27,6 +29,7 @@ wall-clock timers, so replays stay deterministic).
 
 from __future__ import annotations
 
+import json
 import math
 from collections.abc import Iterator
 from typing import Any
@@ -62,19 +65,12 @@ CEP_OUTPUT_SCHEMA = T.StructType(
 
 # Candidate state: A's epoch-micros + temperature, B statuses and temps —
 # plus, in event-time mode, the reorder buffer of not-yet-final rows and the
-# max event time seen (the per-key watermark frontier).
-CEP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("a_time_us", T.LongType()),
-        T.StructField("a_temp", T.DoubleType()),
-        T.StructField("b_statuses", T.ArrayType(T.StringType())),
-        T.StructField("b_temps", T.ArrayType(T.DoubleType())),
-        T.StructField("pend_t_us", T.ArrayType(T.LongType())),
-        T.StructField("pend_status", T.ArrayType(T.StringType())),
-        T.StructField("pend_temp", T.ArrayType(T.DoubleType())),
-        T.StructField("max_seen_us", T.LongType()),
-    ]
-)
+# max event time seen (the per-key watermark frontier) — as ONE JSON string
+# [a_time_us, a_temp, b_statuses, b_temps, pend_t_us, pend_status, pend_temp,
+# max_seen_us]. Array-typed state fields would give Spark's state projections
+# fresh MapObjects lambda ids on every micro-batch, so each batch would
+# compile them again; a string field compiles once.
+CEP_STATE_SCHEMA = T.StructType([T.StructField("state", T.StringType())])
 
 
 def _row_order(r: tuple) -> tuple:
@@ -320,6 +316,12 @@ def match_error_pattern_stream(
     returns (observed on Spark 4.1.2). Callers must ``stop()`` it
     themselves once the source's end offset covers the backlog.
 
+    Each key's candidate and reorder buffer are one state row holding a
+    single JSON string, so steady-state micro-batches compile no code.
+    Checkpoints written by the earlier array-typed state row are
+    incompatible: Spark's state-schema check rejects them on restart, so
+    such queries start on a new checkpoint.
+
     State lives in the session's state store. Keeping per-key state off
     the executor heap (state larger than executor memory) is a choice made
     when the session is built, e.g. ``get_spark(extra_conf={
@@ -347,20 +349,18 @@ def match_error_pattern_stream(
         key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (key_value,) = key_tuple
+        st = json.loads(state.get[0]) if state.exists else None
         if ttl_ms is not None and state.hasTimedOut:
             # silent-key eviction: flush the reorder buffer (event-time
             # mode) so stranded matches emit, then drop the state row
-            st = state.get if state.exists else None
             if st is not None and lateness_us is not None and st[4]:
                 _, out = _advance_key(st, iter(()), *nfa_args, flush=True)
                 if out:
                     yield _matches_frame(out, key, key_value)
             state.remove()
             return
-        new_state, out = _advance_key(
-            state.get if state.exists else None, pdfs, *nfa_args
-        )
-        state.update(new_state)
+        new_state, out = _advance_key(st, pdfs, *nfa_args)
+        state.update((json.dumps(new_state, separators=(",", ":")),))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
         if out:
