@@ -6,8 +6,11 @@
 
 .PHONY: test verify bench bench-commit
 
+# the ROADMAP Tier-1 command, verbatim: host core count, local spill dir,
+# the 2670 s budget, and no -x so one failure does not hide the rest
 test:
-	python3 -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 verify:
 	TSDL_DIRTY_SWEEP=1 TSDL_EMPTY_SWEEP=1 TSDL_SCALE_SMOKE=1 \

@@ -1,15 +1,12 @@
-"""Codec robustness contract, fuzz-pinned: every pixel decoder maps a
-corrupt or truncated stream to ValueError (corrupt data) or
+"""Codec robustness contract, fuzz-pinned: every decoder (BMP, PPM, WAV,
+AVI) maps a corrupt or truncated stream to ValueError (corrupt data) or
 NotImplementedError (honest feature boundary) — never a raw internal
-error (zlib.error, struct.error, IndexError, OverflowError,
-ZeroDivisionError), which would crash an executor task mid-`mapInPandas`
-instead of routing through the per-row error column.
+error (struct.error, IndexError, OverflowError, ZeroDivisionError, a
+corrupt-size allocation), which would crash an executor task
+mid-`mapInPandas` instead of routing through the per-row error column.
 
-The ad-hoc fuzz session that motivated these found four escapes (PNG
-zlib/struct passthrough, JPEG sampling-factor div-by-zero, JPEG DC
-category int overflow, GIF truncation at the LZW min-code-size byte);
-each is pinned specifically below, plus a deterministic seeded mutation
-sweep so the CLASS of bug stays covered.
+Escapes found by fuzzing are pinned specifically below, plus a
+deterministic seeded mutation sweep so the CLASS of bug stays covered.
 """
 
 from __future__ import annotations
@@ -20,57 +17,16 @@ import struct
 import numpy as np
 import pytest
 
-from time_series_and_data_lakes_spark.operators.jpeg import (
-    jpeg_decode,
-    jpeg_encode,
-    jpeg_encode_progressive,
-)
 from time_series_and_data_lakes_spark.operators.multimodal import (
     avi_decode,
     avi_encode,
     bmp_decode,
     bmp_encode,
-    gif_decode,
-    gif_decode_frames,
-    gif_encode,
-    png_decode,
-    png_encode,
     ppm_decode,
     ppm_encode,
     wav_decode,
     wav_encode,
 )
-
-def _png_adam7_payload(img):
-    # interlaced PNG (filter-0 rows per Adam7 pass): walks the pass
-    # geometry, per-pass defilter, and scatter-assembly under fuzz
-    import binascii
-    import zlib
-
-    def chunk(t, body):
-        return (
-            struct.pack(">I", len(body))
-            + t
-            + body
-            + struct.pack(">I", binascii.crc32(t + body) & 0xFFFFFFFF)
-        )
-
-    h, w = img.shape[:2]
-    raw = bytearray()
-    for x0, y0, dx, dy in (
-        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-    ):
-        sub = img[y0:h:dy, x0:w:dx]
-        if sub.shape[0] and sub.shape[1]:
-            for y in range(sub.shape[0]):
-                raw += b"\x00" + sub[y].tobytes()
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
 
 
 def _wav_payload(_img):
@@ -98,19 +54,11 @@ def _avi_payload(img):
 CODECS = {
     "bmp": (bmp_encode, bmp_decode),
     "ppm": (ppm_encode, ppm_decode),
-    "png": (png_encode, png_decode),
-    "png_adam7": (_png_adam7_payload, png_decode),
-    "gif": (gif_encode, gif_decode),
-    "jpeg": (jpeg_encode, jpeg_decode),
-    # progressive streams walk the coefficient-store engine: scan
-    # headers, EOB runs, and refinement bits all fuzz-exposed
-    "jpeg_prog": (jpeg_encode_progressive, jpeg_decode),
     # media containers share the identical contract; their encode side
     # takes different inputs, so adapt through the image
     "wav": (_wav_payload, wav_decode),
     "wav_float": (_wav_float_payload, wav_decode),
     "avi": (_avi_payload, avi_decode),
-    "gif_frames": (gif_encode, gif_decode_frames),
 }
 
 CONTRACT = (ValueError, NotImplementedError)
@@ -122,10 +70,9 @@ def _img(seed: int, h: int = 9, w: int = 13) -> "np.ndarray":
 
 @pytest.mark.parametrize("name", sorted(CODECS))
 def test_every_truncation_decodes_or_raises_contract_errors(name):
-    # exhaustive prefix sweep: each cut either still decodes (e.g. a GIF
-    # missing only its trailer) or raises the contract errors — never an
-    # internal error. Covers the fuzz-found GIF cut at the LZW
-    # min-code-size byte and every other boundary at once.
+    # exhaustive prefix sweep: each cut either still decodes or raises
+    # the contract errors — never an internal error. Covers every
+    # container and raster boundary at once.
     enc, dec = CODECS[name]
     payload = enc(_img(3))
     for cut in range(len(payload)):
@@ -158,22 +105,16 @@ def test_dims_parsers_keep_error_contract_under_mutation():
     # the header-only metadata parsers run in decode_media's hot path;
     # same contract, lighter sweep (they were fuzz-clean — this pins it)
     from time_series_and_data_lakes_spark.operators.multimodal import (
+        _avi_dims,
         bmp_dims,
-        gif_dims,
-        gif_frames,
-        jpeg_dims,
-        png_dims,
         ppm_dims,
     )
 
     img = _img(13)
     parsers = [
-        (png_encode(img), png_dims),
-        (jpeg_encode(img), jpeg_dims),
-        (gif_encode(img), gif_dims),
-        (gif_encode(img), gif_frames),
         (ppm_encode(img), ppm_dims),
         (bmp_encode(img), bmp_dims),
+        (_avi_payload(img), _avi_dims),
     ]
     rng = random.Random(20260814)
     for payload, fn in parsers:
@@ -190,81 +131,6 @@ def test_dims_parsers_keep_error_contract_under_mutation():
                 fn(bytes(p))
             except CONTRACT:
                 pass
-
-
-def test_png_corrupt_idat_and_short_ihdr_are_value_errors():
-    payload = bytearray(png_encode(_img(5)))
-    # flip a byte in the middle of the zlib stream: the inflate fails its
-    # adler/huffman checks — must surface as ValueError, not zlib.error
-    idat = bytes(payload).find(b"IDAT") + 10
-    payload[idat] ^= 0xFF
-    with pytest.raises(ValueError, match="corrupt PNG IDAT"):
-        png_decode(bytes(payload))
-    # IHDR body shorter than the fixed 13 bytes -> descriptive ValueError,
-    # not struct.error from the unpack
-    sig = b"\x89PNG\r\n\x1a\n"
-    short = struct.pack(">I", 12) + b"IHDR" + bytes(12) + bytes(4)
-    with pytest.raises(ValueError, match="IHDR must be 13 bytes"):
-        png_decode(sig + short)
-
-
-def test_jpeg_zero_sampling_factor_is_value_error():
-    # T.81 B.2.2 bounds Hi/Vi to 1..4; a zero factor otherwise divides by
-    # zero in the chroma upsample
-    qt = bytes([0]) + bytes([16] * 64)
-    sof = bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x01, 0])
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    with pytest.raises(ValueError, match="sampling factors.*legal 1..4"):
-        jpeg_decode(b"\xff\xd8" + seg(0xDB, qt) + seg(0xC0, sof) + b"\xff\xd9")
-
-
-def test_jpeg_nondivisible_sampling_raises_honestly():
-    # legal-but-exotic 3:2 chroma layout: the integer-ratio upsample
-    # cannot represent it, so it must raise, not mis-shape
-    qt = bytes([0]) + bytes([16] * 64)
-    sof = (
-        bytes([8])
-        + struct.pack(">HH", 8, 8)
-        + bytes([3, 1, 0x31, 0, 2, 0x21, 0, 3, 0x11, 0])
-    )
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    with pytest.raises(NotImplementedError, match="non-integer-ratio"):
-        jpeg_decode(b"\xff\xd8" + seg(0xDB, qt) + seg(0xC0, sof) + b"\xff\xd9")
-
-
-def test_jpeg_corrupt_dc_category_is_value_error():
-    # a Huffman DC table whose single symbol is category 12 (> the legal
-    # 11 for 8-bit precision): the decoded 1<<12.. difference previously
-    # overflowed the coefficient store with OverflowError
-    qt = bytes([0]) + bytes([16] * 64)
-    sof = bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0])
-    # one 1-bit code mapping to symbol 0x0C
-    dc_bits = [1] + [0] * 15
-    dht_dc = bytes([0x00]) + bytes(dc_bits) + bytes([0x0C])
-    dht_ac = bytes([0x10]) + bytes(dc_bits) + bytes([0x00])
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    stream = (
-        b"\xff\xd8"
-        + seg(0xDB, qt)
-        + seg(0xC0, sof)
-        + seg(0xC4, dht_dc)
-        + seg(0xC4, dht_ac)
-        + seg(0xDA, sos)
-        + bytes([0x00, 0x00])
-        + b"\xff\xd9"
-    )
-    with pytest.raises(ValueError, match="DC category 12 out of range"):
-        jpeg_decode(stream)
 
 
 def test_avi_corrupt_dimensions_never_reach_the_output_allocation():
@@ -291,17 +157,6 @@ def test_wav_truncated_fmt_chunk_is_value_error():
     # keep RIFF/WAVE + the fmt header but cut inside the fmt body
     with pytest.raises(ValueError, match="truncated WAV fmt chunk"):
         wav_decode(payload[: fmt_off + 8 + 10])
-
-
-def test_gif_truncated_before_image_data_is_value_error():
-    payload = gif_encode(_img(7))
-    # cut the stream exactly at the LZW minimum-code-size byte: header
-    # (6) + logical screen descriptor (7) + global color table + image
-    # separator/descriptor (10)
-    gct_size = 3 * (2 ** ((payload[10] & 0x07) + 1))
-    cut = 6 + 7 + gct_size + 10
-    with pytest.raises(ValueError, match="truncated before image data"):
-        gif_decode(payload[:cut])
 
 
 def test_tsdl_fake_header_parse_keeps_error_contract():

@@ -1632,11 +1632,16 @@ def test_streaming_cep_micro_batches_compile_no_code(spark, tmp_path):
     src.mkdir()
 
     def write_file(b):
-        path = src / f"batch-{b:03d}.json"
-        with open(path, "w") as f:
+        # Write under a dot-name the file source ignores, pin the mtime,
+        # then rename into place. A listing that catches the file before
+        # its mtime is pinned records today's time, and the source then
+        # drops every later (older-stamped) file as past maxFileAge.
+        tmp = src / f".batch-{b:03d}.json"
+        with open(tmp, "w") as f:
             for r in rows[b * per : (b + 1) * per]:
                 f.write(json.dumps(r) + "\n")
-        os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
+        os.utime(tmp, (1_700_000_000 + b, 1_700_000_000 + b))
+        os.replace(tmp, src / f"batch-{b:03d}.json")
 
     write_file(0)
     write_file(1)

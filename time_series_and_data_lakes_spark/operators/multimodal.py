@@ -5,45 +5,26 @@ The Spark-side architecture is real and tested — schema contract, typed
 metadata struct, partition-preserving batch iteration, bounded batch sizes.
 The codec layer:
 
-- ``bmp`` / ``ppm`` / ``png``: REAL PIXEL codecs (:func:`bmp_decode` /
+- ``bmp`` / ``ppm``: REAL PIXEL codecs (:func:`bmp_decode` /
   :func:`bmp_encode` / :func:`ppm_decode` / :func:`ppm_encode` — 24-bpp
-  BI_RGB BMP and binary P6 PPM, pure numpy/struct — and :func:`png_decode`
-  / :func:`png_encode`: PNG's entropy coding is stdlib zlib, so chunk walk
-  + inflate + all five defilters need no external library; decode covers
-  every legal bit depth (1/2/4/8/16) and Adam7 interlace, encode emits
-  8-bit non-interlaced). :func:`resize_media` pixel-transcodes every
-  registered pixel codec via two exact integer resamplers:
+  BI_RGB BMP and binary P6 PPM, pure numpy/struct). :func:`resize_media`
+  pixel-transcodes both via two exact integer resamplers:
   :func:`nn_resize` (nearest-neighbor, default) and :func:`area_resize`
   (box filter, exact rational coverage weights).
-- ``gif``: REAL PIXEL codec (:func:`gif_decode` / :func:`gif_encode` —
-  12-bit variable-width LZW both ways, validated against a published
-  foreign-encoder stream). Animations fully decode with disposal-method
-  compositing + transparency masking (:func:`gif_decode_frames`;
-  :func:`extract_frames` expands row-per-frame); the registry's
-  single-image :func:`gif_decode` raises for animations (a registry
-  resize would silently drop frames). Encode is single-frame, lossless
-  for ≤256 colors (always true of decode→resize output); richer images
-  raise rather than silently quantize.
-- ``jpeg``: REAL PIXEL codec (:mod:`.jpeg` — sequential AND progressive
-  Huffman+DCT in pure numpy: canonical DHT build, byte-destuffed bit
-  reader, restart markers, 4:4:4/4:2:2/4:2:0, JFIF color transform, and a
-  coefficient-store engine for multi-scan sequential + progressive SOF2
-  (spectral selection, successive approximation, EOB runs); decoder
-  validated against hand-derived sequential AND progressive streams using
-  the standard's own Annex K tables). Decode is exact for the payload;
-  re-encode lossy by format design. Arithmetic/lossless/hierarchical raise.
 - ``wav``: REAL AUDIO codec (:func:`wav_encode` / :func:`wav_decode` —
   RIFF chunk walker, pure stdlib/numpy; 8/16/24/32-bit PCM, IEEE
   float32/64, G.711 a-law/µ-law, WAVE_FORMAT_EXTENSIBLE, normalized to
   int16; encode emits 16-bit PCM), plus :func:`audio_stats` (peak/RMS)
   and :func:`resample_audio` (integer decimation). Compressed audio
   (ADPCM/mp3/aac/...) raises.
+- ``avi``: REAL VIDEO container codec (:func:`avi_encode` /
+  :func:`avi_decode` — RIFF 'AVI ' with uncompressed 24-bpp DIB frames);
+  :func:`extract_frames` expands one BMP row per kept frame.
 - ``tsdl-fake``: deterministic fake header layout for oracle-gated tests.
-- anything else (compressed audio / video codecs): explicit
-  ``NotImplementedError``.
-
-Swapping in PIL/ffmpeg later changes only ``_decode_payload`` /
-``_transcode_resize``.
+- anything else (compressed images such as PNG/GIF/JPEG, compressed
+  audio / video codecs): explicit ``NotImplementedError``, so
+  ``on_error='skip'`` drops such rows and :func:`media_errors` reports
+  them as ``unsupported``.
 
 Scale notes: ``mapInPandas`` streams Arrow record batches through Python
 without materializing a partition; ``spark.sql.execution.arrow.
@@ -58,7 +39,6 @@ from __future__ import annotations
 
 import math
 import struct
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -103,463 +83,6 @@ _HEADER = ">HHH"
 def pack_fake_payload(width: int, height: int, frames: int, body: bytes = b"") -> bytes:
     """Test helper: build a payload in the stub codec's header layout."""
     return _MAGIC + struct.pack(_HEADER, width, height, frames) + body
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def png_dims(payload: bytes) -> tuple[int, int]:
-    """Width/height from the PNG IHDR chunk (PNG spec §11.2.2): the 8-byte
-    signature is followed by the IHDR chunk whose data starts at offset 16
-    with two big-endian uint32s. Pure stdlib — no pixel decode."""
-    if payload[:8] != _PNG_SIG or payload[12:16] != b"IHDR" or len(payload) < 24:
-        return (0, 0)
-    w, h = struct.unpack(">II", payload[16:24])
-    return (w, h)
-
-
-def jpeg_dims(payload: bytes) -> tuple[int, int]:
-    """Width/height from the first JPEG SOF frame header (ITU T.81 §B.2.2):
-    walk the marker segments from SOI until a start-of-frame marker
-    (0xC0-0xCF excluding DHT 0xC4, JPG 0xC8, DAC 0xCC); height/width are
-    the two big-endian uint16s after the segment length and precision
-    byte."""
-    if payload[:2] != b"\xff\xd8":
-        return (0, 0)
-    i = 2
-    n = len(payload)
-    while i + 9 < n:
-        if payload[i] != 0xFF:
-            i += 1
-            continue
-        marker = payload[i + 1]
-        if marker == 0xFF:  # spec-legal fill byte before the real marker
-            i += 1
-            continue
-        if marker in (0xD9, 0xDA):  # EOI / start-of-scan: no SOF follows
-            return (0, 0)
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:  # standalone
-            i += 2
-            continue
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-            return (w, h)
-        seg_len = struct.unpack(">H", payload[i + 2 : i + 4])[0]
-        i += 2 + seg_len
-    return (0, 0)
-
-
-def gif_dims(payload: bytes) -> tuple[int, int]:
-    """Width/height from the GIF logical-screen descriptor (GIF89a spec
-    §18): two little-endian uint16s right after the 6-byte version block."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a") or len(payload) < 10:
-        return (0, 0)
-    w, h = struct.unpack("<HH", payload[6:10])
-    return (w, h)
-
-
-def gif_frames(payload: bytes) -> int:
-    """REAL frame count: walk the GIF block structure (GIF89a spec §20-23)
-    counting image descriptors — a still GIF has one, an animation one per
-    frame. Skips the global/local color tables by their flagged sizes and
-    extension/image data by their length-prefixed sub-blocks; stops at the
-    trailer or at any structural corruption (returning the frames counted
-    so far). No LZW decode — this is container arithmetic only."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a") or len(payload) < 13:
-        return 0
-    n = len(payload)
-    i = 13  # 6-byte signature + 7-byte logical screen descriptor
-    if payload[10] & 0x80:  # global color table
-        i += 3 * (2 ** ((payload[10] & 0x07) + 1))
-
-    def skip_subblocks(j: int) -> int:
-        while j < n:
-            size = payload[j]
-            j += 1
-            if size == 0:
-                return j
-            j += size
-        return j
-
-    frames = 0
-    while i < n:
-        block = payload[i]
-        i += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: label byte + sub-blocks
-            i = skip_subblocks(i + 1)
-        elif block == 0x2C:  # image descriptor = one frame
-            if i + 9 > n:
-                break
-            local_flags = payload[i + 8]
-            i += 9
-            if local_flags & 0x80:  # local color table
-                i += 3 * (2 ** ((local_flags & 0x07) + 1))
-            i += 1  # LZW minimum code size
-            i = skip_subblocks(i)
-            frames += 1
-        else:  # unknown block type: structure lost
-            break
-    return frames
-
-
-# --------------------------------------------------------------------------
-# Real GIF pixel codec: variable-width LSB-first LZW (GIF89a spec appendix
-# F) in pure Python. GIF's entropy coding is LZW with a 12-bit-capped
-# dictionary — small enough to implement faithfully without PIL. The
-# encoder emits a real compressed stream (dictionary-building, width
-# bumps, clear-code reset on a full table); the decoder mirrors it and
-# additionally accepts deflate-style "uncompressed" streams that clear
-# before every literal.
-# --------------------------------------------------------------------------
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> bytes:
-    """Concatenated image sub-block bytes → palette indices (spec app. F)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    table: list[bytes] = []
-    width = 0
-
-    def reset() -> None:
-        nonlocal table, width
-        table = [bytes([i]) for i in range(clear)] + [b"", b""]
-        width = min_code_size + 1
-
-    reset()
-    out: list[bytes] = []
-    got = 0
-    acc = 0  # LSB-first bit accumulator
-    nbits = 0
-    prev: bytes | None = None
-    pos = 0
-    while got < n_pixels:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream truncated")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            reset()
-            prev = None
-            continue
-        if code == end:
-            break
-        if code < len(table):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise ValueError(f"bad GIF LZW code {code}")
-        out.append(entry)
-        got += len(entry)
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    return b"".join(out)[:n_pixels]
-
-
-def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """Palette indices → a real LZW stream the decoder above (and any GIF
-    reader) accepts: dictionary growth mirrors the decoder's table size
-    exactly, so width bumps land on the same stream positions."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    dic: dict[bytes, int] = {}
-    size = 0
-    width = 0
-
-    def reset() -> None:
-        nonlocal dic, size, width
-        dic = {bytes([i]): i for i in range(clear)}
-        size = clear + 2  # mirrors decoder's len(table)
-        width = min_code_size + 1
-
-    reset()
-    emit(clear, width)
-    w = b""
-    for byte in indices:
-        wk = w + bytes([byte])
-        if wk in dic:
-            w = wk
-            continue
-        emit(dic[w], width)
-        if size < 4096:
-            dic[wk] = size
-            size += 1
-            # The decoder's table lags the encoder's by exactly one entry
-            # (it learns entry n only while processing code n+1), so the
-            # encoder bumps its width ONE ENTRY LATER than the decoder's
-            # len(table)==2^width rule — the classic LZW off-by-one.
-            if size == (1 << width) + 1 and width < 12:
-                width += 1
-        else:
-            emit(clear, width)
-            reset()
-        w = bytes([byte])
-    if w:
-        emit(dic[w], width)
-        # The decoder appends one more entry while processing this final
-        # data code; if that append lands its table exactly on 2^width it
-        # bumps BEFORE reading END — emit END at the same width or a
-        # strict reader hits end-of-stream mid-code (found by fuzzing:
-        # ~1/5000 payloads).
-        if size == (1 << width) and width < 12:
-            width += 1
-    emit(end, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def gif_decode_frames(payload: bytes) -> "np.ndarray":
-    """REAL animated-GIF pixel decode → (n_frames, h, w, 3) uint8 RGB
-    with full compositing semantics (GIF89a spec §23 + graphic-control
-    extension): per-frame LZW inflate, global/local color tables,
-    interlace reorder, transparency-index masking against the running
-    canvas, and the three disposal methods — 0/1 leave the frame in
-    place, 2 restores the frame's region to the background color, 3
-    restores the region to its pre-frame pixels. Each returned frame is
-    the fully composited logical screen at that point of the animation
-    (what a viewer shows), so frames drop straight into the RGB pixel
-    pipeline. The initial canvas renders as the background color
-    (transparent-canvas GIFs have no RGB representation; documented
-    choice, black when bg_index is out of table range)."""
-    b = bytes(payload)
-    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-        raise ValueError("not a GIF payload")
-    w, h = struct.unpack("<HH", b[6:10])
-    packed, bg_index = b[10], b[11]
-    i = 13
-    gct = None
-    if packed & 0x80:
-        size = 3 * (2 ** ((packed & 0x07) + 1))
-        gct = np.frombuffer(b, np.uint8, size, offset=i).reshape(-1, 3)
-        i += size
-    if gct is not None and bg_index < len(gct):
-        bg = gct[bg_index]
-    else:
-        bg = np.zeros(3, np.uint8)
-    canvas = np.tile(bg, (h, w, 1)).astype(np.uint8)
-    frames: list[np.ndarray] = []
-    disposal = 0
-    transparent: int | None = None
-    n = len(b)
-    while i < n:
-        block = b[i]
-        i += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:  # extension
-            if i >= n:
-                raise ValueError("GIF truncated inside an extension block")
-            label = b[i]
-            i += 1
-            if label == 0xF9:  # graphic control
-                if i + 4 >= n or b[i] < 4:
-                    raise ValueError("GIF truncated graphic control extension")
-                gce_packed = b[i + 1]
-                disposal = (gce_packed >> 2) & 0x07
-                transparent = b[i + 4] if gce_packed & 0x01 else None
-            while i < n and b[i] != 0:
-                i += 1 + b[i]
-            i += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block {block:#x}")
-        if i + 9 > n:
-            raise ValueError("GIF truncated image descriptor")
-        fx, fy, fw, fh = struct.unpack("<HHHH", b[i : i + 8])
-        local_flags = b[i + 8]
-        i += 9
-        if fx + fw > w or fy + fh > h:
-            raise ValueError(
-                f"GIF frame {fw}x{fh} at ({fx},{fy}) exceeds the "
-                f"{w}x{h} logical screen"
-            )
-        pal = gct
-        if local_flags & 0x80:
-            size = 3 * (2 ** ((local_flags & 0x07) + 1))
-            pal = np.frombuffer(b, np.uint8, size, offset=i).reshape(-1, 3)
-            i += size
-        if pal is None:
-            raise ValueError("GIF frame without a color table")
-        if i >= n:
-            # stream ends exactly before the LZW minimum-code-size byte
-            # (fuzz-found truncation point)
-            raise ValueError("GIF truncated before image data")
-        mcs = b[i]
-        i += 1
-        chunks = []
-        while i < n and b[i] != 0:
-            chunks.append(b[i + 1 : i + 1 + b[i]])
-            i += 1 + b[i]
-        i += 1
-        idx = np.frombuffer(
-            _gif_lzw_decode(b"".join(chunks), mcs, fw * fh), np.uint8
-        ).reshape(fh, fw)
-        if local_flags & 0x40:  # interlaced: rows arrive in 4 passes
-            order = [
-                y for start, step in _GIF_INTERLACE_PASSES for y in range(start, fh, step)
-            ]
-            deinterlaced = np.empty_like(idx)
-            deinterlaced[order] = idx
-            idx = deinterlaced
-        opaque = idx != transparent if transparent is not None else None
-        check = idx if opaque is None else idx[opaque]
-        if check.size and int(check.max()) >= len(pal):
-            raise ValueError(
-                f"GIF palette index {int(check.max())} out of range "
-                f"(color table has {len(pal)} entries)"
-            )
-        saved = canvas[fy : fy + fh, fx : fx + fw].copy() if disposal == 3 else None
-        region = canvas[fy : fy + fh, fx : fx + fw]
-        if opaque is None:
-            region[:] = pal[idx]
-        else:
-            region[opaque] = pal[idx[opaque]]
-        frames.append(canvas.copy())
-        # dispose AFTER the frame is shown, preparing the next one's canvas
-        if disposal == 2:
-            canvas[fy : fy + fh, fx : fx + fw] = bg
-        elif disposal == 3:
-            canvas[fy : fy + fh, fx : fx + fw] = saved
-        disposal, transparent = 0, None
-    if not frames:
-        raise ValueError("GIF without image data")
-    return np.stack(frames)
-
-
-def gif_decode(payload: bytes) -> "np.ndarray":
-    """Single-frame GIF pixel decode → (h, w, 3) uint8 RGB — the
-    pixel-codec registry contract (one payload, one image). Animated GIFs
-    raise here because a resize through the registry would silently drop
-    frames; decode animations with :func:`gif_decode_frames` (full
-    disposal-method compositing) or expand them row-per-frame with
-    :func:`extract_frames`."""
-    b = bytes(payload)
-    # >1 frame is a different API, not a stub; 0 frames and non-GIF bytes
-    # are corrupt DATA (gif_decode_frames validates and raises ValueError).
-    if gif_frames(b) > 1:
-        raise NotImplementedError(
-            f"single-image decode of an animated GIF (got {gif_frames(b)} "
-            f"frames) would drop frames — use gif_decode_frames/extract_frames"
-        )
-    return gif_decode_frames(b)[0]
-
-
-def _median_cut_quantize(
-    flat: "np.ndarray", k: int = 256
-) -> tuple["np.ndarray", "np.ndarray"]:
-    """Deterministic median-cut palette quantization (Heckbert 1982):
-    (n, 3) uint8 pixels → (palette ≤k×3 uint8, per-pixel palette index).
-    Boxes split at the count-weighted median of their widest channel;
-    palette entries are the count-weighted box means (floor(x+0.5)
-    rounding, the repo's half-up policy); pixels map to their exact
-    nearest palette entry (squared-distance argmin over UNIQUE colors,
-    chunked so memory stays bounded). Fully deterministic: np.unique
-    sorts colors, splits use stable sorts, and ties in the argmin go to
-    the lowest palette index."""
-    colors, inverse, counts = np.unique(
-        flat, axis=0, return_inverse=True, return_counts=True
-    )
-    if len(colors) <= k:
-        return colors, inverse
-    c = colors.astype(np.int64)
-    boxes = [np.arange(len(c))]
-    while len(boxes) < k:
-        best, bch, bspan = -1, 0, 0
-        for bi, idx in enumerate(boxes):
-            if len(idx) < 2:
-                continue
-            spans = c[idx].max(axis=0) - c[idx].min(axis=0)
-            ch = int(np.argmax(spans))
-            if spans[ch] > bspan:
-                best, bch, bspan = bi, ch, int(spans[ch])
-        if best < 0:  # nothing splittable left
-            break
-        idx = boxes[best]
-        order = idx[np.argsort(c[idx, bch], kind="stable")]
-        cum = np.cumsum(counts[order])
-        cut = int(np.searchsorted(cum, cum[-1] / 2)) + 1
-        cut = min(max(cut, 1), len(order) - 1)
-        boxes[best] = order[:cut]
-        boxes.append(order[cut:])
-    pal = np.stack(
-        [
-            np.floor(
-                (c[idx] * counts[idx, None]).sum(axis=0) / counts[idx].sum()
-                + 0.5
-            )
-            for idx in boxes
-        ]
-    ).astype(np.uint8)
-    assign = np.empty(len(c), dtype=np.int64)
-    p = pal.astype(np.int64)
-    for j in range(0, len(c), 4096):
-        chunk = c[j : j + 4096]
-        d = ((chunk[:, None, :] - p[None, :, :]) ** 2).sum(axis=2)
-        assign[j : j + 4096] = np.argmin(d, axis=1)
-    return pal, assign[inverse]
-
-
-def gif_encode(arr: "np.ndarray", quantize: bool = False) -> bytes:
-    """(h, w, 3) uint8 RGB → REAL single-frame GIF89a with a genuine LZW
-    stream. GIF is palette-indexed, so encode is LOSSLESS exactly when the
-    image has ≤256 distinct colors (always true for anything that came out
-    of :func:`gif_decode` or :func:`nn_resize` of it — nearest-neighbor
-    creates no new colors); richer images raise by default rather than
-    silently quantize, or reduce to a 256-color median-cut palette when
-    the caller opts in with ``quantize=True`` (lossy by format design,
-    deterministic — see :func:`_median_cut_quantize`)."""
-    h, w = arr.shape[:2]
-    flat = arr.reshape(-1, 3)
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        if not quantize:
-            raise NotImplementedError(
-                f"GIF encode needs <=256 distinct colors (got {len(colors)}); "
-                "pass quantize=True for a median-cut palette reduction"
-            )
-        colors, inverse = _median_cut_quantize(flat)
-    depth = max(1, int(len(colors) - 1).bit_length())  # 2^depth palette slots
-    pal = np.zeros((2**depth, 3), dtype=np.uint8)
-    pal[: len(colors)] = colors
-    mcs = max(2, depth)
-    lzw = _gif_lzw_encode(bytes(inverse.astype(np.uint8)), mcs)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | ((depth - 1) & 0x07), 0, 0])  # GCT flag+size, bg, ratio
-    out += pal.tobytes()
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00" + bytes([mcs])
-    for j in range(0, len(lzw), 255):
-        chunk = lzw[j : j + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
 
 
 # --------------------------------------------------------------------------
@@ -718,269 +241,18 @@ def area_resize(arr: "np.ndarray", new_w: int, new_h: int) -> "np.ndarray":
     return ((2 * acc + denom) // (2 * denom)).astype(np.uint8)
 
 
-def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-    )
-
-
-def png_encode(arr: "np.ndarray") -> bytes:
-    """(h, w, 3) uint8 RGB → REAL PNG bytes: 8-bit truecolor (color type
-    2), filter 0 rows, one zlib-compressed IDAT, CRC-correct chunks (PNG
-    spec §5, §11). zlib is stdlib, so unlike JPEG/GIF no external codec is
-    needed — PNG's entropy coding IS zlib."""
-
-    h, w = arr.shape[:2]
-    raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-# Adam7 interlace pass geometry (PNG spec §8.2): (x0, y0, dx, dy)
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-# legal bit depths per color type (spec §11.2.2); anything else is
-# corrupt data, not an unimplemented feature — every legal combination
-# decodes
-_PNG_DEPTHS = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
-               4: (8, 16), 6: (8, 16)}
-
-
-def _png_defilter(raw, pos, ph, stride, bpp):
-    """Defilter ``ph`` scanlines of ``stride`` bytes starting at ``pos``
-    (all five PNG filters, spec §9) → ((ph, stride) uint8, next pos).
-    ``bpp`` is the filter's byte offset to the pixel to the left.
-    Sub/Up are vectorized (per-channel cumsum / row add mod 256);
-    Average/Paeth are sequentially data-dependent and run as plain-int
-    row loops — libpng's adaptive filtering picks them on most rows of
-    real-world PNGs, so they are the decode hot path and use list/int
-    arithmetic rather than per-element numpy indexing."""
-    out = np.zeros((ph, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(ph):
-        f = raw[pos]
-        line = np.frombuffer(raw, np.uint8, stride, offset=pos + 1).astype(
-            np.int32
-        )
-        pos += 1 + stride
-        if f == 0:  # None
-            recon = line
-        elif f == 1:  # Sub: recon[x] = line[x] + recon[x-bpp] — per-channel
-            # chains are independent, so a cumsum over the pixel axis mod
-            # 256 reconstructs the whole row vectorized
-            recon = (
-                np.cumsum(line.reshape(-1, bpp), axis=0).reshape(stride) % 256
-            )
-        elif f == 2:  # Up
-            recon = (line + prev) % 256
-        elif f == 3:  # Average
-            ll = line.tolist()
-            pp = prev.tolist() if hasattr(prev, "tolist") else list(prev)
-            rr = [0] * stride
-            for x in range(stride):
-                a = rr[x - bpp] if x >= bpp else 0
-                rr[x] = (ll[x] + ((a + pp[x]) >> 1)) & 0xFF
-            recon = np.asarray(rr, np.int32)
-        elif f == 4:  # Paeth
-            ll = line.tolist()
-            pp = prev.tolist() if hasattr(prev, "tolist") else list(prev)
-            rr = [0] * stride
-            for x in range(stride):
-                a = rr[x - bpp] if x >= bpp else 0
-                up = pp[x]
-                c = pp[x - bpp] if x >= bpp else 0
-                p = a + up - c
-                pa = p - a if p >= a else a - p
-                pb = p - up if p >= up else up - p
-                pc = p - c if p >= c else c - p
-                pred = a if (pa <= pb and pa <= pc) else (up if pb <= pc else c)
-                rr[x] = (ll[x] + pred) & 0xFF
-            recon = np.asarray(rr, np.int32)
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        prev = recon
-        out[y] = recon.astype(np.uint8)
-    return out, pos
-
-
-def _png_region_rgb(region, pw, channels, depth, color_type, plte):
-    """Defiltered scanline bytes of one (sub-)image → (ph, pw, 3) uint8
-    RGB: sample unpacking per bit depth (sub-byte MSB-first, 16-bit
-    downscaled to its high byte — the spec's sample-depth rescaling),
-    then the color-type mapping. Alpha is dropped for types 4/6 and a
-    tRNS chunk is ignored, as documented on :func:`png_decode`."""
-    ph = region.shape[0]
-    if depth == 16:
-        px = region.reshape(ph, pw, channels, 2)[:, :, :, 0]
-    elif depth == 8:
-        px = region.reshape(ph, pw, channels)
-    else:  # 1/2/4-bit: color types 0 and 3 only (channels == 1)
-        bits = np.unpackbits(region, axis=1)[:, : pw * depth]
-        weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-        px = bits.reshape(ph, pw, depth).dot(weights).astype(np.uint8)
-        px = px.reshape(ph, pw, 1)
-    if color_type == 2:
-        return px
-    if color_type == 6:
-        return px[:, :, :3]
-    if color_type == 0:
-        if depth < 8:
-            # exact 8-bit rescale: 255 is divisible by 1, 3, and 15
-            px = (px.astype(np.int32) * (255 // ((1 << depth) - 1))).astype(
-                np.uint8
-            )
-        return np.repeat(px, 3, axis=2)
-    if color_type == 4:
-        return np.repeat(px[:, :, :1], 3, axis=2)
-    # palette
-    if plte is None:
-        raise ValueError("palette PNG without PLTE")
-    if len(plte) % 3:
-        raise ValueError(f"PNG PLTE length {len(plte)} not a multiple of 3")
-    pal = np.frombuffer(plte, np.uint8).reshape(-1, 3)
-    idx = px[:, :, 0]
-    top = int(idx.max()) if idx.size else -1
-    if top >= len(pal):
-        # same corrupt-data contract as gif_decode_frames: an index past
-        # the palette is a descriptive ValueError, never a numpy
-        # IndexError surfacing from the lookup below
-        raise ValueError(
-            f"PNG palette index {top} out of range for "
-            f"{len(pal)}-entry PLTE"
-        )
-    return pal[idx]
-
-
-def png_decode(payload: bytes) -> "np.ndarray":
-    """REAL PNG pixel decode → (h, w, 3) uint8 RGB, pure stdlib+numpy:
-    chunk walk, concatenated-IDAT zlib inflate, full defiltering (all
-    five PNG filters — None/Sub/Up/Average/Paeth, spec §9), every legal
-    bit depth (1/2/4/8 for grayscale and palette, 8/16 for the color
-    types — 16-bit samples downscale to their high byte), and both
-    interlace methods (Adam7 passes are defiltered independently and
-    scattered into place, spec §8.2). Color types: truecolor (2),
-    truecolor+alpha (6, alpha dropped), grayscale (0, sub-byte depths
-    rescaled exactly) and grayscale+alpha (4, replicated to RGB), and
-    palette (3, PLTE lookup — indices are validated against the table
-    size; a tRNS palette-transparency chunk is IGNORED, consistent with
-    alpha being dropped for color types 4/6)."""
-
-    b = bytes(payload)
-    if b[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    ihdr, plte, idat = None, None, []
-    i = 8
-    while i + 8 <= len(b):
-        (ln,), ctype = struct.unpack(">I", b[i : i + 4]), b[i + 4 : i + 8]
-        body = b[i + 8 : i + 8 + ln]
-        i += 12 + ln  # len + type + body + crc
-        if ctype == b"IHDR":
-            if len(body) != 13:
-                # corrupt-data contract: a truncated IHDR is a descriptive
-                # ValueError, never a struct.error from the unpack below
-                raise ValueError(
-                    f"PNG IHDR must be 13 bytes, got {len(body)}"
-                )
-            ihdr = struct.unpack(">IIBBBBB", body)
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG without IHDR")
-    w, h, depth, color_type, _comp, _filt, interlace = ihdr
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
-    if channels is None:
-        raise ValueError(f"bad PNG color type {color_type}")
-    if depth not in _PNG_DEPTHS[color_type]:
-        raise ValueError(
-            f"illegal PNG bit depth {depth} for color type {color_type}"
-        )
-    if interlace not in (0, 1):
-        raise ValueError(f"bad PNG interlace method {interlace}")
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as e:
-        # bit-flipped or truncated IDAT surfaces as zlib.error; route it
-        # through the corrupt-data contract (fuzz-found)
-        raise ValueError(f"corrupt PNG IDAT stream: {e}") from e
-
-    def rstride(pw: int) -> int:
-        return -(-pw * channels * depth // 8)
-
-    if interlace == 0:
-        regions = [(0, 0, 1, 1, w, h)]
-    else:
-        regions = [
-            (x0, y0, dx, dy, -(-(w - x0) // dx), -(-(h - y0) // dy))
-            for x0, y0, dx, dy in _ADAM7
-        ]
-    regions = [r for r in regions if r[4] > 0 and r[5] > 0]
-    if len(raw) != sum(ph * (1 + rstride(pw)) for *_g, pw, ph in regions):
-        raise ValueError("PNG pixel data length mismatch")
-    bpp = max(1, channels * depth // 8)
-    out = np.zeros((h, w, 3), dtype=np.uint8)
-    pos = 0
-    for x0, y0, dx, dy, pw, ph in regions:
-        region, pos = _png_defilter(raw, pos, ph, rstride(pw), bpp)
-        out[y0:h:dy, x0:w:dx] = _png_region_rgb(
-            region, pw, channels, depth, color_type, plte
-        )
-    return np.ascontiguousarray(out)
-
-
-def _jpeg_decode(payload: bytes) -> "np.ndarray":
-    from time_series_and_data_lakes_spark.operators.jpeg import jpeg_decode
-
-    return jpeg_decode(payload)
-
-
-def _jpeg_encode(arr: "np.ndarray") -> bytes:
-    from time_series_and_data_lakes_spark.operators.jpeg import jpeg_encode
-
-    return jpeg_encode(arr)
-
-
 _PIXEL_CODECS = {
     "bmp": (bmp_decode, bmp_encode),
     "ppm": (ppm_decode, ppm_encode),
-    # PNG is a REAL pixel codec here: its entropy coding is zlib (stdlib).
-    # Decode accepts any 8-bit color type; re-encode always emits truecolor
-    # filter-0 (resize output is RGB anyway).
-    "png": (png_decode, png_encode),
-    # GIF too: its entropy coding is 12-bit LZW, implemented above. Decode
-    # is single-frame (animations raise — compositing needs disposal
-    # semantics); encode is lossless for <=256-color images, which every
-    # decode→nn_resize output is.
-    "gif": (gif_decode, gif_encode),
-    # JPEG as well (operators/jpeg.py): baseline sequential Huffman+DCT,
-    # pure numpy. Decode is exact for the payload's pixels; RE-encode is
-    # lossy BY FORMAT DESIGN (standard quantization tables), so a JPEG
-    # resize produces approximate pixels — as every real pipeline's does.
-    # Progressive/arithmetic-coded streams raise.
-    "jpeg": (_jpeg_decode, _jpeg_encode),
-    "jpg": (_jpeg_decode, _jpeg_encode),
 }
 
 
 def _decode_payload(payload: bytes, codec: str) -> tuple[int, int, int]:
-    """Container-header decode. PNG/JPEG/GIF dimension parsing is REAL
-    (stdlib struct over the container layout — see png_dims/jpeg_dims/
-    gif_dims); 'tsdl-fake' is the deterministic test codec; audio/video
-    codecs (which need ffmpeg/soundfile, absent here) are explicitly not
-    implemented. Still images report n_frames=1."""
+    """Container-header decode: BMP/PPM dimensions from their headers
+    (:func:`bmp_dims` / :func:`ppm_dims`), AVI dimensions and frame count
+    from ``avih``; 'tsdl-fake' is the deterministic test codec. Any other
+    codec (compressed images such as PNG/GIF/JPEG, compressed audio/video)
+    is explicitly not implemented. Still images report n_frames=1."""
     if codec is None:
         # a null meta struct carries no codec: corrupt ROW metadata (the
         # payload may be fine) — the contract ValueError, absorbed by
@@ -1003,16 +275,6 @@ def _decode_payload(payload: bytes, codec: str) -> tuple[int, int, int]:
             )
         w, h, f = struct.unpack(_HEADER, payload[4:10])
         return (w, h, f)
-    if codec == "png":
-        w, h = png_dims(bytes(payload))
-        return (w, h, 1 if w else 0)
-    if codec in ("jpeg", "jpg"):
-        w, h = jpeg_dims(bytes(payload))
-        return (w, h, 1 if w else 0)
-    if codec == "gif":
-        b = bytes(payload)
-        w, h = gif_dims(b)
-        return (w, h, gif_frames(b) if w else 0)
     if codec == "bmp":
         w, h = bmp_dims(bytes(payload))
         return (w, h, 1 if w else 0)
@@ -1027,8 +289,8 @@ def _decode_payload(payload: bytes, codec: str) -> tuple[int, int, int]:
             "resample_audio for the audio pipeline"
         )
     raise NotImplementedError(
-        f"codec {codec!r} requires an external decoder (ffmpeg-class "
-        "compressed AV formats are out of the from-scratch codec scope)"
+        f"codec {codec!r} requires an external decoder (compressed image "
+        "and AV formats are out of the from-scratch codec scope)"
     )
 
 
@@ -1218,11 +480,10 @@ def _transcode_resize(
     max_height: int,
     method: str = "nearest",
 ) -> bytes:
-    """One payload through the aspect-fit resize. ``bmp``/``ppm``/``png``
-    get a REAL pixel transcode (decode -> :func:`nn_resize` -> re-encode,
-    same codec — every codec registered in ``_PIXEL_CODECS``, which is
-    now every image format: bmp/ppm/png/gif/jpeg); ``tsdl-fake`` gets
-    the header rewrite; compressed AV codecs need ffmpeg and raise."""
+    """One payload through the aspect-fit resize. ``bmp``/``ppm`` (the
+    codecs in ``_PIXEL_CODECS``) get a REAL pixel transcode (decode ->
+    resampler -> re-encode, same codec); ``tsdl-fake`` gets the header
+    rewrite; every other codec raises."""
     if codec is None:
         raise ValueError("null meta struct: row carries no codec")
     if codec in _PIXEL_CODECS:
@@ -1232,21 +493,13 @@ def _transcode_resize(
         nw, nh = _resize_dims(w, h, max_width, max_height)
         if (nw, nh) == (w, h):
             return bytes(payload)
-        resampled = _RESAMPLERS[method](arr, nw, nh)
-        if codec == "gif" and method != "nearest":
-            # Averaging resamplers create colors the source palette lacked;
-            # the GIF format caps at 256, so opt in to the deterministic
-            # median-cut reduction (still lossless while <=256 colors
-            # survive). The <=256-invariant gif_encode relies on by default
-            # holds only for nearest-neighbor.
-            return encode(resampled, quantize=True)
-        return encode(resampled)
+        return encode(_RESAMPLERS[method](arr, nw, nh))
     if codec == "tsdl-fake":
         w, h, f = _decode_payload(payload, codec)
         nw, nh = _resize_dims(w, h, max_width, max_height)
         return _MAGIC + struct.pack(_HEADER, nw, nh, f) + bytes(payload[10:])
     raise NotImplementedError(
-        f"resize of codec {codec!r} requires a pixel transcoder (PIL/ffmpeg)"
+        f"resize of codec {codec!r} requires a pixel transcoder"
     )
 
 
@@ -1257,12 +510,11 @@ def resize_media(
     on_error: str = "fail",
     method: str = "nearest",
 ) -> DataFrame:
-    """Aspect-fit resize over the media schema. For every registered
-    pixel codec (``_PIXEL_CODECS``: bmp/ppm/png/gif/jpeg) this is a real
-    transcode — pixels are decoded, resampled, and re-encoded
-    (losslessly except for JPEG, whose re-encode is lossy by format
-    design); for ``tsdl-fake`` only the header is rewritten (body bytes
-    pass through). ``method`` picks the resampler: ``'nearest'``
+    """Aspect-fit resize over the media schema. For the pixel codecs
+    (``_PIXEL_CODECS``: bmp/ppm) this is a real lossless transcode —
+    pixels are decoded, resampled, and re-encoded; for ``tsdl-fake`` only
+    the header is rewritten (body bytes pass through); any other codec
+    raises NotImplementedError. ``method`` picks the resampler: ``'nearest'``
     (default — integer index mapping, oracle-reproducible) or ``'area'``
     (exact-integer box filter, the anti-aliased downscale for training
     corpora — :func:`area_resize`). Output is the same media schema, so
@@ -1311,11 +563,11 @@ PIXEL_STATS_SCHEMA = T.StructType(
 def pixel_stats(
     df: DataFrame, extra_cols: tuple[str, ...] = (), on_error: str = "fail"
 ) -> DataFrame:
-    """Decode pixel-codec payloads to pixels and emit per-media readouts
-    (dimensions, uint8 pixel sum, encoded byte length). The pixel sum is a
-    full-content check: any wrong byte anywhere in decode/resize/encode
-    shifts it, and it is reproducible in a SQL oracle when the pixels are a
-    pure function of the media id. ``extra_cols`` pass through unchanged
+    """Decode pixel-codec payloads (bmp/ppm) to pixels and emit per-media
+    readouts (dimensions, uint8 pixel sum, encoded byte length). The pixel
+    sum is a full-content check: any wrong byte anywhere in
+    decode/resize/encode shifts it, and it is reproducible in a SQL oracle
+    when the pixels are a pure function of the media id. ``extra_cols`` pass through unchanged
     (e.g. ``frame_index`` from :func:`extract_frames`).
     ``on_error='skip'`` drops undecodable rows (see :func:`_row_attempt`)."""
     _check_on_error(on_error)
@@ -1770,28 +1022,24 @@ def avi_decode(payload: bytes) -> tuple[int, "np.ndarray"]:
 
 def extract_frames(df: DataFrame, every_n: int = 1, on_error: str = "fail") -> DataFrame:
     """REAL frame extraction: decode ``avi`` payloads (uncompressed DIB
-    video) or ``gif`` payloads (animated, full disposal-method
-    compositing via :func:`gif_decode_frames`), keep every ``every_n``-th
-    frame, and emit each as a standalone 24-bpp BMP payload (codec 'bmp'
-    in the metadata) — one output row per kept frame, so the result drops
-    straight into the pixel pipeline (decode_media / resize_media /
-    pixel_stats). The row-expanding mapInPandas shape of frame_sample,
-    with actual pixels. ``on_error='skip'`` emits no frames for an
+    video), keep every ``every_n``-th frame, and emit each as a standalone
+    24-bpp BMP payload (codec 'bmp' in the metadata) — one output row per
+    kept frame, so the result drops straight into the pixel pipeline
+    (decode_media / resize_media / pixel_stats). The row-expanding
+    mapInPandas shape of frame_sample, with actual pixels. ``on_error='skip'`` emits no frames for an
     undecodable media row (see :func:`_row_attempt`)."""
     _check_on_error(on_error)
 
     def one(p, codec):
         if codec is None:
             raise ValueError("null meta struct: row carries no codec")
-        if codec == "gif":
-            return gif_decode_frames(p)
         if codec == "avi":
             return avi_decode(p)[1]
-        # a bmp/png/jpeg payload here is VALID data fed to the wrong op —
-        # the 'unsupported' kind, not avi_decode's misleading
-        # corrupt-RIFF ValueError
+        # a bmp/ppm payload here is VALID data fed to the wrong op — the
+        # 'unsupported' kind, not avi_decode's misleading corrupt-RIFF
+        # ValueError
         raise NotImplementedError(
-            f"frame extraction supports gif/avi, got codec {codec!r} — "
+            f"frame extraction supports avi, got codec {codec!r} — "
             "single images go through decode_media/resize_media"
         )
 
@@ -1840,14 +1088,13 @@ def media_errors(df: DataFrame) -> DataFrame:
     """Corpus-hygiene audit: one row per payload whose CONTENT cannot be
     decoded at all. ``error_kind`` distinguishes ``corrupt`` (ValueError
     — bad bytes) from ``unsupported`` (NotImplementedError — an honest
-    feature boundary such as arithmetic-coded JPEG or a compressed AV codec),
-    so a pipeline can route the former to quarantine and the latter to a
-    different decode path. A clean corpus returns zero rows.
+    feature boundary such as a compressed image or AV codec), so a pipeline
+    can route the former to quarantine and the latter to a different decode
+    path. A clean corpus returns zero rows.
 
-    Runs the DEEPEST decode per codec (full pixels for image codecs —
-    animated GIFs through the frame compositor; full sample/frame decode
-    for wav/avi; header parse for ``tsdl-fake``), so it costs about one
-    analytics pass — an audit tool, not a free filter. A NULL payload is
+    Runs the DEEPEST decode per codec (full pixels for bmp/ppm; full
+    sample/frame decode for wav/avi; header parse for ``tsdl-fake``), so
+    it costs about one analytics pass — an audit tool, not a free filter. A NULL payload is
     reported as ``error_kind='null'`` — absence, not corruption; the ops
     drop such rows silently under both error policies.
 
@@ -1855,15 +1102,12 @@ def media_errors(df: DataFrame) -> DataFrame:
     dropped by every skip-mode op that touches it, but an op can skip
     MORE than this audit flags, because skip also absorbs op-level
     feature refusals on perfectly good content — e.g. pixel_stats skips
-    a VALID animated GIF (its single-image decode refuses to drop
-    frames; route animations through :func:`extract_frames` instead).
+    a VALID avi (route video through :func:`extract_frames` instead).
     This report is about bad bytes, not about which op fits which row."""
 
     def one(p, codec):
         b = bytes(p)
-        if codec == "gif":
-            gif_decode_frames(b)
-        elif codec in _PIXEL_CODECS:
+        if codec in _PIXEL_CODECS:
             _PIXEL_CODECS[codec][0](b)
         elif codec == "wav":
             wav_decode(b)

@@ -10,7 +10,7 @@ driver testdata is a trimmed TPC-H (no partsupp / l_shipmode / l_commitdate /
 l_receiptdate), so each query keeps the canonical plan topology while adapting
 the predicates to the columns that exist (TESTDATA.md).
 
-Every aggregate is summed in exact DECIMAL and stringified so hashes are
+Every aggregate is summed in exact DECIMAL and cast to string so hashes are
 engine-order-independent; every computed column carries the same alias in the
 Spark program and the DuckDB oracle.
 """
