@@ -4,7 +4,7 @@
 # scale smoke) — so "the sweeps ran on the final commit" is a single
 # `make verify` away instead of three remembered env vars.
 
-.PHONY: test verify bench bench-commit
+.PHONY: test verify bench bench-commit loc
 
 # the ROADMAP Tier-1 command, verbatim: host core count, local spill dir,
 # the 2670 s budget, and no -x so one failure does not hide the rest
@@ -24,3 +24,7 @@ bench:
 
 bench-commit:
 	python3 bench.py --commit-plans
+
+# non-test lines of code: every package module plus bench.py, by wc -l
+loc:
+	@cat $$(find time_series_and_data_lakes_spark -name '*.py') bench.py | wc -l

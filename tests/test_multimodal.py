@@ -1025,7 +1025,7 @@ def test_on_error_skip_drops_only_bad_rows_and_media_errors_reports_them(spark):
     # default stays loud
     import pytest as _pytest
 
-    with _pytest.raises(Exception, match="smaller than requested size"):
+    with _pytest.raises(Exception, match="BMP payload holds 303 bytes.*needs 310"):
         pixel_stats(images).collect()
     for op in (
         lambda: pixel_stats(images, on_error="skip"),
@@ -1072,7 +1072,8 @@ def test_on_error_skip_drops_only_bad_rows_and_media_errors_reports_them(spark):
     assert report[4]["error_kind"] == "corrupt"
     assert report[5]["error_kind"] == "unsupported"
     assert report[7]["error_kind"] == "corrupt"
-    assert "smaller than requested size" in report[2]["error"]
+    assert "BMP payload holds 303 bytes" in report[2]["error"]
+    assert "needs 310" in report[2]["error"]
 
 
 def test_null_meta_rows_skip_not_crash(spark):

@@ -217,6 +217,7 @@ def test_sink_crash_replay_never_double_counts(spark, raw, tmp_path, fail_point)
     batch on replay. The staged-commit protocol must replay every crash
     point into the exact full-materialization state."""
     from time_series_and_data_lakes_spark.operators import rollup as R
+    from time_series_and_data_lakes_spark.sources import commit
 
     src = str(tmp_path / "raw_stream")
     for part in raw.randomSplit([1.0, 1.0], seed=7):
@@ -234,16 +235,16 @@ def test_sink_crash_replay_never_double_counts(spark, raw, tmp_path, fail_point)
     args = (path, ["sensor_id"], "time", "1 hour", "temperature", ckpt)
 
     # run 1: crash injected at the chosen protocol transition
-    R._FAIL_POINT = fail_point
+    commit._FAIL_POINT = fail_point
     try:
         q = R.start_rollup_refresh_sink(stream(), *args)
-        with pytest.raises(Exception, match="injected rollup-sink crash"):
+        with pytest.raises(Exception, match="injected sink crash"):
             q.awaitTermination(120)
             q.processAllAvailable()
     except Exception as e:  # streaming wraps the foreachBatch error
-        assert "injected rollup-sink crash" in str(e)
+        assert "injected sink crash" in str(e)
     finally:
-        R._FAIL_POINT = None
+        commit._FAIL_POINT = None
         for active in spark.streams.active:
             active.stop()
 
@@ -360,6 +361,7 @@ def test_sink_survives_randomized_multi_crash_schedule(spark, raw, tmp_path):
     import random
 
     from time_series_and_data_lakes_spark.operators import rollup as R
+    from time_series_and_data_lakes_spark.sources import commit
 
     src = str(tmp_path / "raw_stream")
     for part in raw.randomSplit([1.0, 1.0, 1.0, 1.0], seed=13):
@@ -386,7 +388,7 @@ def test_sink_survives_randomized_multi_crash_schedule(spark, raw, tmp_path):
     schedule = [rng.choice(points) for _ in range(6)]
 
     for fail_point in schedule:
-        R._FAIL_POINT = fail_point
+        commit._FAIL_POINT = fail_point
         try:
             q = R.start_rollup_refresh_sink(stream(), *args)
             # the injected point may sit on a path this replay skips
@@ -396,9 +398,9 @@ def test_sink_survives_randomized_multi_crash_schedule(spark, raw, tmp_path):
             try:
                 q.awaitTermination(120)
             except Exception as e:
-                assert "injected rollup-sink crash" in str(e)
+                assert "injected sink crash" in str(e)
         finally:
-            R._FAIL_POINT = None
+            commit._FAIL_POINT = None
             for active in spark.streams.active:
                 active.stop()
 

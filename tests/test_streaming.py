@@ -76,15 +76,19 @@ def test_ingest_stream_equals_batch_melt(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "fail_point", ["after_stage", "mid_install", "after_install", "before_cleanup"]
+    "fail_point",
+    ["mid_stage", "after_stage", "mid_install", "after_install", "before_cleanup"],
 )
 def test_ingest_sink_crash_replay_never_duplicates(spark, tmp_path, fail_point):
     """The narrow-store sink's staged-append protocol: a crash at ANY
-    transition (staged, mid-install, installed-but-unmarked, marked-but-
-    uncleaned) followed by a checkpoint replay must land the store at
-    exactly the batch melt — a bare mode('append') in foreachBatch would
-    duplicate the replayed batch's rows."""
-    from time_series_and_data_lakes_spark.streaming import ingest as ingest_mod
+    transition (mid-stage, staged, mid-install, installed-but-unmarked,
+    marked-but-uncleaned) followed by a checkpoint replay must land the
+    store at exactly the batch melt — a bare mode('append') in
+    foreachBatch would duplicate the replayed batch's rows — and leave no
+    protocol debris behind."""
+    import os
+
+    from time_series_and_data_lakes_spark.sources import commit
 
     rows = sensor_readings(seed=7, sensors=3, span_seconds=45)
     src = _write_json_batches(tmp_path, rows, n_batches=3)
@@ -98,16 +102,16 @@ def test_ingest_sink_crash_replay_never_duplicates(spark, tmp_path, fail_point):
             ckpt,
         )
 
-    ingest_mod._FAIL_POINT = fail_point
+    commit._FAIL_POINT = fail_point
     try:
         q = run()
-        with pytest.raises(Exception, match="injected ingest-sink crash"):
+        with pytest.raises(Exception, match="injected sink crash"):
             q.awaitTermination(120)
             q.processAllAvailable()
-    except Exception:
-        pass
+    except Exception as e:  # streaming wraps the foreachBatch error
+        assert "injected sink crash" in str(e)
     finally:
-        ingest_mod._FAIL_POINT = None
+        commit._FAIL_POINT = None
         for q in spark.streams.active:
             q.stop()
 
@@ -118,6 +122,9 @@ def test_ingest_sink_crash_replay_never_duplicates(spark, tmp_path, fail_point):
     assert got.select("sensor_id", "time", "measure_name").distinct().count() == len(
         rows
     )
+    assert not [d for d in os.listdir(store) if d.startswith(".staging-ingest-")]
+    staged_dir = os.path.join(ckpt, "staged_batches")
+    assert not os.path.isdir(staged_dir) or not os.listdir(staged_dir)
 
 
 def _write_kafka_shaped_batches(spark, tmp_path, rows, n_batches=4):
@@ -424,6 +431,41 @@ def test_retention_skips_unparseable_date_partitions(spark, tmp_path):
     assert spark.read.parquet(store).count() == 1
 
 
+def _old_partition_store(tmp_path):
+    """A local store with one expired partition, and URIs that name it or
+    other filesystems."""
+    import os
+
+    leaf = tmp_path / "store" / "measure_name=temperature" / "date=2024-01-01"
+    os.makedirs(leaf)
+    for i in range(4):
+        (leaf / f"part-{i}.parquet").write_bytes(b"x")
+    return leaf, ["s3a://bucket/store", "hdfs://nn:8020/store", f"file://{tmp_path}/store"]
+
+
+def test_expire_partitions_rejects_uri_store_paths(tmp_path):
+    # a URI used to glob nothing and return [] as if nothing had expired
+    leaf, uris = _old_partition_store(tmp_path)
+    for uri in uris:
+        scheme = uri.split(":", 1)[0]
+        with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+            expire_partitions(uri, dt.date(2024, 2, 1))
+    assert leaf.is_dir()
+
+
+def test_compact_partitions_rejects_uri_store_paths(spark, tmp_path):
+    from time_series_and_data_lakes_spark.streaming.retention import (
+        compact_partitions,
+    )
+
+    leaf, uris = _old_partition_store(tmp_path)
+    for uri in uris:
+        scheme = uri.split(":", 1)[0]
+        with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+            compact_partitions(spark, uri, min_files=2)
+    assert len(list(leaf.iterdir())) == 4
+
+
 def test_compact_partitions_recovers_from_mid_swap_crash(spark, tmp_path):
     """Swap debris is hidden (dot-prefixed — a visible date=X.__tmp sibling
     would be discovered as a STRING date partition and duplicate rows),
@@ -597,9 +639,9 @@ def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
         ),
         key=repr,
     )
-    # the batch operator's segment join (key equality) drops a null key's
-    # matches; the stream runs the null key's own NFA
-    assert [r for r in got if r[0] is not None] == want
+    # a null key is one more key on both operators (the batch segment
+    # join is null-safe), so the null key's match is in both
+    assert got == want
     assert [r[3] for r in got if r[0] is None] == ["OK"]
     assert [r[3] for r in want if r[0] == big] == ["WARNING"]
 

@@ -218,9 +218,11 @@ def match_error_pattern(
         F.concat(F.array(F.col("__v_a")), b_temps, F.array(F.col("__v_c"))),
         F.lit(0.0), lambda acc, x: acc + x,
     ) / (b_count + F.lit(2))
+    # null-safe on the key: the windows above treat a null key as one
+    # more partition, so its matches must find their own segments
     out = selected.join(
         segs,
-        on=[selected[key] == segs[key], selected["__k"] == segs["__err_seq"]],
+        on=[selected[key].eqNullSafe(segs[key]), selected["__k"] == segs["__err_seq"]],
         how=how,
     ).select(
         selected[key].alias(key),

@@ -129,6 +129,11 @@ def bmp_decode(payload: bytes) -> "np.ndarray":
     top_down = h < 0
     h = abs(h)
     stride = _bmp_stride(w)
+    if len(payload) < pixel_off + h * stride:
+        raise ValueError(
+            f"BMP payload holds {len(payload)} bytes, its {h}x{w} raster at "
+            f"offset {pixel_off} needs {pixel_off + h * stride}"
+        )
     buf = np.frombuffer(payload, dtype=np.uint8, count=h * stride, offset=pixel_off)
     img = buf.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)[:, :, ::-1]  # BGR -> RGB
     if not top_down:
@@ -175,6 +180,11 @@ def ppm_decode(payload: bytes) -> "np.ndarray":
     w, h, maxval, off = _ppm_header(payload)
     if maxval != 255:
         raise NotImplementedError("only maxval=255 PPM supported")
+    if len(payload) < off + h * w * 3:
+        raise ValueError(
+            f"PPM payload holds {len(payload)} bytes, its {h}x{w} raster at "
+            f"offset {off} needs {off + h * w * 3}"
+        )
     return np.frombuffer(payload, dtype=np.uint8, count=h * w * 3, offset=off).reshape(h, w, 3).copy()
 
 

@@ -35,6 +35,7 @@ from time_series_and_data_lakes_spark.operators.timeseries import (
     _interval_micros,
     time_bin,
 )
+from time_series_and_data_lakes_spark.sources.commit import commit_batch
 from time_series_and_data_lakes_spark.sources.merge import (
     dynamic_partition_overwrite,
     read_parquet_if_exists,
@@ -235,18 +236,6 @@ def refresh_rollup(
     return n
 
 
-# Fault-injection hook for the staged-commit protocol below. Tests set it
-# to one of "mid_stage" / "after_stage" / "mid_install" / "after_install"
-# / "before_cleanup" to simulate a crash at that transition; foreachBatch
-# runs on the driver, so a monkeypatched value is visible to the sink.
-_FAIL_POINT: str | None = None
-
-
-def _maybe_fail(point: str) -> None:
-    if _FAIL_POINT == point:
-        raise RuntimeError(f"injected rollup-sink crash at {point}")
-
-
 def _apply_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -259,127 +248,26 @@ def _apply_batch(
     checkpoint_location: str,
 ) -> None:
     """Apply one micro-batch to the materialized level, exactly-once under
-    crash-replay, on plain parquet. Write-ahead staged-snapshot protocol:
+    crash-replay, on plain parquet: the full replacement content of every
+    touched date partition (existing ⊕ delta) is staged under
+    ``.staging-batch-{batch_id}`` and committed by
+    :func:`...sources.commit.commit_batch` in replace mode, each staged
+    ``date=`` dir replacing the live one. Staging reads only committed
+    state, and once staged a replay installs the snapshot instead of
+    folding the delta again, so no crash point double-counts."""
 
-    1. STAGE: compute the full replacement content of every touched date
-       partition (existing ⊕ delta) and write it to a hidden staging dir
-       under ``path`` (same filesystem, so installs are pure renames;
-       dot-prefixed, so live readers never see it). Live partitions are
-       NOT modified in this step — a crash here loses nothing, and replay
-       recomputes from unmodified committed state.
-    2. Record the ``staged`` marker. From this point the staged snapshot
-       — not recomputation — is the redo log: replay must INSTALL it,
-       never recompute, because live partitions may be half-swapped.
-    3. INSTALL: per touched partition, delete the live dir and rename the
-       staged dir into place. Renames are atomic per partition; a crash
-       mid-install leaves the remaining staged dirs in the staging area,
-       and replay re-enters here and installs whatever is still staged
-       (a partition whose staged dir is gone was already installed).
-    4. Record the ``applied`` marker, then clear staging + the staged
-       marker. A replayed batch that finds ``applied`` is a no-op.
-
-    Every state transition is a single FS create/rename/delete, so each
-    crash point replays into the same final state — the double-count
-    window the additive fold otherwise has (VERDICT r5 item 4) is closed.
-    """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    applied = hpath(f"{checkpoint_location}/applied_batches/{batch_id}")
-    staged = hpath(f"{checkpoint_location}/staged_batches/{batch_id}")
-    staging = hpath(f"{path}/.staging-batch-{batch_id}")
-    # Two handles: markers live on the CHECKPOINT's filesystem, the level
-    # + staging on the LEVEL PATH's. Resolving both through one handle
-    # breaks split deployments (level on s3a://, checkpoint on hdfs://)
-    # with Hadoop's "Wrong FS" IllegalArgumentException on every batch.
-    fs = applied.getFileSystem(spark._jsc.hadoopConfiguration())
-    pfs = staging.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    # Prune the marker ledger: once batch N starts, Structured Streaming
-    # can only ever replay N itself (every earlier batch is committed in
-    # its write-ahead log), so markers for batches < N are dead — and
-    # without pruning a long-running sink accretes one small file per
-    # micro-batch forever (object-store listing pressure, exists() cost).
-    for ledger in (
-        f"{checkpoint_location}/applied_batches",
-        f"{checkpoint_location}/staged_batches",
-    ):
-        lpath = hpath(ledger)
-        if fs.exists(lpath):
-            for s in fs.listStatus(lpath):
-                name = s.getPath().getName()
-                if name.isdigit() and int(name) < batch_id:
-                    fs.delete(s.getPath(), False)
-
-    if fs.exists(applied):  # replay of a fully-committed batch
-        if pfs.exists(staging):  # crashed between applied and cleanup
-            pfs.delete(staging, True)
-        if fs.exists(staged):
-            fs.delete(staged, False)
-        return
-
-    if not fs.exists(staged):
-        # stage from committed (never-modified) state; discard staging
-        # debris first: this batch's partial output from a crash
-        # mid-stage, and EARLIER batches' dirs stranded by a crash after
-        # their `applied` marker landed (their replay will never run
-        # again) or left behind by an abandoned checkpoint.
-        ppath = hpath(path)
-        if pfs.exists(ppath):
-            entries = list(pfs.listStatus(ppath))
-            for s in entries:
-                if s.getPath().getName().startswith(".staging-batch-"):
-                    pfs.delete(s.getPath(), True)
-            # a bootstrap batch that crashed mid-stage leaves `path`
-            # holding ONLY this sink's debris (staging dirs / _SUCCESS)
-            # — no committed data. Remove the husk so the existing-level
-            # read sees the not-yet-created store, not an uninferrable
-            # empty directory. Only the sink's OWN debris names qualify:
-            # any other entry, hidden or not (a checkpoint or _delta_log
-            # nested under `path` by the user), means the directory is
-            # not ours to delete.
-            if all(
-                s.getPath().getName().startswith(".staging-batch-")
-                or s.getPath().getName() == "_SUCCESS"
-                for s in entries
-            ):
-                pfs.delete(ppath, True)
+    def stage(staging: str) -> bool:
         merged = _merged_level(
             spark, batch_df, path, keys, time_col, step, value_col
         )
         if merged is None:
-            fs.create(applied, True).close()
-            return
-        merged.write.mode("overwrite").partitionBy("date").parquet(str(staging))
-        _maybe_fail("mid_stage")  # staging written, marker not yet
-        fs.create(staged, True).close()
-    _maybe_fail("after_stage")
+            return False
+        merged.write.mode("overwrite").partitionBy("date").parquet(staging)
+        return True
 
-    # install every partition still staged (replay-safe: an installed
-    # partition's staged dir no longer exists)
-    for status in pfs.listStatus(staging):
-        name = status.getPath().getName()
-        if not name.startswith("date="):
-            continue
-        dest = hpath(f"{path}/{name}")
-        if pfs.exists(dest):
-            pfs.delete(dest, True)
-        # Hadoop FileSystem.rename reports most failures by RETURNING
-        # false, not raising — unchecked, a failed install would fall
-        # through to the applied marker and the staging cleanup would
-        # delete the only remaining copy of this partition's data.
-        if not pfs.rename(status.getPath(), dest):
-            raise IOError(
-                f"rollup install rename failed: "
-                f"{status.getPath()} -> {dest}; staged snapshot retained, "
-                f"replay will re-install"
-            )
-        _maybe_fail("mid_install")
-    _maybe_fail("after_install")
-
-    fs.create(applied, True).close()
-    _maybe_fail("before_cleanup")  # applied recorded, leftovers remain
-    pfs.delete(staging, True)
-    fs.delete(staged, False)
+    commit_batch(
+        spark, batch_id, checkpoint_location, path, "batch", stage, replace=True
+    )
 
 
 def start_rollup_refresh_sink(
@@ -397,18 +285,10 @@ def start_rollup_refresh_sink(
 
     Delivery semantics: the fold is ADDITIVE (it merges partials into
     already-updated state), so a naively replayed batch would
-    double-count. The staged-snapshot ledger makes replay exactly-once on
-    plain parquet: a batch stages its full partition replacements first,
-    records a ``staged`` marker, installs by atomic per-partition rename,
-    then records ``applied`` — each crash point replays into the same
-    final state (fault-injection-tested at every transition). The ledger
-    and markers use the Hadoop FileSystem API; the staging dir lives
-    under ``path`` (same filesystem) so installs are renames, never
-    copies. The protocol's soundness requires ATOMIC directory rename —
-    true on HDFS, local filesystems, and ABFS, but NOT on S3A, where
-    rename is copy-then-delete and a crash mid-rename can leave a
-    partial staged dir that replay would install over complete data. On
-    S3, put the level on a transactional table format instead.
+    double-count. The shared staged-commit protocol
+    (:mod:`...sources.commit`) makes replay exactly-once on plain parquet
+    at every crash point; it needs atomic rename, so on S3 put the level
+    on a transactional table format instead.
 
     ``checkpoint_location`` must not live under ``path``: the level
     directory holds only the sink's own partitions and debris, and a

@@ -861,7 +861,8 @@ SELECT s.sensor_id, s.t_a AS event_time, g.b_count AS non_errors, g.history,
     AS avg_temperature,
   greatest(g.b_max, s.v_a, s.v_c) AS max_temperature,
   (epoch_ms(s.t_c) - epoch_ms(s.t_a)) // 1000 AS elapsed
-FROM sel s JOIN segs g ON s.sensor_id = g.sensor_id AND s.k = g.err_seq
+FROM sel s JOIN segs g ON s.sensor_id IS NOT DISTINCT FROM g.sensor_id
+  AND s.k = g.err_seq
 WHERE s.rn % 2 = 1
 """
 

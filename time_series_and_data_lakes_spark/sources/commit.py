@@ -1,0 +1,160 @@
+"""Exactly-once micro-batch commit onto a plain parquet store: the one
+staged-commit protocol behind both streaming parquet sinks (the narrow
+store's ingest sink and the rollup refresh sink).
+
+A bare write in ``foreachBatch`` is at-least-once: a crash between the
+write and the checkpoint's commit replays the batch, which duplicates an
+append and double-merges an additive fold. Protocol per micro-batch ``N``:
+
+1. STAGE: sweep staging debris, then the sink writes the batch's
+   partitioned output to the hidden ``{store}/.staging-{tag}-N`` dir
+   (dot-prefixed, so readers never see it; under the store, so installs are
+   renames). Live partitions are untouched; a crash here stages again.
+2. Record the ``staged`` marker. From here the staged files are the redo
+   log: a replay installs them and never stages again.
+3. INSTALL by rename: append mode moves each staged file into its live
+   partition as ``b{N}-{file}``; replace mode moves each staged leaf
+   partition dir over the live one. Installed entries leave staging, so a
+   replay mid-install moves only what remains.
+4. Record ``applied``, then delete staging and the ``staged`` marker. A
+   replay that finds ``applied`` only cleans up.
+
+Every transition is one filesystem create/rename/delete, so every crash
+point replays into the same final state. The markers live in
+``{checkpoint}/applied_batches/`` and ``staged_batches/`` on the
+checkpoint's filesystem, which may differ from the store's. Soundness needs
+atomic rename: true on HDFS, local filesystems and ABFS, NOT on S3A, where
+rename is copy-then-delete and a crash mid-rename can leave a partial entry
+that replay installs over complete data; on S3 use a transactional table
+format instead.
+"""
+
+from __future__ import annotations
+
+from typing import Callable
+
+from pyspark.sql import SparkSession
+
+# Fault-injection hook: tests set it to "mid_stage" / "after_stage" /
+# "mid_install" / "after_install" / "before_cleanup" to crash at that
+# transition; foreachBatch runs on the driver, so the value is visible.
+_FAIL_POINT: str | None = None
+
+
+def _maybe_fail(point: str) -> None:
+    if _FAIL_POINT == point:
+        raise RuntimeError(f"injected sink crash at {point}")
+
+
+def _sweep_debris(pfs, store, prefix: str) -> None:
+    # this batch's partial stage, and dirs stranded by earlier batches or an
+    # abandoned checkpoint (their replay never runs). A store holding ONLY
+    # this sink's debris (a bootstrap batch crashed mid-stage) goes too, so
+    # staging sees no store rather than an uninferrable empty dir; any
+    # other entry, hidden or not, means the dir is not ours to delete.
+    if not pfs.exists(store):
+        return
+    entries = [s.getPath() for s in pfs.listStatus(store)]
+    for p in entries:
+        if p.getName().startswith(prefix):
+            pfs.delete(p, True)
+    if all(p.getName().startswith(prefix) or p.getName() == "_SUCCESS" for p in entries):
+        pfs.delete(store, True)
+
+
+def _leaf_partitions(pfs, root) -> list:
+    """(dir, path relative to ``root``, data files) per partition dir under
+    ``root`` that holds data files; ``.``/``_`` names are skipped."""
+    leaves, todo = [], [(root, "")]
+    while todo:
+        d, rel = todo.pop()
+        files = []
+        for s in pfs.listStatus(d):
+            name = s.getPath().getName()
+            if name.startswith((".", "_")):
+                continue
+            if s.isDirectory():
+                todo.append((s.getPath(), f"{rel}/{name}" if rel else name))
+            else:
+                files.append(s.getPath())
+        if rel and files:
+            leaves.append((d, rel, files))
+    return leaves
+
+
+def commit_batch(
+    spark: SparkSession,
+    batch_id: int,
+    checkpoint_dir: str,
+    store_path: str,
+    tag: str,
+    stage: Callable[[str], bool],
+    replace: bool,
+) -> None:
+    """Commit micro-batch ``batch_id`` into ``store_path`` exactly once.
+
+    ``stage(staging_dir)`` writes the batch's partitioned output there and
+    returns False when there is nothing to write (then only ``applied`` is
+    recorded). ``tag`` names the staging dir; ``replace`` picks the install
+    mode (leaf partitions replace the live ones, or files are appended as
+    ``b{batch_id}-{file}``)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    applied = hpath(f"{checkpoint_dir}/applied_batches/{batch_id}")
+    staged = hpath(f"{checkpoint_dir}/staged_batches/{batch_id}")
+    staging = hpath(f"{store_path}/.staging-{tag}-{batch_id}")
+    # markers on the checkpoint's filesystem, data on the store's: one
+    # handle for both fails split deployments (s3a:// store, hdfs://
+    # checkpoint) with Hadoop's "Wrong FS" error
+    fs = applied.getFileSystem(conf)
+    pfs = staging.getFileSystem(conf)
+
+    # once batch N runs, only N itself can replay: earlier markers are dead
+    for marker in (applied, staged):
+        ledger = marker.getParent()
+        if fs.exists(ledger):
+            for s in fs.listStatus(ledger):
+                name = s.getPath().getName()
+                if name.isdigit() and int(name) < batch_id:
+                    fs.delete(s.getPath(), False)
+
+    if fs.exists(applied):  # replay of a fully-committed batch
+        if pfs.exists(staging):  # crashed between applied and cleanup
+            pfs.delete(staging, True)
+        if fs.exists(staged):
+            fs.delete(staged, False)
+        return
+
+    if not fs.exists(staged):
+        _sweep_debris(pfs, hpath(store_path), f".staging-{tag}-")
+        if not stage(str(staging)):
+            fs.create(applied, True).close()
+            return
+        _maybe_fail("mid_stage")  # staging written, marker not yet
+        fs.create(staged, True).close()
+    _maybe_fail("after_stage")
+
+    for d, rel, files in _leaf_partitions(pfs, staging):
+        dest_dir = hpath(f"{store_path}/{rel}")
+        if replace:
+            moves = [(d, dest_dir)]
+        else:
+            pfs.mkdirs(dest_dir)
+            moves = [(f, hpath(f"{dest_dir}/b{batch_id}-{f.getName()}")) for f in files]
+        for src, dest in moves:
+            if pfs.exists(dest):  # replace mode, or a rename raced a crash
+                pfs.delete(dest, True)
+            # Hadoop's rename reports most failures by RETURNING false;
+            # unchecked, cleanup would delete the only copy of the data
+            if not pfs.rename(src, dest):
+                raise IOError(
+                    f"sink install rename failed: {src} -> {dest}; staged "
+                    "batch retained, replay will re-install"
+                )
+            _maybe_fail("mid_install")
+    _maybe_fail("after_install")
+
+    fs.create(applied, True).close()
+    _maybe_fail("before_cleanup")  # applied recorded, leftovers remain
+    pfs.delete(staging, True)
+    fs.delete(staged, False)

@@ -1,6 +1,6 @@
 """MERGE (upsert) into a partitioned parquet store — the CDC/maintenance
-verb Delta/Iceberg call MERGE INTO, expressed with the same
-dynamic-partition-overwrite machinery as compaction and rollup refresh:
+verb Delta/Iceberg call MERGE INTO, expressed as a dynamic partition
+overwrite:
 
 - rows of ``updates`` whose key exists in the store REPLACE the stored row
   (whole-row semantics: WHEN MATCHED THEN UPDATE SET *);
@@ -73,10 +73,10 @@ def merge_upsert(
     number of rows written (the rewritten partitions' new contents).
 
     The affected-partition list is collected to the driver (one row per
-    distinct partition tuple in the batch — bounded by the batch's span,
-    the same O(model-parameters) contract as rollup refresh), so the
-    store read is statically partition-pruned; within those partitions
-    the stored rows losing to an update are removed by a key anti join.
+    distinct partition tuple in the batch — bounded by the batch's span),
+    so the store read is statically partition-pruned; within those
+    partitions the stored rows losing to an update are removed by a key
+    anti join.
     """
     if updates.isEmpty():
         return 0

@@ -19,9 +19,8 @@ batches conflate null with NaN, so this operator must treat NaN as the
 null measurement (skipped by min/max, excluded from the avg sum), while
 the batch plan lets a true NaN poison its fold and greatest() — data
 carrying real NaN measurements diverges between the two by Arrow's
-design, not by contract. A null key also differs: it runs its own NFA
-here, while the batch operator's segment join drops its matches. The
-WITHIN bound also
+design, not by contract. A null key is one more key on both: it runs
+its own NFA here and joins its own segments there. The WITHIN bound also
 acts as the state timeout: a candidate older than the bound can never
 complete and is dropped on the next row (T3's timer semantics without
 wall-clock timers, so replays stay deterministic).

@@ -22,13 +22,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from time_series_and_data_lakes_spark.model import SENSOR_READING_SCHEMA
 from time_series_and_data_lakes_spark.operators.melt import melt
-
-
-from pyspark.sql import types as T
+from time_series_and_data_lakes_spark.sources.commit import commit_batch
 
 #: Column contract of Spark's Kafka connector source — what a
 #: ``format("kafka")`` readStream emits per record (key/value are the raw
@@ -163,17 +162,6 @@ def melt_stream(wide: DataFrame) -> DataFrame:
     )
 
 
-# Fault-injection hook for the staged-append protocol below (same pattern
-# as the rollup sink's): tests set it to "after_stage" / "mid_install" /
-# "after_install" / "before_cleanup" to crash at that transition.
-_FAIL_POINT: str | None = None
-
-
-def _maybe_fail(point: str) -> None:
-    if _FAIL_POINT == point:
-        raise RuntimeError(f"injected ingest-sink crash at {point}")
-
-
 def start_narrow_store_sink(
     narrow: DataFrame,
     store_path: str,
@@ -183,104 +171,28 @@ def start_narrow_store_sink(
     """Append the narrow stream into the partitioned store via foreachBatch
     (S6). Partition columns: measure_name, date(time).
 
-    Exactly-once under crash-replay on plain parquet, with the same
-    staged-commit shape as the rollup sink (`operators/rollup.py::
-    _apply_batch`) — a bare ``mode('append')`` here would be at-least-once:
-    a crash between the append and the checkpoint commit replays the batch
-    and duplicates its rows. Protocol per micro-batch:
-
-    1. STAGE: write the batch's partitioned file set to a hidden
-       ``.staging-ingest-{batch_id}`` dir under the store (dot-prefixed —
-       invisible to readers and to partition discovery), then record the
-       ``staged`` marker. Replay before the marker re-stages from scratch
-       (live partitions untouched); after it, the staged files — whose
-       names are now FIXED — are the redo log.
-    2. INSTALL: per staged file, one atomic rename into the live partition
-       dir under the deterministic name ``b{batch_id}-{file}``. A replay
-       mid-install re-walks the staging dir and renames whatever remains —
-       already-installed files are gone from staging, and a re-rename of
-       the same staged name lands on the same dest name, so no crash point
-       can double a row.
-    3. Record ``applied`` (a replayed batch that finds it is a no-op),
-       then clear staging. Markers prune to the live batch id, as in the
-       rollup ledger."""
+    Exactly-once under crash-replay on plain parquet: each micro-batch is
+    staged under ``.staging-ingest-{batch_id}`` and committed by
+    :func:`...sources.commit.commit_batch` in append mode, so every staged
+    file lands in its live partition as ``b{batch_id}-{file}``. A bare
+    ``mode('append')`` here would be at-least-once: a crash between the
+    append and the checkpoint commit replays the batch and duplicates its
+    rows."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        applied = hpath(f"{checkpoint_dir}/applied_batches/{batch_id}")
-        staged = hpath(f"{checkpoint_dir}/staged_batches/{batch_id}")
-        staging = hpath(f"{store_path}/.staging-ingest-{batch_id}")
-        # markers on the checkpoint's filesystem, data on the store's
-        fs = applied.getFileSystem(spark._jsc.hadoopConfiguration())
-        pfs = staging.getFileSystem(spark._jsc.hadoopConfiguration())
-
-        # prune dead markers: once batch N runs, only N itself can replay
-        for ledger in (
-            f"{checkpoint_dir}/applied_batches",
-            f"{checkpoint_dir}/staged_batches",
-        ):
-            lp = hpath(ledger)
-            if fs.exists(lp):
-                for s in fs.listStatus(lp):
-                    name = s.getPath().getName()
-                    if name.isdigit() and int(name) < batch_id:
-                        fs.delete(s.getPath(), False)
-
-        if fs.exists(applied):  # replay of a fully-committed batch
-            if pfs.exists(staging):  # crashed between applied and cleanup
-                pfs.delete(staging, True)
-            return
-
-        if not fs.exists(staged):
-            # discard staging debris: this batch's partial stage and any
-            # stranded dirs of earlier batches (their replay never runs)
-            sp = hpath(store_path)
-            if pfs.exists(sp):
-                for s in pfs.listStatus(sp):
-                    if s.getPath().getName().startswith(".staging-ingest-"):
-                        pfs.delete(s.getPath(), True)
+        def stage(staging: str) -> bool:
             (
                 batch.withColumn("date", F.to_date("time"))
                 .write.partitionBy("measure_name", "date")
                 .mode("overwrite")
-                .parquet(str(staging))
+                .parquet(staging)
             )
-            fs.create(staged, True).close()
-        _maybe_fail("after_stage")
+            return True
 
-        # install every file still staged; renames are atomic per file
-        for mdir in pfs.listStatus(staging):
-            if not mdir.getPath().getName().startswith("measure_name="):
-                continue
-            for ddir in pfs.listStatus(mdir.getPath()):
-                if not ddir.getPath().getName().startswith("date="):
-                    continue
-                dest_dir = hpath(
-                    f"{store_path}/{mdir.getPath().getName()}/"
-                    f"{ddir.getPath().getName()}"
-                )
-                pfs.mkdirs(dest_dir)
-                for f in pfs.listStatus(ddir.getPath()):
-                    fname = f.getPath().getName()
-                    if not fname.endswith(".parquet"):
-                        continue
-                    dest = hpath(f"{dest_dir}/b{batch_id}-{fname}")
-                    if pfs.exists(dest):  # rename raced a crash: replace
-                        pfs.delete(dest, False)
-                    if not pfs.rename(f.getPath(), dest):
-                        raise IOError(
-                            f"ingest install rename failed: {f.getPath()} "
-                            f"-> {dest}; staged batch retained, replay "
-                            "will re-install"
-                        )
-                    _maybe_fail("mid_install")
-        _maybe_fail("after_install")
-
-        fs.create(applied, True).close()
-        _maybe_fail("before_cleanup")
-        pfs.delete(staging, True)
+        commit_batch(
+            batch.sparkSession, batch_id, checkpoint_dir, store_path,
+            "ingest", stage, replace=False,
+        )
 
     writer = narrow.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -16,6 +16,7 @@ from __future__ import annotations
 import datetime as dt
 import shutil
 from pathlib import Path
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,14 +26,27 @@ _TMP_PREFIX = ".compact_tmp-"
 _OLD_PREFIX = ".compact_old-"
 
 
+def _local_store(store_path: str) -> Path:
+    # these helpers walk the local filesystem; a URI would glob nothing
+    # and report an empty result instead of failing
+    scheme = urlparse(store_path).scheme
+    if scheme:
+        raise ValueError(
+            f"store_path scheme {scheme!r} is not supported: retention "
+            f"walks a local directory, got {store_path!r}"
+        )
+    return Path(store_path)
+
+
 def expire_partitions(store_path: str, cutoff_date: dt.date) -> list[str]:
     """Drop store partitions older than ``cutoff_date`` (magnetic-store TTL).
 
     Works on the layout written by the ingest sink:
-    ``{store}/measure_name=*/date=YYYY-MM-DD/``. Returns removed paths.
+    ``{store}/measure_name=*/date=YYYY-MM-DD/``, on a local path (a URI
+    raises ``ValueError``). Returns removed paths.
     """
     removed = []
-    for date_dir in Path(store_path).glob("measure_name=*/date=*"):
+    for date_dir in _local_store(store_path).glob("measure_name=*/date=*"):
         date_str = date_dir.name.split("=", 1)[1]
         try:
             date_val = dt.date.fromisoformat(date_str)
@@ -94,7 +108,7 @@ def compact_partitions(
     leaf; Delta/Iceberg make this fully ACID at cluster scale.
     """
     compacted = []
-    store = Path(store_path)
+    store = _local_store(store_path)
     # recovery preamble: heal leftovers of a crashed earlier run
     for old in store.glob(f"measure_name=*/{_OLD_PREFIX}date=*"):
         leaf = old.with_name(old.name[len(_OLD_PREFIX):])
