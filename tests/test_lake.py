@@ -137,6 +137,7 @@ def test_export_formats_round_trip(spark, tmp_path):
 
     with pytest.raises(ValueError, match="unsupported"):
         export_window(df, str(tmp_path / "x"), start, end, fmt="avro")
+    assert not (tmp_path / "x").exists()  # refused before any filesystem action
 
 
 def test_write_training_shards_deterministic(spark, tmp_path):

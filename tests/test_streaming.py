@@ -319,7 +319,7 @@ def test_streaming_cep_event_time_mode_tolerates_disorder(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_export_window_idempotent(spark, tmp_path):
+def _export_frame(spark):
     rows = sensor_readings(seed=3, sensors=4, span_seconds=60)
     df = spark.createDataFrame(
         [
@@ -329,7 +329,11 @@ def test_export_window_idempotent(spark, tmp_path):
         "sensor_id string, time timestamp, temperature double",
     )
     start = dt.datetime.utcfromtimestamp(1_700_000_000)
-    end = start + dt.timedelta(seconds=30)
+    return rows, df, start, start + dt.timedelta(seconds=30)
+
+
+def test_export_window_idempotent(spark, tmp_path):
+    rows, df, start, end = _export_frame(spark)
     base = str(tmp_path / "lake")
 
     p1 = export_window(df, base, start, end)
@@ -346,8 +350,68 @@ def test_export_window_idempotent(spark, tmp_path):
     assert len(first) == n_in_window
 
 
-def test_retention_expires_old_partitions(spark, tmp_path):
-    store = str(tmp_path / "store")
+@pytest.mark.parametrize("fault", ["failed_job", "mid_swap"])
+def test_export_rerun_failure_keeps_last_good_window(spark, tmp_path, fault):
+    """A re-run of an exported window that fails, in its Spark job or
+    between the two renames of its install, must leave the window's last
+    good export readable (Spark's mode('overwrite') deleted the prefix
+    before its job ran, so a failed re-run left an empty, unreadable
+    window), and a later good export leaves no staging or backup dir."""
+    import os
+
+    from time_series_and_data_lakes_spark.sources import commit
+
+    _, df, start, end = _export_frame(spark)
+    base = str(tmp_path / "lake")
+    path = export_window(df, base, start, end)
+
+    def window_rows():
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    first = window_rows()
+    assert first
+    # fails mid-job on one row of the window
+    failing = df.withColumn(
+        "temperature",
+        F.when(
+            F.col("sensor_id") == first[0][0],
+            F.raise_error(F.lit("injected job failure")),
+        ).otherwise(F.col("temperature")),
+    )
+    if fault == "mid_swap":
+        commit._FAIL_POINT = fault
+        try:
+            with pytest.raises(RuntimeError, match="injected sink crash at mid_swap"):
+                export_window(df, base, start, end)
+        finally:
+            commit._FAIL_POINT = None
+        # the crash window: the live name is gone, its backup holds the data
+        assert not os.path.exists(path)
+        assert os.path.isdir(os.path.join(base, commit.BACKUP_PREFIX + os.path.basename(path)))
+    # the next export of the window puts the backup back before it writes,
+    # so a failing one leaves the first export in place
+    with pytest.raises(Exception, match="injected job failure"):
+        export_window(failing, base, start, end)
+    assert window_rows() == first
+
+    assert export_window(df, base, start, end) == path
+    assert window_rows() == first
+    assert not [
+        d
+        for d in os.listdir(base)
+        if d.startswith((".staging-export-", commit.BACKUP_PREFIX))
+    ]
+
+
+def _store(tmp_path, uri):
+    """The store as a bare path or as a ``file://`` URI (retention goes
+    through the Hadoop FileSystem and takes both), and its local dir."""
+    local = tmp_path / "store"
+    return (f"file://{local}" if uri else str(local)), local
+
+
+def _check_expire(spark, tmp_path, uri):
+    store, _ = _store(tmp_path, uri)
     df = spark.createDataFrame(
         [
             ("s1", dt.datetime(2024, 1, 1, 12), "OK", "temperature", 1.0),
@@ -366,12 +430,31 @@ def test_retention_expires_old_partitions(spark, tmp_path):
     assert [r["measure_value_double"] for r in left.collect()] == [2.0]
 
 
-def test_compact_partitions_rewrites_small_files(spark, tmp_path):
+def test_retention_expires_old_partitions(spark, tmp_path):
+    _check_expire(spark, tmp_path, uri=False)
+
+
+def test_expire_partitions_on_file_uri_store(spark, tmp_path):
+    _check_expire(spark, tmp_path, uri=True)
+
+
+def _no_install_debris(local):
+    """No staging or backup dir of the shared install step is left."""
+    from time_series_and_data_lakes_spark.sources.commit import BACKUP_PREFIX
+
+    return not [
+        p
+        for p in local.rglob("*")
+        if p.name.startswith((".staging-", BACKUP_PREFIX))
+    ]
+
+
+def _check_compact(spark, tmp_path, uri):
     from time_series_and_data_lakes_spark.streaming.retention import (
         compact_partitions,
     )
 
-    store = str(tmp_path / "store")
+    store, local = _store(tmp_path, uri)
     df = spark.createDataFrame(
         [
             ("s%d" % i, dt.datetime(2024, 1, 1 + (i % 2), 12), "OK", "temperature", float(i))
@@ -388,15 +471,14 @@ def test_compact_partitions_rewrites_small_files(spark, tmp_path):
     )
     before = spark.read.parquet(store)
     rows_before = sorted(r["measure_value_double"] for r in before.collect())
-    from pathlib import Path
 
-    leaves = sorted(Path(store).glob("measure_name=*/date=*"))
+    leaves = sorted(local.glob("measure_name=*/date=*"))
     assert all(len(list(p.glob("*.parquet"))) == 8 for p in leaves)
 
     compacted = compact_partitions(spark, store, target_file_bytes=1 << 30)
     assert len(compacted) == 2
     assert all(len(list(p.glob("*.parquet"))) == 1 for p in leaves)
-    assert not list(Path(store).glob("**/*__compact*"))
+    assert _no_install_debris(local)
 
     after = spark.read.parquet(store)
     assert sorted(r["measure_value_double"] for r in after.collect()) == rows_before
@@ -404,6 +486,10 @@ def test_compact_partitions_rewrites_small_files(spark, tmp_path):
     assert after.filter(
         (F.col("measure_name") == "temperature") & (F.col("date") == "2024-01-02")
     ).count() == 32
+
+
+def test_compact_partitions_rewrites_small_files(spark, tmp_path):
+    _check_compact(spark, tmp_path, uri=False)
 
 
 def test_retention_skips_unparseable_date_partitions(spark, tmp_path):
@@ -431,55 +517,13 @@ def test_retention_skips_unparseable_date_partitions(spark, tmp_path):
     assert spark.read.parquet(store).count() == 1
 
 
-def _old_partition_store(tmp_path):
-    """A local store with one expired partition, and URIs that name it or
-    other filesystems."""
-    import os
-
-    leaf = tmp_path / "store" / "measure_name=temperature" / "date=2024-01-01"
-    os.makedirs(leaf)
-    for i in range(4):
-        (leaf / f"part-{i}.parquet").write_bytes(b"x")
-    return leaf, ["s3a://bucket/store", "hdfs://nn:8020/store", f"file://{tmp_path}/store"]
-
-
-def test_expire_partitions_rejects_uri_store_paths(tmp_path):
-    # a URI used to glob nothing and return [] as if nothing had expired
-    leaf, uris = _old_partition_store(tmp_path)
-    for uri in uris:
-        scheme = uri.split(":", 1)[0]
-        with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
-            expire_partitions(uri, dt.date(2024, 2, 1))
-    assert leaf.is_dir()
-
-
-def test_compact_partitions_rejects_uri_store_paths(spark, tmp_path):
+def _check_compact_mid_swap(spark, tmp_path, uri):
+    from time_series_and_data_lakes_spark.sources import commit
     from time_series_and_data_lakes_spark.streaming.retention import (
         compact_partitions,
     )
 
-    leaf, uris = _old_partition_store(tmp_path)
-    for uri in uris:
-        scheme = uri.split(":", 1)[0]
-        with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
-            compact_partitions(spark, uri, min_files=2)
-    assert len(list(leaf.iterdir())) == 4
-
-
-def test_compact_partitions_recovers_from_mid_swap_crash(spark, tmp_path):
-    """Swap debris is hidden (dot-prefixed — a visible date=X.__tmp sibling
-    would be discovered as a STRING date partition and duplicate rows),
-    and the recovery preamble restores a backup stranded by a crash
-    between the two renames."""
-    from pathlib import Path
-
-    from time_series_and_data_lakes_spark.streaming.retention import (
-        _OLD_PREFIX,
-        _TMP_PREFIX,
-        compact_partitions,
-    )
-
-    store = str(tmp_path / "store")
+    store, local = _store(tmp_path, uri)
     df = spark.createDataFrame(
         [("s%d" % i, dt.datetime(2024, 1, 1, 12), "temperature", float(i)) for i in range(16)],
         "sensor_id string, time timestamp, measure_name string, measure_value_double double",
@@ -490,25 +534,40 @@ def test_compact_partitions_recovers_from_mid_swap_crash(spark, tmp_path):
         .write.partitionBy("measure_name", "date")
         .parquet(store)
     )
-    (leaf,) = Path(store).glob("measure_name=*/date=*")
+    (leaf,) = local.glob("measure_name=*/date=*")
     rows = sorted(r["measure_value_double"] for r in spark.read.parquet(store).collect())
 
-    # simulate the crash window: leaf renamed to the hidden backup, the
-    # rewritten tmp dir still in place — the canonical leaf is MISSING
-    tmp = leaf.with_name(_TMP_PREFIX + leaf.name)
-    old = leaf.with_name(_OLD_PREFIX + leaf.name)
-    spark.read.parquet(str(leaf)).coalesce(1).write.parquet(str(tmp))
-    leaf.rename(old)
-    # debris dirs are dot-prefixed: hidden from Spark listing and from the
-    # module's own date=* globs (a visible sibling would be read as a
-    # string date partition and duplicate every row)
-    assert not leaf.exists() and tmp.name.startswith(".") and old.name.startswith(".")
+    # crash between the install's two renames: the leaf is at its backup,
+    # the rewrite still staged — the canonical leaf is MISSING
+    commit._FAIL_POINT = "mid_swap"
+    try:
+        with pytest.raises(RuntimeError, match="injected sink crash at mid_swap"):
+            compact_partitions(spark, store, target_file_bytes=1 << 30, min_files=2)
+    finally:
+        commit._FAIL_POINT = None
+    backup = leaf.with_name(commit.BACKUP_PREFIX + leaf.name)
+    staged = [p for p in leaf.parent.iterdir() if p.name.startswith(".staging-")]
+    # debris dirs are dot-prefixed: hidden from Spark listing (a visible
+    # sibling would be read as a string date partition and duplicate
+    # every row)
+    assert not leaf.exists() and backup.is_dir() and len(staged) == 1
     # the next run heals: backup restored, debris gone, then compacts
     compact_partitions(spark, store, target_file_bytes=1 << 30, min_files=2)
-    assert leaf.exists() and not old.exists() and not tmp.exists()
+    assert leaf.exists() and _no_install_debris(local)
     got = sorted(r["measure_value_double"] for r in spark.read.parquet(store).collect())
     assert got == rows
     assert len(list(leaf.glob("*.parquet"))) == 1  # compaction proceeded
+
+
+def test_compact_partitions_recovers_from_mid_swap_crash(spark, tmp_path):
+    """A crash between the install's two renames leaves the leaf only at
+    its hidden backup; the next run puts it back, then compacts."""
+    _check_compact_mid_swap(spark, tmp_path, uri=False)
+
+
+def test_compact_partitions_on_file_uri_store(spark, tmp_path):
+    _check_compact(spark, tmp_path / "rewrite", uri=True)
+    _check_compact_mid_swap(spark, tmp_path / "mid_swap", uri=True)
 
 
 def test_export_sub_minute_windows_get_distinct_paths(spark, tmp_path):

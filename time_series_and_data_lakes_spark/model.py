@@ -1,10 +1,9 @@
-"""Data model: schemas for the wide event, narrow store, and CEP records.
-
-Mirrors the reference's data model (SURVEY.md §1):
-- wide event record: ``random-data-generator/random_data_generator.py:29-34``
-  and Flink DDL ``kinesis-studio-notebook/notebook.txt:2-8``
-- narrow (Timestream) record: ``cdk/load_data_fn/app.py:21-29,54-67``
-- CEP match record: ``kinesis-studio-notebook/notebook.txt:20-29,53-61``
+"""Data model: the schema of the wide event record every stream reader
+parses, mirroring the reference's (SURVEY.md §1):
+``random-data-generator/random_data_generator.py:29-34`` and Flink DDL
+``kinesis-studio-notebook/notebook.txt:2-8``. The narrow store's shape is
+what :func:`...streaming.ingest.melt_stream` produces, and the CEP match
+record's what the CEP operators emit.
 """
 
 from __future__ import annotations
@@ -20,52 +19,3 @@ SENSOR_READING_SCHEMA = T.StructType(
         T.StructField("event_time", T.LongType()),  # epoch milliseconds
     ]
 )
-
-# Narrow store row — the relational shape every reference query reads
-# (`timestream-queries/queries.txt:5-11`, sample at README.md:142-148).
-# `status` is a *dimension*, not a measure (`cdk/load_data_fn/app.py:56`).
-NARROW_SCHEMA = T.StructType(
-    [
-        T.StructField("time", T.TimestampType()),
-        T.StructField("sensor_id", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("non_errors", T.StringType()),
-        T.StructField("history", T.StringType()),
-        T.StructField("measure_name", T.StringType()),
-        T.StructField("measure_value_double", T.DoubleType()),
-    ]
-)
-
-# Dimension whitelist / measure whitelist (`cdk/load_data_fn/app.py:56,60`).
-DIMENSION_WHITELIST = ["sensor_id", "status", "non_errors", "history"]
-MEASURE_WHITELIST = [
-    "temperature", "min_temperature", "avg_temperature", "max_temperature", "elapsed",
-]
-
-# CEP match record (`kinesis-studio-notebook/notebook.txt:20-29`).
-CEP_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("sensor_id", T.StringType()),
-        T.StructField("event_time", T.LongType()),
-        T.StructField("non_errors", T.LongType()),
-        T.StructField("history", T.StringType()),
-        T.StructField("min_temperature", T.DoubleType()),
-        T.StructField("avg_temperature", T.DoubleType()),
-        T.StructField("max_temperature", T.DoubleType()),
-        T.StructField("elapsed", T.LongType()),
-    ]
-)
-
-
-def timeseries_type(value_type: T.DataType) -> T.ArrayType:
-    """Spark equivalent of Timestream's first-class ``timeseries`` value: an
-    ordered array of (time, value) structs (`timestream-queries/queries.txt:37`).
-    Polymorphic in the value type (double and varchar both used there)."""
-    return T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("time", T.TimestampType()),
-                T.StructField("value", value_type),
-            ]
-        )
-    )

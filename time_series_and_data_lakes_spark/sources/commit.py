@@ -1,10 +1,17 @@
-"""Exactly-once micro-batch commit onto a plain parquet store: the one
-staged-commit protocol behind both streaming parquet sinks (the narrow
-store's ingest sink and the rollup refresh sink).
+"""Replacing lake files by rename: one install step for every lake writer
+that swaps files, and the exactly-once micro-batch ledger around it.
 
-A bare write in ``foreachBatch`` is at-least-once: a crash between the
-write and the checkpoint's commit replays the batch, which duplicates an
-append and double-merges an additive fold. Protocol per micro-batch ``N``:
+:func:`replace_dir` installs a staged dir over a live one (used by the
+windowed export, retention's compaction and :func:`commit_batch`): live dir
+to the hidden backup ``.replaced-{name}``, staging into place, backup
+deleted. A crash between the renames leaves the live name missing until
+:func:`recover` puts the backup back.
+
+:func:`commit_batch` gives both streaming parquet sinks (the narrow store's
+ingest sink and the rollup refresh sink) exactly-once micro-batches. A bare
+write in ``foreachBatch`` is at-least-once: a crash between the write and
+the checkpoint's commit replays the batch, which duplicates an append and
+double-merges an additive fold. Protocol per micro-batch ``N``:
 
 1. STAGE: sweep staging debris, then the sink writes the batch's
    partitioned output to the hidden ``{store}/.staging-{tag}-N`` dir
@@ -13,9 +20,9 @@ append and double-merges an additive fold. Protocol per micro-batch ``N``:
 2. Record the ``staged`` marker. From here the staged files are the redo
    log: a replay installs them and never stages again.
 3. INSTALL by rename: append mode moves each staged file into its live
-   partition as ``b{N}-{file}``; replace mode moves each staged leaf
-   partition dir over the live one. Installed entries leave staging, so a
-   replay mid-install moves only what remains.
+   partition as ``b{N}-{file}``; replace mode installs each staged leaf
+   partition dir with :func:`replace_dir`. Installed entries leave
+   staging, so a replay mid-install moves only what remains.
 4. Record ``applied``, then delete staging and the ``staged`` marker. A
    replay that finds ``applied`` only cleans up.
 
@@ -25,25 +32,66 @@ point replays into the same final state. The markers live in
 checkpoint's filesystem, which may differ from the store's. Soundness needs
 atomic rename: true on HDFS, local filesystems and ABFS, NOT on S3A, where
 rename is copy-then-delete and a crash mid-rename can leave a partial entry
-that replay installs over complete data; on S3 use a transactional table
-format instead.
+(a partial window or leaf, or a staged file that replay installs over
+complete data); on S3 use a transactional table format instead.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Fault-injection hook: tests set it to "mid_stage" / "after_stage" /
 # "mid_install" / "after_install" / "before_cleanup" to crash at that
-# transition; foreachBatch runs on the driver, so the value is visible.
+# ledger transition, or "mid_swap" to crash between the two renames of an
+# install; foreachBatch runs on the driver, so the value is visible.
 _FAIL_POINT: str | None = None
+
+BACKUP_PREFIX = ".replaced-"  # hidden: Spark file listing never reads it
 
 
 def _maybe_fail(point: str) -> None:
     if _FAIL_POINT == point:
         raise RuntimeError(f"injected sink crash at {point}")
+
+
+def _rename(pfs, src, dest) -> None:
+    # Hadoop's rename reports most failures by RETURNING false; unchecked,
+    # the step after it would delete the only copy of the data
+    if not pfs.rename(src, dest):
+        raise IOError(f"install rename failed: {src} -> {dest}")
+
+
+def _backup(dest):
+    return SparkContext._jvm.org.apache.hadoop.fs.Path(
+        dest.getParent(), BACKUP_PREFIX + dest.getName()
+    )
+
+
+def recover(pfs, dest) -> None:
+    """Put back the backup that a crash between an install's two renames
+    left in place of ``dest`` (a Hadoop ``Path`` on ``pfs``); delete any
+    other, stale, backup of it."""
+    backup = _backup(dest)
+    if pfs.exists(backup):
+        if pfs.exists(dest):
+            pfs.delete(backup, True)
+        else:
+            _rename(pfs, backup, dest)
+
+
+def replace_dir(pfs, src, dest) -> None:
+    """Install dir ``src`` (on ``pfs``, beside ``dest``) as ``dest``."""
+    recover(pfs, dest)
+    backup = _backup(dest) if pfs.exists(dest) else None
+    if backup is not None:
+        _rename(pfs, dest, backup)
+        _maybe_fail("mid_swap")
+    _rename(pfs, src, dest)
+    if backup is not None:
+        pfs.delete(backup, True)
 
 
 def _sweep_debris(pfs, store, prefix: str) -> None:
@@ -137,20 +185,15 @@ def commit_batch(
     for d, rel, files in _leaf_partitions(pfs, staging):
         dest_dir = hpath(f"{store_path}/{rel}")
         if replace:
-            moves = [(d, dest_dir)]
-        else:
-            pfs.mkdirs(dest_dir)
-            moves = [(f, hpath(f"{dest_dir}/b{batch_id}-{f.getName()}")) for f in files]
-        for src, dest in moves:
-            if pfs.exists(dest):  # replace mode, or a rename raced a crash
+            replace_dir(pfs, d, dest_dir)
+            _maybe_fail("mid_install")
+            continue
+        pfs.mkdirs(dest_dir)
+        for f in files:
+            dest = hpath(f"{dest_dir}/b{batch_id}-{f.getName()}")
+            if pfs.exists(dest):  # a rename raced a crash
                 pfs.delete(dest, True)
-            # Hadoop's rename reports most failures by RETURNING false;
-            # unchecked, cleanup would delete the only copy of the data
-            if not pfs.rename(src, dest):
-                raise IOError(
-                    f"sink install rename failed: {src} -> {dest}; staged "
-                    "batch retained, replay will re-install"
-                )
+            _rename(pfs, f, dest)
             _maybe_fail("mid_install")
     _maybe_fail("after_install")
 

@@ -6,9 +6,10 @@ derived from the window start — "must be an idempotent value" so re-runs and
 backfills overwrite the same prefix (`mwaa/mwaa-cdk/dags/
 timestream-airflow-demo.py:33-44,69`; backfill `dags/timestream-backfill.py`).
 
-Here the window-derived deterministic path + ``mode('overwrite')`` gives the
-same exactly-once-per-window contract. Production shape is partitioned
-Parquet; a CSV writer is kept for fidelity with the reference's lake layout
+Here the window-derived deterministic path, written by staging and
+installing by rename (:func:`...sources.commit.replace_dir`), gives the same
+exactly-once-per-window contract. Production shape is partitioned Parquet;
+a CSV writer is kept for fidelity with the reference's lake layout
 (headered CSV, crawler-typed — `README.md:411-425`).
 """
 
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from time_series_and_data_lakes_spark.operators.dedup import h64
+from time_series_and_data_lakes_spark.sources.commit import recover, replace_dir
 
 
 def window_path(base: str, window_start: dt.datetime) -> str:
@@ -51,23 +53,27 @@ def export_window(
     time_col: str = "time",
     fmt: str = "parquet",
 ) -> str:
-    """Filter to [window_start, window_end) and overwrite the window's
-    deterministic prefix. Returns the path written."""
+    """Filter to [window_start, window_end), write it to the hidden
+    ``{base}/.staging-export-{stamp}`` and install that over the window's
+    deterministic prefix, which keeps its last good export if the job fails
+    (``mode('overwrite')`` would delete it first). Returns the path."""
+    if fmt not in ("csv", "json", "orc", "parquet"):
+        raise ValueError(f"unsupported export format {fmt!r}")
     path = window_path(base, window_start)
+    spark = df.sparkSession
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    dest = hpath(path)
+    staging = hpath(dest.getParent(), f".staging-export-{dest.getName()}")
+    pfs = dest.getFileSystem(spark._jsc.hadoopConfiguration())
+    recover(pfs, dest)
     windowed = df.filter(
         (F.col(time_col) >= F.lit(window_start)) & (F.col(time_col) < F.lit(window_end))
     )
-    writer = windowed.write.mode("overwrite")
+    writer = windowed.write.mode("overwrite").format(fmt)  # over a failed run's staging
     if fmt == "csv":
-        writer.option("header", True).csv(path)
-    elif fmt == "json":  # JSON-lines, the reference's stream transport shape
-        writer.json(path)
-    elif fmt == "orc":  # columnar alternative, same lake contract
-        writer.orc(path)
-    elif fmt == "parquet":
-        writer.parquet(path)
-    else:
-        raise ValueError(f"unsupported export format {fmt!r}")
+        writer = writer.option("header", True)
+    writer.save(staging.toString())
+    replace_dir(pfs, staging, dest)
     return path
 
 
