@@ -18,7 +18,7 @@ import time
 
 from time_series_and_data_lakes_spark import get_spark
 from time_series_and_data_lakes_spark import queries as Q
-from time_series_and_data_lakes_spark.plans import plan_fingerprint
+from time_series_and_data_lakes_spark.plans import partition_widths, plan_fingerprint
 
 HEADLINE = [
     # headline set per BASELINE.md + every expensive plan family added
@@ -89,14 +89,21 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     plans: dict[str, str] = {}
+    widths: dict[str, list[int]] = {}
     for name in HEADLINE:
         fn = Q.QUERIES[name]
         # Physical-plan fingerprint recorded NEXT TO the timing (round-5
         # verdict item 2): timing moved but hash unchanged => shared-host
         # noise (the recurring phantom-regression mode); hash changed =>
         # a real plan change to audit. Fingerprinted once, before the
-        # measured runs, on the same (spark, sf_dir) the runs use.
-        plans[name] = plan_fingerprint(fn(spark, sf_dir))
+        # measured runs, on the same (spark, sf_dir) the runs use. The
+        # fingerprint blanks partition counts (they follow the core
+        # count); the widths are recorded beside it. A query the catalog
+        # memoizes (queries._memoized) builds here once: its measured runs
+        # re-execute this plan.
+        planned = fn(spark, sf_dir)
+        plans[name] = plan_fingerprint(planned)
+        widths[name] = partition_widths(planned)
         if do_warm:
             # Warm THIS query's shapes immediately before measuring it:
             # whole-stage codegen compilation + JIT happen once per
@@ -123,6 +130,7 @@ def main() -> None:
         timings[name] = round(best, 3)
 
     line, full, default_scale = format_records(timings, plans, sf, sf_dir)
+    full.update(partition_widths=widths, cpus=spark.sparkContext.defaultParallelism)
     repo = os.path.dirname(os.path.abspath(__file__))
     target = os.path.join(repo, plans_target(default_scale, commit_plans))
     with open(target, "w") as f:

@@ -8,10 +8,8 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-from time_series_and_data_lakes_spark.operators.cep import (
-    brute_force_matches,
-    match_error_pattern,
-)
+from tests.oracle_util import brute_force_matches
+from time_series_and_data_lakes_spark.operators.cep import match_error_pattern
 
 SCHEMA = "sensor_id string, time timestamp, status string, temperature double"
 

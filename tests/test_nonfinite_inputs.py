@@ -158,10 +158,8 @@ def _avg_eq(a: float, b: float) -> bool:
 
 
 def test_cep_nonfinite_avg_propagates_unrounded(spark):
-    from time_series_and_data_lakes_spark.operators.cep import (
-        brute_force_matches,
-        match_error_pattern,
-    )
+    from tests.oracle_util import brute_force_matches
+    from time_series_and_data_lakes_spark.operators.cep import match_error_pattern
 
     df = spark.createDataFrame(
         _CEP_ROWS, "sensor_id string, time timestamp, status string, temperature double"

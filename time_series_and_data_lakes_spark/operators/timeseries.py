@@ -165,6 +165,11 @@ def resample(
     backward pass produces lerp right endpoints. One exchange on ``keys``,
     two sorts, zero Python. Rows before the first / after the last
     observation of a key cannot occur because the grid spans [min, max].
+
+    With one ``linear`` column, rebuilding the same resample on a session
+    generates the same code, so a rebuild compiles no new classes. With
+    several, rebuilds may still recompile: Spark orders their ignore-nulls
+    lead frames by expression ids.
     """
     linear = dict(linear or {})
     locf = dict(locf or {})
@@ -187,7 +192,7 @@ def resample(
     # bounds the grid. So slot ownership uses ALL rows, while each column's
     # lerp endpoints / LOCF state come from running last IGNORE NULLS
     # (backward) and lead IGNORE NULLS (forward) over the same (keys, time)
-    # sort — one WindowExec, one exchange, same plan shape as before. The
+    # sort — one sort, one exchange, same plan shape as before. The
     # forward endpoint MUST be lead-IGNORE-NULLS, never
     # first().over(rowsBetween(1, unboundedFollowing)): Spark evaluates an
     # UNBOUNDED FOLLOWING aggregate frame by rescanning the frame per row —
@@ -212,10 +217,22 @@ def resample(
     def _nn_t(c: str):
         return F.when(F.col(f"__v_{c}").isNotNull(), t_us)
 
-    def _lead_nn(col_name: str) -> Column:
-        # pyspark's F.lead doesn't expose ignoreNulls; the SQL form does
-        quoted = col_name.replace("`", "``")
-        return F.expr(f"lead(`{quoted}`, 1) ignore nulls")
+    def _q(col_name: str) -> str:
+        return "`" + col_name.replace("`", "``") + "`"
+
+    def _lead_nn(c: str) -> Column:
+        # The next non-null observation's (value, time) as ONE ignore-nulls
+        # lead (pyspark's F.lead doesn't expose ignoreNulls; the SQL form
+        # does). On a row with a non-null value, the running __pv/__pt are
+        # that row's own value and time. One struct instead of two leads
+        # matters for code reuse: WindowExec groups ignore-nulls offset
+        # functions into frames through a hash map keyed on their input
+        # expressions, so two of them are ordered by each build's
+        # expression ids and a rebuild compiles new classes.
+        return F.expr(
+            f"lead(CASE WHEN {_q(f'__v_{c}')} IS NOT NULL THEN named_struct("
+            f"'v', {_q(f'__pv_{c}')}, 't', {_q(f'__pt_{c}')}) END, 1) ignore nulls"
+        )
 
     staged = obs.select(
         *keys,
@@ -224,7 +241,6 @@ def resample(
         F.unix_micros(F.first("__t").over(w_run)).alias("__min_us"),
         F.unix_micros(F.lead("__t").over(w)).alias("__next_t_us"),
         *[F.col(f"__v_{c}") for c in value_cols],
-        *[_nn_t(c).alias(f"__xt_{c}") for c in lin_vals],
         *[
             F.last(f"__v_{c}", ignorenulls=True).over(w_run).alias(f"__pv_{c}")
             for c in lin_vals
@@ -238,9 +254,7 @@ def resample(
             for c in locf_vals
         ],
     ).select(
-        "*",
-        *[_lead_nn(f"__v_{c}").over(w).alias(f"__nv_{c}") for c in lin_vals],
-        *[_lead_nn(f"__xt_{c}").over(w).alias(f"__nt_{c}") for c in lin_vals],
+        "*", *[_lead_nn(c).over(w).alias(f"__n_{c}") for c in lin_vals]
     )
 
     d = F.col("__t_us") - F.col("__min_us")
@@ -259,8 +273,8 @@ def resample(
             "__next_t_us",
             *[F.col(f"__pv_{c}") for c in lin_vals],
             *[F.col(f"__pt_{c}") for c in lin_vals],
-            *[F.col(f"__nv_{c}") for c in lin_vals],
-            *[F.col(f"__nt_{c}") for c in lin_vals],
+            *[F.col(f"__n_{c}")["v"].alias(f"__nv_{c}") for c in lin_vals],
+            *[F.col(f"__n_{c}")["t"].alias(f"__nt_{c}") for c in lin_vals],
             *[F.col(f"__locf_{c}") for c in locf_vals],
             k_start.cast("bigint").alias("__ks"),
             k_end.cast("bigint").alias("__ke"),

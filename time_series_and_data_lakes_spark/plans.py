@@ -102,7 +102,48 @@ def plan_fingerprint(plan: str | DataFrame) -> str:
         flags=re.M,
     )
     canon = re.sub(r"\b(?:file|hdfs|s3a?n?|abfss?|gs|wasbs?):/[^\s,\]\)]*", "<path>", canon)
+    # Partition counts follow the host's core count (shuffle.partitions,
+    # spread_small's round-robin), not the plan's shape: blank them so one
+    # tree hashes the same on every host. partition_widths() reports them.
+    for start, end in reversed(_width_spans(canon)):
+        canon = canon[:start] + "N" + canon[end:]
     return hashlib.md5(canon.encode()).hexdigest()[:12]
+
+
+def _call_args(plan: str, name: str):
+    """(offset, text) of the argument list of every ``name(...)`` call in
+    ``plan``. Paren-balanced: keys are often expression-wrapped —
+    hashpartitioning(knownfloatingpointnormalized(normalizenanandzero(v#5)),
+    k#1, 200) — so a [^)]* regex would truncate at the first ')' and drop
+    trailing arguments."""
+    for m in re.finditer(rf"\b(?:{name})\(", plan):
+        depth, i = 1, m.end()
+        while i < len(plan) and depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        yield m.end(), plan[m.end() : i - 1]
+
+
+def _width_spans(plan: str) -> list[tuple[int, int]]:
+    """(start, end) of the partition count, the last argument, of every
+    hash, range and round-robin partitioning in ``plan``."""
+    spans = []
+    kinds = "hashpartitioning|rangepartitioning|RoundRobinPartitioning"
+    for at, args in _call_args(plan, kinds):
+        n = re.search(r"(\d+)\s*$", args)
+        if n:
+            spans.append((at + n.start(1), at + n.end(1)))
+    return spans
+
+
+def partition_widths(plan: str | DataFrame) -> list[int]:
+    """The partition count of every hash, range and round-robin
+    partitioning in the plan, in order of appearance: what
+    :func:`plan_fingerprint` blanks, so a deliberate width change stays
+    visible next to the hash."""
+    if isinstance(plan, DataFrame):
+        plan = formatted_plan(plan)
+    return [int(plan[a:b]) for a, b in _width_spans(plan)]
 
 
 def hash_exchange_keys(plan: str | DataFrame) -> list[tuple[str, ...]]:
@@ -116,16 +157,7 @@ def hash_exchange_keys(plan: str | DataFrame) -> list[tuple[str, ...]]:
     if isinstance(plan, DataFrame):
         plan = formatted_plan(plan)
     out: list[tuple[str, ...]] = []
-    # Paren-balanced scan: keys are often expression-wrapped —
-    # hashpartitioning(knownfloatingpointnormalized(normalizenanandzero(v#5)),
-    # k#1, 200) — so a [^)]* regex would truncate at the first ')' and drop
-    # trailing key columns.
-    for m in re.finditer(r"hashpartitioning\(", plan):
-        depth, i = 1, m.end()
-        while i < len(plan) and depth:
-            depth += {"(": 1, ")": -1}.get(plan[i], 0)
-            i += 1
-        args = plan[m.end() : i - 1]
+    for _, args in _call_args(plan, "hashpartitioning"):
         cols = tuple(c.group(1) for c in re.finditer(r"(\w+)#\d+", args))
         if cols:
             out.append(cols)

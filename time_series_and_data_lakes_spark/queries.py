@@ -15,6 +15,10 @@ Spark program and the oracle SQL (driver hashes columns sorted by name).
 
 from __future__ import annotations
 
+import contextvars
+import functools
+import os
+import weakref
 from collections.abc import Callable
 
 import pyarrow.parquet as pq
@@ -72,10 +76,139 @@ def _events_ts_is_nanos(path: str) -> bool:
     return False
 
 
+# --------------------------------------------------------------------------
+# Plan memo for the queries the reference re-runs on a clock (the Airflow
+# export every 5 minutes, the Grafana panels every 5 s) over a lake that
+# changes far less often. Building one of them costs ~2,000 py4j calls, a
+# parquet schema-inference job per input and a fresh analysis; a memo hit
+# costs a few stats and a handful of py4j calls, and re-executes the plan the
+# earlier build analyzed (same expression ids, so codegen hits its cache).
+# --------------------------------------------------------------------------
+
+
+class _Reads:
+    """What one memoized build read: each input's part-file stats (``None``
+    once an input cannot be listed), the session pins ``load`` set, and the
+    temp views the build registered."""
+
+    def __init__(self) -> None:
+        self.inputs: list[tuple[str, tuple]] | None = []
+        self.pins: dict[str, str] = {}
+        self.views: list[tuple[str, object]] = []
+
+
+class _Entry:
+    """One memoized build: what it read, the session's runtime conf after
+    the build, and its analyzed plan."""
+
+    def __init__(self, reads: _Reads, conf: str, df: DataFrame) -> None:
+        self.reads = reads
+        self.conf = conf
+        self.plan = df._jdf.queryExecution().analyzed()
+        self.dataset = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset
+
+
+_READS: contextvars.ContextVar[_Reads | None] = contextvars.ContextVar(
+    "tsdl_reads", default=None
+)
+# session -> {(query name, sf_dir): entry}; an entry holds only JVM objects,
+# so a stopped session's entries go with it
+_PLAN_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _part_stats(path: str) -> tuple | None:
+    """(file, size, mtime_ns) of every part file a reader of ``path`` sees,
+    or ``None`` when the lister cannot stat them (a URI store, a missing
+    path)."""
+    try:
+        return tuple(
+            (f, st.st_size, st.st_mtime_ns)
+            for f in parquet_part_files(path)
+            for st in (os.stat(f),)
+        )
+    except OSError:
+        return None
+
+
+def _conf_snapshot(spark: SparkSession) -> str:
+    # one JVM-side rendering: pyspark's conf.getAll dict costs ~140 py4j calls
+    return spark._jsparkSession.conf().getAll().toString()
+
+
+def _note_read(path: str) -> None:
+    reads = _READS.get()
+    if reads is not None and reads.inputs is not None:
+        stats = _part_stats(path)
+        reads.inputs = None if stats is None else reads.inputs + [(path, stats)]
+
+
+def _pin(spark: SparkSession, key: str, value: str) -> None:
+    spark.conf.set(key, value)
+    reads = _READS.get()
+    if reads is not None:
+        reads.pins[key] = value
+
+
+def _temp_view(df: DataFrame, name: str) -> None:
+    df.createOrReplaceTempView(name)
+    reads = _READS.get()
+    if reads is not None:
+        reads.views.append((name, df._jdf))
+
+
+def _memoized(build: Callable[[SparkSession, str], DataFrame]):
+    """Build a catalog query once per (session, query, ``sf_dir``) and lake
+    state.
+
+    A call returns a new DataFrame over the plan an earlier call built while
+    (a) every part file of every input the build ``load``-ed has the same
+    (path, size, mtime) — so a rewritten or appended file, and with it g6's
+    footer-derived ``ago()`` anchor, forces a rebuild — and (b) the session's
+    runtime conf, after the session pins ``load`` set are re-applied, equals
+    the snapshot taken after the build. Otherwise it rebuilds and replaces
+    that one entry. A build with an input the lister cannot stat (a URI
+    store) is not memoized. A hit runs no Spark job and re-registers the
+    temp views the build registered. Two threads missing at once both
+    build; the entry stored last wins, and both results are correct.
+    """
+
+    @functools.wraps(build)
+    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
+        if _READS.get() is not None:
+            # inside another memoized build: its reads belong to that entry
+            return build(spark, sf_dir)
+        memo = _PLAN_MEMO.setdefault(spark, {})
+        key = (build.__name__, sf_dir)
+        entry = memo.get(key)
+        if entry is not None and all(
+            _part_stats(p) == stats for p, stats in entry.reads.inputs
+        ):
+            for k, v in entry.reads.pins.items():
+                spark.conf.set(k, v)
+            if _conf_snapshot(spark) == entry.conf:
+                for name, jdf in entry.reads.views:
+                    jdf.createOrReplaceTempView(name)
+                jdf = entry.dataset.ofRows(spark._jsparkSession, entry.plan)
+                return DataFrame(jdf, spark)
+        reads = _Reads()
+        token = _READS.set(reads)
+        try:
+            df = build(spark, sf_dir)
+        finally:
+            _READS.reset(token)
+        if reads.inputs is None:
+            memo.pop(key, None)
+        else:
+            memo[key] = _Entry(reads, _conf_snapshot(spark), df)
+        return df
+
+    return wrapper
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The grading driver supplies its own session; pin the timestamp
     # semantics the oracles assume (runtime-settable confs only).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin(spark, "spark.sql.session.timeZone", "UTC")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) in some driver
         # testdata generations (Spark's vectorized reader rejects it) and
@@ -86,8 +219,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # execution (no save/restore around the read), so it is engaged only
         # when the footer actually carries nanos — a micros store leaves the
         # shared driver session's parquet semantics untouched.
+        _note_read(f"{sf_dir}/events.parquet")
         if _events_ts_is_nanos(f"{sf_dir}/events.parquet"):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            _pin(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/events.parquet")
         ts_type = df.schema["ts"].dataType.typeName()
         if ts_type == "long":  # LongType.typeName() is always 'long'
@@ -98,6 +232,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # epoch-space ops (unix_micros etc.) type-check.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
+    _note_read(f"{sf_dir}/{name}.parquet")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -154,6 +289,7 @@ def _anchored(
 # --------------------------------------------------------------------------
 
 
+@_memoized
 def q1_flagship_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = sensor_obs(spark, sf_dir)
     interpolated = resample(
@@ -336,6 +472,7 @@ WHERE ts >= (SELECT max(ts) - INTERVAL 7 DAY FROM events)
 # --------------------------------------------------------------------------
 
 
+@_memoized
 def g3_raw_feed_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `grafana…json:285`: SELECT * ... ORDER BY time
     return sensor_obs(spark, sf_dir).orderBy("time").select(
@@ -349,6 +486,7 @@ FROM events ORDER BY time
 """
 
 
+@_memoized
 def g4_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `grafana…json:337`: COUNT(*) ... GROUP BY status
     return sensor_obs(spark, sf_dir).groupBy("status").agg(F.count("*").alias("status_count"))
@@ -362,6 +500,7 @@ SELECT event_type AS status, count(*) AS status_count FROM events GROUP BY event
 _PCT_NO_NAN = "percentile(CASE WHEN NOT isnan(temperature) THEN temperature END, {})"
 
 
+@_memoized
 def g5_binned_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `grafana…json:392`: bin(time, $__interval_ms) + ROUND(AVG) + percentiles.
     # Exact percentile here so the DuckDB oracle can match; the approximate
@@ -392,6 +531,7 @@ GROUP BY 1 ORDER BY time_bin DESC
 """
 
 
+@_memoized
 def g6_top_sensors_recent_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `grafana…json:518`: per-sensor MAX over time BETWEEN ago(10s) AND now(),
     # ORDER BY latest desc (+ deterministic key tie-break, LIMIT 10 ≡ O2+O4).
@@ -426,6 +566,7 @@ LIMIT 10
 # --------------------------------------------------------------------------
 
 
+@_memoized
 def g2_measure_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = sensor_obs(spark, sf_dir)
     narrow = melt(
@@ -434,7 +575,7 @@ def g2_measure_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         measures=["temperature"],
         time_col="time",
     )
-    narrow.createOrReplaceTempView("ts_raw_narrow")
+    _temp_view(narrow, "ts_raw_narrow")
     sql = grafana_macros(
         "SELECT sensor_id, time, measure_value_double AS temperature "
         "FROM ts_raw_narrow WHERE measure_name = $__measure AND $__timeFilter "
@@ -513,6 +654,7 @@ def g5b_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@_memoized
 def g7_per_sensor_interval_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = sensor_obs(spark, sf_dir)
     return (
@@ -629,6 +771,7 @@ GROUP BY l_orderkey, l_linenumber
 # --------------------------------------------------------------------------
 
 
+@_memoized
 def a1_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
     customer = load(spark, sf_dir, "customer")
@@ -919,6 +1062,7 @@ F3_ORACLE = _cep_oracle(_F3_WITHIN_US, min_b=1, max_b=3, tiebreak="event_id")
 # --------------------------------------------------------------------------
 
 
+@_memoized
 def g1_cep_pivot_by_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     cep = f2_cep_match_recognize(spark, sf_dir)
     narrow = melt(
