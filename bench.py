@@ -215,7 +215,8 @@ def parse_pair_spec(spec: str) -> list[tuple[str, str, str]]:
     Every key must be a ``spark.*`` runtime conf: the arms are applied with
     ``spark.conf.set`` on the one live session. The package reads no
     environment variable at plan-build time, so any other key would leave
-    both arms identical; it is rejected by name.
+    both arms identical; it is rejected by name, and so is a segment whose
+    two values are equal.
     """
     out = []
     for part in spec.split(";"):
@@ -237,7 +238,13 @@ def parse_pair_spec(spec: str) -> list[tuple[str, str, str]]:
                 "spark.sql.adaptive.coalescePartitions.minPartitionSize="
                 "64k|256k)"
             )
-        out.append((key, a.strip(), b.strip()))
+        a, b = a.strip(), b.strip()
+        if a == b:
+            raise SystemExit(
+                f"--matched-pairs: {key!r} has the same value {a!r} in both "
+                "arms; the run would compare two identical configurations"
+            )
+        out.append((key, a, b))
     if not out:
         raise SystemExit("--matched-pairs: empty spec")
     return out

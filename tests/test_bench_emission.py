@@ -95,6 +95,12 @@ def test_matched_pairs_spec_parses_and_rejects_garbage():
     # two identical arms: refused by name, pointing at the spark.* form
     with pytest.raises(SystemExit, match=r"'TSDL_X'.*spark\.sql\.adaptive"):
         bench.parse_pair_spec("TSDL_X=0|2048; spark.a=1|2")
+    # two equal values (after stripping) would also compare two identical
+    # arms: refused naming the key, wherever the segment sits in the spec
+    with pytest.raises(SystemExit, match=r"'spark\.x'.*same value '256k'"):
+        bench.parse_pair_spec("spark.x=256k|256k")
+    with pytest.raises(SystemExit, match=r"'spark\.b'"):
+        bench.parse_pair_spec("spark.a=1|2; spark.b= y |y")
     with pytest.raises(SystemExit):
         bench.parse_pair_spec("no_pipe=1")
     with pytest.raises(SystemExit):

@@ -161,8 +161,8 @@ def test_wav_truncated_fmt_chunk_is_value_error():
 
 def test_tsdl_fake_header_parse_keeps_error_contract():
     # review-found: a truncated tsdl-fake payload that keeps the magic
-    # raised struct.error, escaping on_error='skip' and crashing
-    # media_errors — the exact rows those features exist to absorb
+    # raised struct.error, escaping on_error='skip' — the exact rows
+    # that policy exists to absorb
     from time_series_and_data_lakes_spark.operators.multimodal import (
         _decode_payload,
         pack_fake_payload,
@@ -172,7 +172,7 @@ def test_tsdl_fake_header_parse_keeps_error_contract():
     assert _decode_payload(payload, "tsdl-fake") == (640, 480, 3)
     # wrong magic is corrupt data, not a silent (0,0,0) degrade: the old
     # degrade let resize 'repair' corrupt payloads into valid zero-dim
-    # headers that media_errors never flagged
+    # headers that no error policy ever saw
     with pytest.raises(ValueError, match="not a tsdl-fake"):
         _decode_payload(b"nope", "tsdl-fake")
     for cut in range(4, 10):  # magic intact, header cut

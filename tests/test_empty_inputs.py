@@ -92,14 +92,6 @@ def test_pq_query_raises_descriptively_on_empty_corpus(spark, empty_sf):
         entry.queries()["ann_pq_adc_topk"](spark, empty_sf)
 
 
-def test_pq_train_empty_corpus_raises(spark, empty_sf):
-    from time_series_and_data_lakes_spark.operators.similarity import pq_train
-
-    emb = spark.read.parquet(os.path.join(empty_sf, "embeddings.parquet"))
-    with pytest.raises(ValueError, match="empty corpus"):
-        pq_train(emb, m_subspaces=2, n_codes=4, dim=64)
-
-
 def test_pq_encode_rejects_degenerate_codebooks(spark, sf_dir):
     from time_series_and_data_lakes_spark.operators.similarity import pq_encode
 

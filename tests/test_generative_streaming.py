@@ -1,33 +1,16 @@
-"""Generative null parity fuzzer for the STREAMING surface.
+"""Generative null parity fuzzer for the STREAMING ingest path.
 
 test_generative_parity.py fuzzes the batch catalog against the DuckDB
 oracle; the streaming bindings have no oracle — their contract is equality
 with their batch twins, so far pinned only on clean fixed fixtures. This
-module drives random null-bearing feeds through the three streaming paths
-whose null contracts are DEFINED, and checks each against an independent
-Python recomputation of that contract:
-
-  * ingest -> melt -> narrow-store sink (exactly-once) — melt keeps
-    null-time and null-dimension rows and drops null measure VALUES
-    (operators/melt.py); null event times land in the store's
-    ``date=__HIVE_DEFAULT_PARTITION__`` directory (the layout retention
-    documents and skips). Re-delivered records carry duplicate content —
-    the store must keep BOTH copies (ingest is exactly-once per batch,
-    not content-deduplicating).
-  * streaming EWMA — a null measurement is no observation (the documented
-    skip, analytics_stream.py); fed the globally time-ordered feed so the
-    batch-segmented fold equals the global time-order fold.
-  * content-fingerprint stream dedup — nulls are tagged into the md5
-    canonicalization (dedup_stream.py), so two null-bearing rows with
-    equal content ARE duplicates; first arrival inside the watermark
-    horizon survives.
-
-Deliberately out of scope, same discipline as the batch fuzzer's f2
-exclusion: duplicate-timestamp TIES (the stream smoothers order ties by
-arrival, the batch folds by their own tiebreaks — cross-binding tie order
-is a documented contract limit), and null event times in the EWMA/dedup
-paths (watermark-stateful operators require a timeline position; callers
-filter, per the engine's null-time convention).
+module drives random null-bearing feeds through ingest -> melt ->
+narrow-store sink (exactly-once) and checks it against an independent
+Python recomputation of the null contract: melt keeps null-time and
+null-dimension rows and drops null measure VALUES (operators/melt.py);
+null event times land in the store's ``date=__HIVE_DEFAULT_PARTITION__``
+directory (the layout retention documents and skips). Re-delivered
+records carry duplicate content — the store must keep BOTH copies (ingest
+is exactly-once per batch, not content-deduplicating).
 
 Two seeds run ungated; more ride the dirty-sweep gate.
 """
@@ -42,14 +25,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from time_series_and_data_lakes_spark.operators.melt import melt
-from time_series_and_data_lakes_spark.streaming.analytics_stream import (
-    ewma_stream,
-    holt_stream,
-)
-from time_series_and_data_lakes_spark.streaming.dedup_stream import (
-    dedup_stream_by_content,
-)
 from time_series_and_data_lakes_spark.streaming.ingest import (
     melt_stream,
     read_json_stream,
@@ -61,17 +36,14 @@ from tests.test_streaming import _write_json_batches
 UNGATED_SEEDS = range(2)
 GATED_SEEDS = range(2, 6)
 
-_ALPHA = 0.2
-
 
 def _random_readings(seed: int) -> list[dict]:
     rng = random.Random(7000 + seed)
     rows = []
     t = 1_700_000_000_000
     for _ in range(36):
-        # strictly increasing -> distinct event times (ties are out of
-        # scope, see module docstring); values from a tiny pool -> real
-        # content duplicates for the dedup path
+        # strictly increasing -> distinct event times; values from a
+        # tiny pool -> real content duplicates
         t += rng.randint(500, 5000)
         rows.append(
             {
@@ -86,17 +58,6 @@ def _random_readings(seed: int) -> list[dict]:
             }
         )
     return rows
-
-
-def _run_stream(df, name: str, mode: str) -> None:
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
 
 
 def _check_store_path(spark, tmp_path, rows_dup, seed):
@@ -140,199 +101,15 @@ def _check_store_path(spark, tmp_path, rows_dup, seed):
         )
 
 
-def _smoother_input(spark, src):
-    return (
-        read_json_stream(spark, src)
-        .filter(F.col("event_time").isNotNull() & F.col("sensor_id").isNotNull())
-        .select("sensor_id", "event_time", "temperature")
-    )
-
-
-def _final_by_key(spark, name, cols):
-    final = {}
-    for r in spark.table(name).collect():
-        if r["sensor_id"] not in final or r["n_obs"] > final[r["sensor_id"]][0]:
-            final[r["sensor_id"]] = tuple(r[c] for c in cols)
-    return final
-
-
-def _obs_in_order(rows):
-    # non-null key/time rows in global time order (times are distinct);
-    # a null measurement is no observation — the smoothers' documented skip
-    for r in sorted(
-        (r for r in rows if r["event_time"] is not None and r["sensor_id"] is not None),
-        key=lambda r: r["event_time"],
-    ):
-        if r["temperature"] is not None:
-            yield r["sensor_id"], float(r["temperature"])
-
-
-def _check_ewma_path(spark, src, rows, seed):
-    out = ewma_stream(_smoother_input(spark, src), alpha=_ALPHA, time_col="event_time")
-    _run_stream(out, f"gewma{seed}", "update")
-    want = {}
-    for k, x in _obs_in_order(rows):
-        n, acc = want.get(k, (0, None))
-        acc = x if acc is None else _ALPHA * x + (1.0 - _ALPHA) * acc
-        want[k] = (n + 1, acc)
-    # counts AND doubles bit-exact
-    assert _final_by_key(spark, f"gewma{seed}", ("n_obs", "ewma")) == want
-
-
-def _check_holt_path(spark, src, rows, seed):
-    out = holt_stream(
-        _smoother_input(spark, src), alpha=0.3, gamma=0.1, time_col="event_time"
-    )
-    _run_stream(out, f"gholt{seed}", "update")
-    want = {}
-    for k, x in _obs_in_order(rows):
-        n, l, b = want.get(k, (0, None, None))
-        if l is None:
-            l, b = x, 0.0
-        else:
-            # spell the complements as the stream does: 1.0 - alpha is NOT
-            # the 0.7 literal in IEEE doubles, and the contract is bit-exact
-            lp = 0.3 * x + (1.0 - 0.3) * (l + b)
-            b = 0.1 * (lp - l) + (1.0 - 0.1) * b
-            l = lp
-        want[k] = (n + 1, l, b)
-    assert _final_by_key(spark, f"gholt{seed}", ("n_obs", "holt_level", "holt_trend")) == want
-
-
-def _check_dedup_path(spark, tmp_path, rows_dup, seed):
-    timed = [r for r in rows_dup if r["event_time"] is not None]
-    (tmp_path / f"dedup{seed}").mkdir()
-    src = _write_json_batches(tmp_path / f"dedup{seed}", rows_dup, n_batches=4)
-    wide = (
-        read_json_stream(spark, src)
-        .filter(F.col("event_time").isNotNull())
-        .select(
-            "sensor_id",
-            F.timestamp_millis("event_time").alias("time"),
-            "status",
-            "temperature",
-        )
-    )
-    out = dedup_stream_by_content(
-        wide, ["sensor_id", "status", "temperature"], watermark="1 hour"
-    )
-    _run_stream(out, f"gdedup{seed}", "append")
-    got = [
-        (r["t_ms"], r["sensor_id"], r["status"], r["temperature"])
-        for r in spark.table(f"gdedup{seed}")
-        .select(F.unix_millis("time").alias("t_ms"), "sensor_id", "status", "temperature")
-        .collect()
-    ]
-    # Contract: exactly ONE representative per null-tagged content
-    # fingerprint, and the representative IS a member of its group. (Which
-    # member survives an intra-batch duplicate pair is partition processing
-    # order — Spark defines no arrival-order pick, so we don't assert one.)
-    groups: dict[tuple, set] = {}
-    for r in timed:
-        fp = (r["sensor_id"], r["status"], r["temperature"])
-        groups.setdefault(fp, set()).add(r["event_time"])
-    assert sorted(groups, key=repr) == sorted(
-        ((s, st, tp) for _, s, st, tp in got), key=repr
-    )
-    for t_ms, s, st, tp in got:
-        assert t_ms in groups[(s, st, tp)]
-
-
 def _run_seed(spark, tmp_path, seed: int) -> None:
     rows = _random_readings(seed)
     rows_dup = rows + rows[::4]  # re-deliveries: duplicate content, late arrival
     _check_store_path(spark, tmp_path, rows_dup, seed)
-    (tmp_path / f"sm{seed}").mkdir()
-    src = _write_json_batches(tmp_path / f"sm{seed}", rows, n_batches=4)
-    _check_ewma_path(spark, src, rows, seed)
-    _check_holt_path(spark, src, rows, seed)
-    _check_dedup_path(spark, tmp_path, rows_dup, seed)
 
 
 @pytest.mark.parametrize("seed", UNGATED_SEEDS)
 def test_generative_streaming_null_parity(spark, tmp_path, seed):
     _run_seed(spark, tmp_path, seed)
-
-
-# --- CDC upsert twin: null-safe keys and null partition values ------------
-
-# merge_upsert's two null contracts are DEFINED (eqNullSafe on key AND
-# partition predicates — ADVICE_r4 / the Delta `<=>` convention), so the
-# random family asserts them: a NULL key upserts like any other key, and
-# rows in a NULL partition value are replaced, not duplicated. Partition
-# stays immutable per key (the documented caller contract) by deriving it
-# from the key; at most one change per key per batch (ditto).
-
-_CDC_SCHEMA = "id bigint, part string, value double, tag string"
-
-
-def _cdc_part(key):
-    if key is None:
-        return "dnull"
-    return None if key % 5 == 0 else f"d{key % 3}"  # key 0/5/10 -> NULL part
-
-
-def _run_cdc_seed(spark, tmp_path, seed: int) -> None:
-    from time_series_and_data_lakes_spark.sources.merge import (
-        merge_upsert,
-        start_cdc_upsert_sink,
-    )
-
-    rng = random.Random(8000 + seed)
-    keyspace = [None] + list(range(10))
-    base = [
-        (k, _cdc_part(k), float(rng.randrange(50)), "base")
-        for k in keyspace
-        if rng.random() < 0.7
-    ]
-    store = str(tmp_path / "store")
-    merge_upsert(spark, store, spark.createDataFrame(base, _CDC_SCHEMA), ["id"], ["part"])
-
-    state = {r[0]: r for r in base}
-    src = str(tmp_path / "changes")
-    n_batches = 3
-    for b in range(n_batches):
-        batch_keys = [k for k in keyspace if rng.random() < 0.4]
-        batch = [
-            (k, _cdc_part(k), None if rng.random() < 0.2 else float(rng.randrange(50)), f"b{b}")
-            for k in batch_keys
-        ]
-        if not batch:
-            continue
-        spark.createDataFrame(batch, _CDC_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-        for r in batch:
-            state[r[0]] = r
-    if not os.path.exists(src):
-        return  # every batch rolled empty — nothing to stream
-    stream = (
-        spark.readStream.schema(_CDC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = start_cdc_upsert_sink(stream, store, ["id"], ["part"], str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-    # partitionBy moves `part` to the end of the read-back schema — select
-    # the declared order before comparing
-    got = sorted(
-        (tuple(r) for r in spark.read.parquet(store).select("id", "part", "value", "tag").collect()),
-        key=repr,
-    )
-    want = sorted(state.values(), key=repr)
-    assert got == want
-
-
-@pytest.mark.parametrize("seed", range(2))
-def test_generative_cdc_null_key_parity(spark, tmp_path, seed):
-    _run_cdc_seed(spark, tmp_path, seed)
-
-
-@pytest.mark.skipif(
-    not os.environ.get("TSDL_DIRTY_SWEEP"),
-    reason="set TSDL_DIRTY_SWEEP=1 for the extended seed set",
-)
-@pytest.mark.parametrize("seed", range(2, 5))
-def test_generative_cdc_null_key_parity_extended(spark, tmp_path, seed):
-    _run_cdc_seed(spark, tmp_path, seed)
 
 
 @pytest.mark.skipif(

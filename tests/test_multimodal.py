@@ -9,10 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from time_series_and_data_lakes_spark.operators.multimodal import (
-    FEATURE_DIM,
     MEDIA_SCHEMA,
     decode_media,
-    extract_features,
     frame_sample,
     pack_fake_payload,
 )
@@ -36,13 +34,11 @@ def test_decode_media_parses_header(spark):
 
 def test_unknown_codec_is_explicitly_stubbed(spark):
     # Compressed audio and compressed images (PNG/GIF/JPEG) have no decoder
-    # here: every media op refuses them loudly under 'fail', drops them
-    # under 'skip', and media_errors reports them as 'unsupported'. The
-    # payloads carry each format's real magic bytes, so the refusal is by
+    # here: every media op refuses them loudly under 'fail' and drops them
+    # under 'skip'. The payloads carry each format's real magic bytes, so the refusal is by
     # codec, not by a failed parse.
     from time_series_and_data_lakes_spark.operators.multimodal import (
         extract_frames,
-        media_errors,
         pixel_stats,
         resize_media,
     )
@@ -63,9 +59,6 @@ def test_unknown_codec_is_explicitly_stubbed(spark):
                 op(one).collect()
     for op in ops:
         assert op(df, on_error="skip").count() == 0, op.__name__
-    report = {r["media_id"]: r for r in media_errors(df).collect()}
-    assert sorted(report) == [9, 10, 11, 12, 13]
-    assert {r["error_kind"] for r in report.values()} == {"unsupported"}
 
 
 def test_real_image_codecs_decode_dimensions(spark):
@@ -133,14 +126,6 @@ def test_resize_non_pixel_codec_requires_transcoder(spark):
         resize_media(df).collect()
 
 
-def test_extract_features_shape_and_normalization(spark):
-    rows = extract_features(_media_df(spark)).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert len(r["features"]) == FEATURE_DIM
-        assert abs(sum(r["features"]) - 1.0) < 1e-6
-
-
 def test_frame_sample_expands_rows(spark):
     got = frame_sample(_media_df(spark), every_n=2).collect()
     frames = sorted((r["media_id"], r["frame_index"]) for r in got)
@@ -170,11 +155,9 @@ def test_resize_media_aspect_fit_and_chains(spark):
 
 def test_jpeg_fill_bytes_and_terminal_markers(spark):
     # JPEG is refused by codec before any marker walk: a stream with 0xFF
-    # fill bytes ahead of SOF0 and one with SOS before any SOF both come
-    # back 'unsupported' — never misparsed into dims, never called corrupt
+    # fill bytes ahead of SOF0 and one with SOS before any SOF are both
+    # refused as unsupported — never misparsed into dims
     import struct
-
-    from time_series_and_data_lakes_spark.operators.multimodal import media_errors
 
     sof0 = (
         b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
@@ -189,11 +172,6 @@ def test_jpeg_fill_bytes_and_terminal_markers(spark):
     with pytest.raises(Exception, match="requires an external decoder"):
         decode_media(df).collect()
     assert decode_media(df, on_error="skip").count() == 0
-    report = {r["media_id"]: r for r in media_errors(df).collect()}
-    assert {k: r["error_kind"] for k, r in report.items()} == {
-        1: "unsupported",
-        2: "unsupported",
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -409,35 +387,6 @@ def test_gif_frames_flow_through_decode_media(spark):
     frames = decode_media(extract_frames(df.filter("media_id = 20"))).collect()
     assert len(frames) == 5
     assert {(r["width"], r["height"], r["n_frames"]) for r in frames} == {(16, 8, 1)}
-
-
-def test_media_features_compose_with_ann_search(spark):
-    # End-to-end multimodal retrieval chain: payload bytes -> deterministic
-    # feature extraction -> cosine top-k over the feature vectors. Pins that
-    # extract_features' output shape (media_id, features float array) drops
-    # straight into the similarity stack with only column renames — the
-    # "image dedup / media search" composition, with the byte-histogram
-    # standing in for a real embedding model.
-    from time_series_and_data_lakes_spark.operators.similarity import cosine_topk
-
-    rows = [
-        (i, "image", pack_fake_payload(64, 64, 1, bytes([i % 7] * 50 + [i] * 20)), ("s3", "tsdl-fake"))
-        for i in range(1, 13)
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_features(media).select(
-        F.col("media_id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    queries = feats.filter(F.col("vec_id") <= 2)
-    out = cosine_topk(feats, queries, k=3)
-    got = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in out.collect()}
-    # 3 neighbors per query, no self matches, deterministic
-    assert len(got) == 6
-    assert all(got[(q, r)] != q for (q, r) in got)
-    # payloads built from the same byte pattern (i % 7 equal) are the
-    # nearest non-self neighbors: 1's histogram matches 8's most closely
-    assert got[(1, 1)] == 8
-    assert got[(2, 1)] == 9
 
 
 def test_wav_roundtrip_and_chunk_walk():
@@ -833,8 +782,8 @@ def test_png_resize_pipeline_end_to_end(spark):
 
 def test_gif_codec_honest_boundaries(spark):
     # Legal-but-unimplemented layouts of the kept codecs raise
-    # NotImplementedError — never garbage pixels, never 'corrupt' — and
-    # media_errors routes them as 'unsupported'.
+    # NotImplementedError — never garbage pixels, never 'corrupt' — so
+    # on_error='skip' drops them.
     import struct
 
     import numpy as np
@@ -842,7 +791,7 @@ def test_gif_codec_honest_boundaries(spark):
     from time_series_and_data_lakes_spark.operators.multimodal import (
         bmp_decode,
         bmp_encode,
-        media_errors,
+        pixel_stats,
         ppm_decode,
     )
 
@@ -864,8 +813,9 @@ def test_gif_codec_honest_boundaries(spark):
         ],
         MEDIA_SCHEMA,
     )
-    report = {r["media_id"]: r["error_kind"] for r in media_errors(df).collect()}
-    assert report == {1: "unsupported", 2: "unsupported", 3: "unsupported"}
+    with pytest.raises(Exception, match="NotImplementedError"):
+        pixel_stats(df).collect()
+    assert pixel_stats(df, on_error="skip").count() == 0
 
 
 def test_gif_resize_pipeline_end_to_end(spark):
@@ -988,16 +938,14 @@ def test_gif_truncation_and_oversized_frame_are_valueerrors():
         avi_decode(bytes(big))
 
 
-def test_on_error_skip_drops_only_bad_rows_and_media_errors_reports_them(spark):
+def test_on_error_skip_drops_only_bad_rows(spark):
     """At corpus scale some payloads WILL be corrupt; on_error='skip'
-    costs one row per bad payload instead of the job, and media_errors
-    reports exactly the rows skip drops (corrupt vs unsupported)."""
+    costs one row per bad payload instead of the job."""
     import numpy as np
 
     from time_series_and_data_lakes_spark.operators.multimodal import (
         audio_stats,
         extract_frames,
-        media_errors,
         bmp_encode,
         pixel_stats,
         resample_audio,
@@ -1063,30 +1011,17 @@ def test_on_error_skip_drops_only_bad_rows_and_media_errors_reports_them(spark):
     with _pytest.raises(ValueError, match="on_error"):
         extract_frames(vid, on_error="ignore")
 
-    # the audit twin reports exactly the drops, typed
-    report = {
-        r["media_id"]: r for r in media_errors(df.unionByName(vid)).collect()
-    }
-    assert sorted(report) == [2, 4, 5, 7]
-    assert report[2]["error_kind"] == "corrupt"
-    assert report[4]["error_kind"] == "corrupt"
-    assert report[5]["error_kind"] == "unsupported"
-    assert report[7]["error_kind"] == "corrupt"
-    assert "BMP payload holds 303 bytes" in report[2]["error"]
-    assert "needs 310" in report[2]["error"]
-
 
 def test_null_meta_rows_skip_not_crash(spark):
     """meta is a nullable struct: one null-meta row used to TypeError out
-    of the codec map — crashing every operator AND the media_errors audit
-    under both policies. It is corrupt row metadata: skipped under
-    'skip', reported by media_errors, loud ValueError under 'fail'."""
+    of the codec map — crashing every operator under both policies. It
+    is corrupt row metadata: skipped under 'skip', loud ValueError under
+    'fail'."""
     import pytest as _pytest
 
     from time_series_and_data_lakes_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         decode_media,
-        media_errors,
         pack_fake_payload,
         resize_media,
     )
@@ -1101,17 +1036,14 @@ def test_null_meta_rows_skip_not_crash(spark):
     assert [r["media_id"] for r in resize_media(df, on_error="skip").collect()] == [1]
     with _pytest.raises(Exception, match="null meta"):
         decode_media(df, on_error="fail").collect()
-    errs = {r["media_id"]: r for r in media_errors(df).collect()}
-    assert 2 in errs  # the audit reports the row instead of dying
 
 
 def test_corrupt_tsdl_magic_is_flagged_not_repaired(spark):
     """A tsdl-fake payload with the wrong magic used to decode as (0,0,0)
     — resize then fabricated a VALID zero-dim header from the corrupt
-    bytes and media_errors never flagged the row."""
+    bytes and no error policy ever saw the row."""
     from time_series_and_data_lakes_spark.operators.multimodal import (
         MEDIA_SCHEMA,
-        media_errors,
         resize_media,
     )
 
@@ -1119,8 +1051,8 @@ def test_corrupt_tsdl_magic_is_flagged_not_repaired(spark):
         [(1, "image", b"XXXX" + b"\x00" * 12, ("s3", "tsdl-fake"))], MEDIA_SCHEMA
     )
     assert resize_media(df, on_error="skip").count() == 0  # dropped, not repaired
-    (err,) = media_errors(df).collect()
-    assert err["media_id"] == 1 and "tsdl-fake" in err["error"]
+    with pytest.raises(Exception, match="not a tsdl-fake payload"):
+        resize_media(df).collect()
 
 
 def test_avi_deep_nesting_is_valueerror_not_recursion(spark):

@@ -217,19 +217,6 @@ def test_nonfinite_embedding_elements_raise_named_error(spark, tmp_path, poison)
         entry.queries()["ann_cosine_topk"](spark, sf).collect()
 
 
-def test_drop_degenerate_vectors_drops_nonfinite(spark):
-    from time_series_and_data_lakes_spark.operators.similarity import (
-        drop_degenerate_vectors,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [_NAN, 1.0]), (3, [_INF, 0.0]), (4, [0.0, 0.0]), (5, None)],
-        "vec_id long, embedding array<double>",
-    )
-    kept = [r["vec_id"] for r in drop_degenerate_vectors(df).collect()]
-    assert kept == [1]
-
-
 def test_cep_stream_nonfinite_avg_no_crash(spark, tmp_path):
     # the streaming NFA's math.floor raised on an Inf-poisoned avg
     # (cep_stream.py). Event-time mode over two micro-batches: every key's

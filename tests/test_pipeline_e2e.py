@@ -85,14 +85,13 @@ def test_full_pipeline(spark, tmp_path):
     assert per_customer.count() == 5
 
 
-def test_curation_chain_end_to_end(spark, sf_dir, tmp_path):
+def test_curation_chain_end_to_end(spark, sf_dir):
     """The LLM-curation operators COMPOSE: near-dup clustering -> keep one
     representative per cluster -> quality filter -> benchmark
-    decontamination -> deterministic split -> sharded export, as one flow
-    over the documents table. Each operator is oracle-gated on its own;
-    this pins the cross-operator invariants (no surviving near-dup pair,
-    no contaminated doc in train, splits partition the corpus, shard
-    membership reproducible)."""
+    decontamination -> deterministic split, as one flow over the documents
+    table. Each operator is oracle-gated on its own; this pins the
+    cross-operator invariants (no surviving near-dup pair, no contaminated
+    doc in train, splits partition the corpus)."""
     from pyspark.sql import functions as F
 
     from time_series_and_data_lakes_spark.operators.curation import (
@@ -102,7 +101,6 @@ def test_curation_chain_end_to_end(spark, sf_dir, tmp_path):
     from time_series_and_data_lakes_spark.operators.dedup import minhash_lsh_dedup
     from time_series_and_data_lakes_spark.operators.graph import connected_components
     from time_series_and_data_lakes_spark.operators.text import quality_score
-    from time_series_and_data_lakes_spark.sources.export import write_training_shards
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     total = docs.count()
@@ -144,17 +142,3 @@ def test_curation_chain_end_to_end(spark, sf_dir, tmp_path):
     split2 = hash_split(clean).groupBy("split").count().collect()
     assert sorted(map(tuple, split1)) == sorted(map(tuple, split2))
     assert sum(r["count"] for r in split1) == clean.count()
-
-    # sharded export: membership is a pure function of the id
-    train = hash_split(clean).filter(F.col("split") == "train").drop("split")
-    out = str(tmp_path / "shards")
-    write_training_shards(train, out, n_shards=4)
-    back = spark.read.parquet(out)
-    assert back.count() == train.count()
-    from time_series_and_data_lakes_spark.operators.dedup import h64
-
-    bad = back.withColumn(
-        "expect",
-        (h64(F.col("doc_id").cast("string"), seed="shard") % 4).cast("int"),
-    ).filter(F.col("shard").cast("int") != F.col("expect"))
-    assert bad.count() == 0

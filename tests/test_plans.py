@@ -420,67 +420,6 @@ def test_anchored_queries_scan_events_once(spark, sf_dir):
         assert plan.count("events.parquet") == 1, q.__name__
 
 
-def test_bucketed_join_and_agg_have_zero_exchanges(spark, sf_dir, tmp_path):
-    """sources/bucketing.py: two tables bucketed on the join key with the
-    same bucket count must sort-merge join with ZERO exchanges, and a
-    groupBy on the bucket column must aggregate with ZERO exchanges — the
-    co-located layout that turns the hot join's shuffle into a one-time
-    write cost. The same join over path-read (bucket-spec-less) copies of
-    the same files must show exchanges, proving the catalog spec (not the
-    data) carries the property."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-
-    from time_series_and_data_lakes_spark.sources.bucketing import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    write_bucketed(
-        orders, "orders_bkt", "o_custkey", 8,
-        sort_cols="o_custkey", path=str(tmp_path / "orders_bkt"),
-    )
-    write_bucketed(
-        customer, "customer_bkt", "c_custkey", 8,
-        sort_cols="c_custkey", path=str(tmp_path / "customer_bkt"),
-    )
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = read_bucketed(spark, "orders_bkt").join(
-                read_bucketed(spark, "customer_bkt"),
-                F.col("o_custkey") == F.col("c_custkey"),
-            )
-            plan = _plan(joined)
-            assert _nodes(plan, "SortMergeJoin") == 1
-            assert _nodes(plan, "Exchange") == 0, "bucketed join still shuffles"
-            assert "SelectedBucketsCount: 8 out of 8" in plan
-
-            agg = (
-                read_bucketed(spark, "orders_bkt")
-                .groupBy("o_custkey")
-                .agg(F.sum("o_totalprice").alias("total"))
-            )
-            plan = _plan(agg)
-            assert _nodes(plan, "Exchange") == 0, "bucketed agg still shuffles"
-
-            # control: identical files read by path lose the bucket spec
-            control = (
-                spark.read.parquet(str(tmp_path / "orders_bkt"))
-                .join(
-                    spark.read.parquet(str(tmp_path / "customer_bkt")),
-                    F.col("o_custkey") == F.col("c_custkey"),
-                )
-            )
-            assert _nodes(_plan(control), "Exchange") > 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS customer_bkt")
-
-
 def test_semdedup_assignment_broadcast_cluster_pair_join(spark, sf_dir):
     # SemDeDup's scale contract: centroid assignment is a broadcast
     # projection (corpus never shuffled to be assigned), the pair join is

@@ -86,8 +86,6 @@ def test_ingest_sink_crash_replay_never_duplicates(spark, tmp_path, fail_point):
     store at exactly the batch melt — a bare mode('append') in
     foreachBatch would duplicate the replayed batch's rows — and leave no
     protocol debris behind."""
-    import os
-
     from time_series_and_data_lakes_spark.sources import commit
 
     rows = sensor_readings(seed=7, sensors=3, span_seconds=45)
@@ -117,14 +115,110 @@ def test_ingest_sink_crash_replay_never_duplicates(spark, tmp_path, fail_point):
 
     q2 = run()
     q2.awaitTermination(120)
+    _assert_store_is_batch_melt(spark, store, ckpt, rows)
+
+
+def _assert_store_is_batch_melt(spark, store, ckpt, rows):
+    """Every row exactly once, and no protocol debris left behind."""
+    import os
+
     got = spark.read.parquet(store)
-    assert got.count() == len(rows)  # every row exactly once
+    assert got.count() == len(rows)
     assert got.select("sensor_id", "time", "measure_name").distinct().count() == len(
         rows
     )
-    assert not [d for d in os.listdir(store) if d.startswith(".staging-ingest-")]
+    assert not [d for d in os.listdir(store) if d.startswith(".staging")]
     staged_dir = os.path.join(ckpt, "staged_batches")
     assert not os.path.isdir(staged_dir) or not os.listdir(staged_dir)
+
+
+def test_ingest_sink_ledger_prunes_and_respects_foreign_entries(spark, tmp_path):
+    """The commit ledger's housekeeping: (a) the applied-batches marker
+    ledger must not grow one file per micro-batch forever — markers for
+    batches the engine can no longer replay are pruned; (b) the debris
+    sweep deletes ONLY the sink's own staging dirs — a foreign entry in
+    the store (a user's nested checkpoint, a _delta_log) is not ours to
+    delete."""
+    import os
+
+    rows = sensor_readings(seed=11, sensors=3, span_seconds=45)
+    src = _write_json_batches(tmp_path, rows, n_batches=3)
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(os.path.join(store, "_foreign"))
+    with open(os.path.join(store, "_foreign", "keep.txt"), "w") as f:
+        f.write("not yours")
+    os.makedirs(os.path.join(store, ".staging-ingest-99", "measure_name=x"))
+
+    q = start_narrow_store_sink(
+        melt_stream(read_json_stream(spark, src, max_files_per_trigger=1)),
+        store,
+        ckpt,
+    )
+    q.awaitTermination(120)
+
+    assert os.path.exists(os.path.join(store, "_foreign", "keep.txt"))
+    markers = [
+        m
+        for m in os.listdir(os.path.join(ckpt, "applied_batches"))
+        if not m.startswith(".")  # local-FS checksum sidecars
+    ]
+    assert len(markers) == 1, markers  # 3 micro-batches ran, 1 marker kept
+    _assert_store_is_batch_melt(spark, store, ckpt, rows)
+
+
+def test_ingest_sink_survives_randomized_multi_crash_schedule(spark, tmp_path):
+    """The parametrized crash test injects ONE fault per run; real
+    failures compound — a batch that crashed mid-stage can crash again
+    after-install on its own replay, walking protocol paths no single
+    injection reaches (install of a stale staging, cleanup of a twice-
+    replayed batch). Drive the sink through a seeded random schedule of
+    crashes across restarts and require the final store to hold every row
+    exactly once, with no protocol debris."""
+    from time_series_and_data_lakes_spark.sources import commit
+
+    rows = sensor_readings(seed=13, sensors=3, span_seconds=60)
+    src = _write_json_batches(tmp_path, rows, n_batches=4)
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        return start_narrow_store_sink(
+            melt_stream(read_json_stream(spark, src, max_files_per_trigger=1)),
+            store,
+            ckpt,
+        )
+
+    points = [
+        "mid_stage",
+        "after_stage",
+        "mid_install",
+        "after_install",
+        "before_cleanup",
+    ]
+    rng = random.Random(20260814)
+    schedule = [rng.choice(points) for _ in range(6)]
+
+    for fail_point in schedule:
+        commit._FAIL_POINT = fail_point
+        try:
+            q = run()
+            # the injected point may sit on a path this replay skips
+            # (e.g. mid_stage when the batch is already staged) — then
+            # the run simply drains; both outcomes are legal protocol
+            # walks and the next restart continues the schedule.
+            try:
+                q.awaitTermination(120)
+            except Exception as e:
+                assert "injected sink crash" in str(e)
+        finally:
+            commit._FAIL_POINT = None
+            for active in spark.streams.active:
+                active.stop()
+
+    # final clean run drains whatever the crash walk left behind
+    run().awaitTermination(180)
+    _assert_store_is_batch_melt(spark, store, ckpt, rows)
 
 
 def _write_kafka_shaped_batches(spark, tmp_path, rows, n_batches=4):
@@ -613,9 +707,8 @@ def _data_batches(q) -> int:
 def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
     """The CEP operator derives the key output field's name AND type from
     the input stream: a bigint device key used to hit the hardcoded
-    sensor_id:string first field and crash the Arrow conversion — the
-    same defect fixed in analytics_stream's _keyed_output_schema. Three
-    micro-batches carry candidates from one batch's state into the next,
+    sensor_id:string first field and crash the Arrow conversion
+    (``cep_stream._keyed_output_schema``). Three micro-batches carry candidates from one batch's state into the next,
     including one for a null key and one for an id past 2**53."""
     import os
 
@@ -703,125 +796,6 @@ def test_streaming_cep_integer_key_schema_runs(spark, tmp_path):
     assert got == want
     assert [r[3] for r in got if r[0] is None] == ["OK"]
     assert [r[3] for r in want if r[0] == big] == ["WARNING"]
-
-
-def test_stream_dedup_equals_batch_distinct(spark, tmp_path):
-    # Streaming exact dedup (dropDuplicatesWithinWatermark) must equal the
-    # batch answer on a replay with injected re-deliveries and
-    # content-duplicates-under-fresh-ids.
-    from time_series_and_data_lakes_spark.streaming.dedup_stream import (
-        dedup_stream_by_content,
-        dedup_stream_by_id,
-    )
-
-    rows = sensor_readings(seed=5, sensors=4, span_seconds=60)
-    dup_ids = rows + rows[::3]  # re-deliveries of every 3rd record
-    src = _write_json_batches(tmp_path, dup_ids, n_batches=5)
-
-    wide = read_json_stream(spark, src).select(
-        "sensor_id",
-        F.timestamp_millis("event_time").alias("time"),
-        "status",
-        "temperature",
-    )
-
-    by_id = dedup_stream_by_id(wide, ["sensor_id", "time"], watermark="10 minutes")
-    q = (
-        by_id.writeStream.format("memory")
-        .queryName("dedup_by_id")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("dedup_by_id")
-    assert got.count() == len(rows)  # every re-delivery dropped
-    assert got.groupBy("sensor_id", "time").count().filter("count > 1").count() == 0
-
-    by_content = dedup_stream_by_content(
-        wide, ["sensor_id", "time", "status", "temperature"], watermark="10 minutes"
-    )
-    q2 = (
-        by_content.writeStream.format("memory")
-        .queryName("dedup_by_content")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = spark.table("dedup_by_content")
-    assert got2.count() == len(rows)
-    # the fingerprint helper column must not leak into the output schema
-    assert "__content_fp" not in got2.columns
-
-
-def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
-    # Alerts (ERROR readings) joined back to the raw feed for context
-    # readings within +-30s per sensor — the streaming counterpart of the
-    # batch range join; result must equal the same join done statically.
-    from time_series_and_data_lakes_spark.streaming.joins import (
-        interval_join_streams,
-    )
-
-    rows = sensor_readings(seed=9, sensors=5, span_seconds=120)
-    src = _write_json_batches(tmp_path, rows, n_batches=4)
-
-    def typed(df):
-        return df.select(
-            "sensor_id",
-            F.timestamp_millis("event_time").alias("time"),
-            "status",
-            "temperature",
-        )
-
-    wide = typed(read_json_stream(spark, src))
-    alerts = wide.filter(F.col("status") == "ERROR").select(
-        "sensor_id", F.col("time").alias("alert_time")
-    )
-    context = wide.select(
-        "sensor_id", F.col("time").alias("ctx_time"), "temperature"
-    )
-    joined = interval_join_streams(
-        alerts, context, key="sensor_id",
-        left_time="alert_time", right_time="ctx_time",
-        lower="INTERVAL 30 SECONDS", upper="INTERVAL 30 SECONDS",
-        watermark="10 minutes",
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(tuple(r) for r in spark.table("ss_join").collect())
-
-    batch = spark.createDataFrame(
-        [
-            (r["sensor_id"], dt.datetime.utcfromtimestamp(r["event_time"] / 1000.0),
-             r["status"], r["temperature"])
-            for r in rows
-        ],
-        "sensor_id string, time timestamp, status string, temperature double",
-    )
-    b_alerts = batch.filter(F.col("status") == "ERROR").select(
-        "sensor_id", F.col("time").alias("alert_time")
-    )
-    b_ctx = batch.select("sensor_id", F.col("time").alias("ctx_time"), "temperature")
-    want = sorted(
-        tuple(r)
-        for r in b_alerts.alias("l")
-        .join(
-            b_ctx.alias("r"),
-            (F.col("l.sensor_id") == F.col("r.sensor_id"))
-            & (F.col("r.ctx_time") >= F.expr("l.alert_time - INTERVAL 30 SECONDS"))
-            & (F.col("r.ctx_time") <= F.expr("l.alert_time + INTERVAL 30 SECONDS")),
-        )
-        .drop(F.col("r.sensor_id"))
-        .collect()
-    )
-    assert got == want and len(got) > 0
 
 
 def test_kafka_reader_option_contract():
@@ -1069,295 +1043,6 @@ def test_stream_static_enrichment_join_equals_batch(spark, tmp_path):
     pairs = {(r["sensor_id"], r["customer_id"]) for r in got.collect()}
     want = {(r["sensor_id"], r["customer_id"]) for r in dim.collect() if int(r["sensor_id"][-2:]) < 5}
     assert pairs == want
-
-
-def test_streaming_cdc_upsert_equals_batch_apply(spark, tmp_path):
-    # CDC apply: a stream of change rows upserts into the partitioned
-    # store micro-batch by micro-batch; the final store must equal the
-    # one-shot batch application of all changes.
-    from time_series_and_data_lakes_spark.sources.merge import (
-        merge_upsert,
-        start_cdc_upsert_sink,
-    )
-
-    base = spark.createDataFrame(
-        [(i, f"d{i % 3}", float(i), "base") for i in range(30)],
-        "id bigint, part string, value double, tag string",
-    )
-    stream_store = str(tmp_path / "stream_store")
-    batch_store = str(tmp_path / "batch_store")
-    merge_upsert(spark, stream_store, base, ["id"], ["part"])
-    merge_upsert(spark, batch_store, base, ["id"], ["part"])
-
-    changes = [
-        (0, "d0", 100.0, "chg"),
-        (40, "d1", 400.0, "chg"),
-        (7, "d1", 700.0, "chg"),
-        (41, "d2", 410.0, "chg"),
-    ]
-    src = str(tmp_path / "changes")
-    for i, row in enumerate(changes):  # one file per change -> several batches
-        spark.createDataFrame([row], base.schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = start_cdc_upsert_sink(
-        stream, stream_store, ["id"], ["part"], str(tmp_path / "cdc_ckpt")
-    )
-    q.awaitTermination(120)
-
-    merge_upsert(
-        spark,
-        batch_store,
-        spark.createDataFrame(changes, base.schema),
-        ["id"],
-        ["part"],
-    )
-    got = {tuple(r) for r in spark.read.parquet(stream_store).collect()}
-    want = {tuple(r) for r in spark.read.parquet(batch_store).collect()}
-    assert got == want and len(got) == 32
-
-
-def test_streaming_ewma_equals_batch_fold(spark, tmp_path):
-    # Continuous per-key EWMA (O(1) state) must equal the batch sequential
-    # fold BIT-EXACTLY on a time-ordered replay split across micro-batches.
-    from time_series_and_data_lakes_spark.streaming.analytics_stream import (
-        ewma_stream,
-    )
-
-    rows = sensor_readings(seed=21, sensors=4, span_seconds=40)
-    src = _write_json_batches(tmp_path, rows, n_batches=5)
-
-    wide = read_json_stream(spark, src)
-    out = ewma_stream(
-        wide.select("sensor_id", "event_time", "temperature"),
-        alpha=0.2,
-        time_col="event_time",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ewma_live")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # last emission per key = the final running value
-    final = {}
-    for r in spark.sql("SELECT * FROM ewma_live").collect():
-        k = r["sensor_id"]
-        if k not in final or r["n_obs"] > final[k][0]:
-            final[k] = (r["n_obs"], r["ewma"])
-
-    batch = spark.createDataFrame(
-        [
-            (r["sensor_id"], r["event_time"], float(r["temperature"]))
-            for r in rows
-        ],
-        "sensor_id string, event_ms long, temperature double",
-    )
-    arr = F.array_sort(
-        F.collect_list(F.struct(F.col("event_ms").alias("t"), F.col("temperature")))
-    )
-    fold = F.aggregate(
-        arr,
-        F.lit(None).cast("double"),
-        lambda acc, p: F.when(acc.isNull(), p["temperature"]).otherwise(
-            F.lit(0.2) * p["temperature"] + F.lit(0.8) * acc
-        ),
-    )
-    want = {
-        r["sensor_id"]: (r["n"], r["e"])
-        for r in batch.groupBy("sensor_id")
-        .agg(F.count(F.lit(1)).alias("n"), fold.alias("e"))
-        .collect()
-    }
-    assert final == want  # counts AND doubles bit-exact
-
-
-def test_streaming_ewma_orders_across_arrow_chunks_and_typed_keys(spark, tmp_path):
-    """A key whose batch exceeds arrow.maxRecordsPerBatch arrives as
-    MULTIPLE pandas chunks; sorting each chunk alone violates event-time
-    order across chunk boundaries and silently corrupts the fold. Also
-    pins the key-typed output schema: an integer key used to crash the
-    Arrow conversion against the hardcoded sensor_id:string field."""
-    import json as _json
-
-    from time_series_and_data_lakes_spark.streaming.analytics_stream import (
-        ewma_stream,
-    )
-
-    rng = random.Random(5)
-    rows = [
-        {"device_id": d, "event_time": t, "temperature": float(d * 100 + i)}
-        for d in (1, 2)
-        for i, t in enumerate(rng.sample(range(1_000_000, 1_000_060), 60))
-    ]
-    rng.shuffle(rows)  # one file, deliberately unsorted
-    src = tmp_path / "chunked"
-    src.mkdir()
-    with open(src / "b0.json", "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        wide = (
-            spark.readStream.schema(
-                "device_id bigint, event_time long, temperature double"
-            )
-            .json(str(src))
-            .select("device_id", "event_time", "temperature")
-        )
-        out = ewma_stream(wide, alpha=0.25, key="device_id", time_col="event_time")
-        assert dict(out.dtypes)["device_id"] == "bigint"  # key-typed schema
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ewma_chunked")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-
-    final = {}
-    for r in spark.sql("SELECT * FROM ewma_chunked").collect():
-        k = r["device_id"]
-        if k not in final or r["n_obs"] > final[k][0]:
-            final[k] = (r["n_obs"], r["ewma"])
-    # batch fold over the time-sorted rows — bit-exact expectation
-    want = {}
-    for d in (1, 2):
-        acc, n = None, 0
-        for r in sorted(
-            (r for r in rows if r["device_id"] == d), key=lambda r: r["event_time"]
-        ):
-            x = r["temperature"]
-            acc = x if acc is None else 0.25 * x + 0.75 * acc
-            n += 1
-        want[d] = (n, acc)
-    assert final == want
-
-
-def test_streaming_holt_equals_batch_fold(spark, tmp_path):
-    from time_series_and_data_lakes_spark.streaming.analytics_stream import (
-        holt_stream,
-    )
-
-    rows = sensor_readings(seed=31, sensors=3, span_seconds=30)
-    src = _write_json_batches(tmp_path, rows, n_batches=4)
-    out = holt_stream(
-        read_json_stream(spark, src).select("sensor_id", "event_time", "temperature"),
-        alpha=0.3,
-        gamma=0.1,
-        time_col="event_time",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("holt_live")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    final = {}
-    for r in spark.sql("SELECT * FROM holt_live").collect():
-        k = r["sensor_id"]
-        if k not in final or r["n_obs"] > final[k][0]:
-            final[k] = (r["n_obs"], r["holt_level"], r["holt_trend"])
-
-    # python replay in event order (the batch fold's association)
-    series = {}
-    for r in sorted(rows, key=lambda r: (r["sensor_id"], r["event_time"])):
-        series.setdefault(r["sensor_id"], []).append(float(r["temperature"]))
-    want = {}
-    for k, vals in series.items():
-        l, b = vals[0], 0.0
-        for x in vals[1:]:
-            lp = 0.3 * x + 0.7 * (l + b)
-            b = 0.1 * (lp - l) + 0.9 * b
-            l = lp
-        want[k] = (len(vals), l, b)
-    assert final == want
-
-
-def test_streaming_smoothers_skip_null_measurements(spark, tmp_path):
-    # Streaming twin of the batch fold family's null contract (see
-    # queries._bounded_obs): a null measurement is NO observation — the
-    # smoother skips it rather than restarting (EWMA) or poisoning state to
-    # NaN (both, via the Arrow float64 batch). Nulls ride a real JSON
-    # stream here, so they arrive exactly as production tombstone readings
-    # would.
-    from time_series_and_data_lakes_spark.streaming.analytics_stream import (
-        ewma_stream,
-        holt_stream,
-    )
-
-    rows = sensor_readings(seed=77, sensors=3, span_seconds=30)
-    for i, r in enumerate(rows):
-        if i % 4 == 1:  # every 4th reading loses its measurement
-            r["temperature"] = None
-    src = _write_json_batches(tmp_path, rows, n_batches=5)
-
-    wide = read_json_stream(spark, src).select(
-        "sensor_id", "event_time", "temperature"
-    )
-    for name, out in (
-        ("ewma_nulls", ewma_stream(wide, alpha=0.2, time_col="event_time")),
-        (
-            "holt_nulls",
-            holt_stream(wide, alpha=0.3, gamma=0.1, time_col="event_time"),
-        ),
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    series = {}
-    for r in sorted(rows, key=lambda r: (r["sensor_id"], r["event_time"])):
-        if r["temperature"] is not None:
-            series.setdefault(r["sensor_id"], []).append(float(r["temperature"]))
-
-    final = {}
-    for r in spark.sql("SELECT * FROM ewma_nulls").collect():
-        k = r["sensor_id"]
-        if k not in final or r["n_obs"] > final[k][0]:
-            final[k] = (r["n_obs"], r["ewma"])
-    want = {}
-    for k, vals in series.items():
-        acc = None
-        for x in vals:
-            acc = x if acc is None else 0.2 * x + 0.8 * acc
-        want[k] = (len(vals), acc)
-    assert final == want  # n_obs counts only real observations
-
-    final = {}
-    for r in spark.sql("SELECT * FROM holt_nulls").collect():
-        k = r["sensor_id"]
-        if k not in final or r["n_obs"] > final[k][0]:
-            final[k] = (r["n_obs"], r["holt_level"], r["holt_trend"])
-    want = {}
-    for k, vals in series.items():
-        l, b = vals[0], 0.0
-        for x in vals[1:]:
-            lp = 0.3 * x + 0.7 * (l + b)
-            b = 0.1 * (lp - l) + 0.9 * b
-            l = lp
-        want[k] = (len(vals), l, b)
-    assert final == want
 
 
 def test_kafka_broker_smoke(spark, tmp_path):
@@ -1770,105 +1455,3 @@ def test_streaming_cep_micro_batches_compile_no_code(spark, tmp_path):
     finally:
         q.stop()
     assert spark.table("cep_codegen").count() > 0
-
-
-def test_smoother_state_ttl_evicts_silent_keys_outputs_unchanged(
-    spark, tmp_path
-):
-    """EWMA/Holt silent-key eviction: state row count shrinks, but every
-    emitted row is identical to the no-TTL run for keys that never resume
-    (each emission already carries the full accumulator, so the last row
-    is the evicted key's durable checkpoint)."""
-    import time as _time
-
-    from time_series_and_data_lakes_spark.streaming.analytics_stream import (
-        ewma_stream,
-        holt_stream,
-    )
-
-    base = 1_700_000_000_000
-    phase1 = [
-        {"sensor_id": k, "event_time": base + i * 100, "temperature": float(v)}
-        for k, vals in {"a": [1, 2, 3], "b": [10, 20]}.items()
-        for i, v in enumerate(vals)
-    ]
-    phase2 = [
-        {"sensor_id": "a", "event_time": base + 1000, "temperature": 4.0},
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    with open(src / "b0.json", "w") as f:
-        for r in phase1:
-            f.write(json.dumps(r) + "\n")
-
-    out = ewma_stream(
-        read_json_stream(spark, str(src), max_files_per_trigger=1).select(
-            "sensor_id", "event_time", "temperature"
-        ),
-        alpha=0.2,
-        time_col="event_time",
-        state_ttl="INTERVAL 2 SECONDS",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ewma_ttl")
-        .outputMode("update")
-        .trigger(processingTime="250 milliseconds")
-        .start()
-    )
-    try:
-        b_held = _await_state_rows(q, 2)
-        assert b_held is not None
-        # TTL lapses for both silent keys -> both accumulators evicted
-        b_evicted = _await_state_rows(q, 0, after_batch=b_held)
-        assert b_evicted is not None
-        with open(src / "b1.json", "w") as f:
-            for r in phase2:
-                f.write(json.dumps(r) + "\n")
-        assert (  # a re-armed post-eviction
-            _await_state_rows(q, 1, after_batch=b_evicted) is not None
-        )
-        deadline = _time.time() + 60
-        while (
-            spark.table("ewma_ttl").filter(F.col("n_obs") == 1).count() == 0
-            and _time.time() < deadline
-        ):
-            _time.sleep(0.5)
-    finally:
-        q.stop()
-
-    rows_by_key = {}
-    for r in spark.table("ewma_ttl").collect():
-        rows_by_key.setdefault(r["sensor_id"], set()).add((r["n_obs"], r["ewma"]))
-    # b (never resumed): emissions identical to the no-TTL fold over its
-    # rows — the last one is its durable checkpoint
-    assert rows_by_key["b"] == {(2, 0.2 * 20.0 + 0.8 * 10.0)}
-    # a: phase-1 fold of [1,2,3], then the documented stale-smoother
-    # reset — the evicted key restarts its fold at phase-2's first value
-    assert (3, 0.2 * 3.0 + 0.8 * (0.2 * 2.0 + 0.8 * 1.0)) in rows_by_key["a"]
-    assert (1, 4.0) in rows_by_key["a"]
-
-    # Holt twin: same eviction contract, smoke the wiring only
-    out_h = holt_stream(
-        read_json_stream(spark, str(src), max_files_per_trigger=1).select(
-            "sensor_id", "event_time", "temperature"
-        ),
-        time_col="event_time",
-        state_ttl="INTERVAL 2 SECONDS",
-    )
-    qh = (
-        out_h.writeStream.format("memory")
-        .queryName("holt_ttl")
-        .outputMode("update")
-        .trigger(processingTime="250 milliseconds")
-        .start()
-    )
-    try:
-        # both keys fold b0+b1 in-place, then go silent -> full eviction
-        bh = _await_state_rows(qh, 2, timeout=90)
-        assert bh is not None
-        assert _await_state_rows(qh, 0, timeout=90, after_batch=bh) is not None
-    finally:
-        qh.stop()
-    assert spark.table("holt_ttl").count() > 0
-

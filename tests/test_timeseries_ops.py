@@ -299,7 +299,7 @@ def test_interval_parser_rejects_malformed_strings_descriptively():
 def test_interval_parser_rejects_nonfinite_and_nonpositive_quantities():
     """Review-found: 'inf hours' overflowed int(), 'nan days' raised the
     cryptic float-NaN error, and '0 seconds' passed validation only to
-    divide-by-zero later in pick_level / time_bin."""
+    divide-by-zero later in time_bin."""
     import pytest
 
     from time_series_and_data_lakes_spark.operators.timeseries import (

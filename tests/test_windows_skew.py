@@ -1,200 +1,6 @@
-"""Tests: event-time windowed streaming stats (watermark + late data) and
-the salted skew-safe aggregation."""
+"""Tests: operators under maximal key skew."""
 
 from __future__ import annotations
-
-import json
-
-from pyspark.sql import functions as F
-
-from tests.fixtures import sensor_readings
-from tests.test_streaming import _write_json_batches
-from time_series_and_data_lakes_spark.operators.skew import salted_agg
-from time_series_and_data_lakes_spark.streaming import read_json_stream
-from time_series_and_data_lakes_spark.streaming.windows import windowed_stats_stream
-
-
-def test_windowed_stats_stream_matches_batch(spark, tmp_path):
-    rows = sensor_readings(seed=11, sensors=4, span_seconds=300)
-    src = _write_json_batches(tmp_path, rows, n_batches=5)
-    typed = read_json_stream(spark, src).select(
-        "sensor_id", F.timestamp_millis("event_time").alias("time"), "temperature"
-    )
-    # watermark must advance past window ends between micro-batches for
-    # append mode to emit: 10 s delay against 60 s of events per batch
-    q = (
-        windowed_stats_stream(typed, window="30 seconds", watermark="10 seconds")
-        .writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["sensor_id"], r["window_start"]): (r["n_readings"], r["max_value"])
-        for r in spark.table("win_out").collect()
-    }
-
-    batch = spark.createDataFrame(
-        [(r["sensor_id"], r["event_time"], r["temperature"]) for r in rows],
-        "sensor_id string, event_time long, temperature double",
-    ).select("sensor_id", F.timestamp_millis("event_time").alias("time"), "temperature")
-    want = {
-        (r["sensor_id"], r["window_start"]): (r["n_readings"], r["max_value"])
-        for r in batch.groupBy(F.window("time", "30 seconds").alias("win"), "sensor_id")
-        .agg(F.count("*").alias("n_readings"), F.max("temperature").alias("max_value"))
-        .select(F.col("win.start").alias("window_start"), "sensor_id", "n_readings", "max_value")
-        .collect()
-    }
-    # append mode emits only watermark-finalized windows — every emitted
-    # window must match the batch answer, and most windows must have emitted
-    assert got and all(got[k] == want[k] for k in got)
-    assert len(got) >= len(want) // 2
-
-
-def test_salted_agg_equals_direct(spark):
-    # heavy skew: key 'hot' has 50x the rows
-    rows = [("hot", float(i % 97)) for i in range(5000)] + [
-        (f"k{i % 20}", float(i % 31)) for i in range(1000)
-    ]
-    df = spark.createDataFrame(rows, "k string, v double")
-    got = {
-        r["k"]: (r["n"], r["total"], round(r["mean"], 9), r["lo"], r["hi"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            {
-                "n": ("count", "v"),
-                "total": ("sum", "v"),
-                "mean": ("avg", "v"),
-                "lo": ("min", "v"),
-                "hi": ("max", "v"),
-            },
-            salt_buckets=16,
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["n"], r["total"], round(r["mean"], 9), r["lo"], r["hi"])
-        for r in df.groupBy("k")
-        .agg(
-            F.count("v").alias("n"),
-            F.sum("v").alias("total"),
-            F.avg("v").alias("mean"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_salted_agg_salt_is_deterministic_row_function(spark):
-    # the salt must be a pure function of row content: a nondeterministic
-    # salt (monotonically_increasing_id / rand) re-salts rows differently
-    # when a lost shuffle-map task recomputes, double-counting or losing
-    # rows in the partial aggregates (SPARK-23207 class)
-    import pytest
-
-    from time_series_and_data_lakes_spark.operators.skew import salted_agg
-
-    df = spark.createDataFrame(
-        [("k", float(i)) for i in range(200)], "k string, v double"
-    )
-    salted = df.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(16)),
-    )
-    a = sorted(map(tuple, salted.collect()))
-    b = sorted(map(tuple, salted.repartition(7).collect()))
-    assert a == b  # same rows -> same salts under any partitioning
-    with pytest.raises(ValueError, match="salt_buckets"):
-        salted_agg(df, ["k"], {"n": ("count", "v")}, salt_buckets=0)
-
-
-def test_sliding_stats_stream_matches_batch(spark, tmp_path):
-    from time_series_and_data_lakes_spark.streaming.windows import sliding_stats_stream
-
-    rows = sensor_readings(seed=21, sensors=4, span_seconds=300)
-    src = _write_json_batches(tmp_path, rows, n_batches=5)
-    typed = read_json_stream(spark, src).select(
-        "sensor_id", F.timestamp_millis("event_time").alias("time"), "temperature"
-    )
-    q = (
-        sliding_stats_stream(
-            typed, window="60 seconds", slide="20 seconds", watermark="10 seconds"
-        )
-        .writeStream.format("memory")
-        .queryName("slide_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["sensor_id"], r["window_start"]): (r["n_readings"], r["max_value"])
-        for r in spark.table("slide_out").collect()
-    }
-
-    batch = spark.createDataFrame(
-        [(r["sensor_id"], r["event_time"], r["temperature"]) for r in rows],
-        "sensor_id string, event_time long, temperature double",
-    ).select("sensor_id", F.timestamp_millis("event_time").alias("time"), "temperature")
-    want = {
-        (r["sensor_id"], r["window_start"]): (r["n_readings"], r["max_value"])
-        for r in batch.groupBy(
-            F.window("time", "60 seconds", "20 seconds").alias("win"), "sensor_id"
-        )
-        .agg(F.count("*").alias("n_readings"), F.max("temperature").alias("max_value"))
-        .select(F.col("win.start").alias("window_start"), "sensor_id", "n_readings", "max_value")
-        .collect()
-    }
-    assert got and all(got[k] == want[k] for k in got)
-    assert len(got) >= len(want) // 2
-
-
-def test_session_stats_stream_matches_batch(spark, tmp_path):
-    from time_series_and_data_lakes_spark.streaming.windows import session_stats_stream
-
-    rows = sensor_readings(seed=23, sensors=4, span_seconds=300)
-    src = _write_json_batches(tmp_path, rows, n_batches=5)
-    typed = read_json_stream(spark, src).select(
-        "sensor_id", F.timestamp_millis("event_time").alias("time"), "temperature"
-    )
-    q = (
-        session_stats_stream(typed, gap="3 seconds", watermark="10 seconds")
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["sensor_id"], r["session_start"]): (r["n_readings"], r["session_end"])
-        for r in spark.table("sess_out").collect()
-    }
-
-    batch = spark.createDataFrame(
-        [(r["sensor_id"], r["event_time"], r["temperature"]) for r in rows],
-        "sensor_id string, event_time long, temperature double",
-    ).select("sensor_id", F.timestamp_millis("event_time").alias("time"), "temperature")
-    want = {
-        (r["sensor_id"], r["session_start"]): (r["n_readings"], r["session_end"])
-        for r in batch.groupBy(
-            F.session_window("time", "3 seconds").alias("win"), "sensor_id"
-        )
-        .agg(F.count("*").alias("n_readings"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "sensor_id",
-            "n_readings",
-        )
-        .collect()
-    }
-    assert got and all(got[k] == (want[k][0], want[k][1]) for k in got)
-    assert len(got) >= len(want) // 2
 
 
 def test_semantic_dedup_survives_one_giant_cluster(spark):

@@ -141,79 +141,6 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
 MERSENNE_61 = (1 << 61) - 1
 
 
-def minhash_signature(text: Column, num_hashes: int = 8, shingle_n: int = 3) -> Column:
-    """Per-document minhash signature as an array<bigint>: shingles are
-    md5-hashed ONCE JVM-side (31-bit reduced), then the universal-hash
-    family minima are computed per Arrow batch with vectorized numpy —
-    identical integer semantics to the SQL oracle formulation
-    ``min((a_j * x + b_j) % (2^61-1))``, without num_hashes interpreted
-    array folds per row. Empty shingle sets yield all-null signatures."""
-    params = minhash_params(num_hashes)
-    A = np.array([a for a, _ in params], dtype=np.int64)
-    B = np.array([b for _, b in params], dtype=np.int64)
-
-    @F.pandas_udf("array<bigint>")
-    def mins(hs: pd.Series) -> pd.Series:
-        out = []
-        for arr in hs:
-            x = np.asarray(arr, dtype=np.int64)
-            if x.size == 0:
-                out.append([None] * len(A))
-            else:
-                # a < 2^30, x < 2^31 → a*x + b < 2^62: no int64 overflow
-                h = (A[:, None] * x[None, :] + B[:, None]) % MERSENNE_61
-                out.append(h.min(axis=1).tolist())
-        return pd.Series(out)
-
-    return mins(
-        let(
-            shingles_col(text, shingle_n),
-            lambda sh: F.transform(sh, lambda s: F.pmod(h64(s, 0), F.lit(1 << 31))),
-        )
-    )
-
-
-def lsh_bands(sig: Column, bands: int = 4, rows_per_band: int = 2) -> Column:
-    """Band signatures: md5 of 'band_index|mh1,mh2' — a doc pair collides on
-    a band iff that band's minhashes all agree. The signature is let-bound so
-    it is computed once, not once per band reference.
-
-    A shingle-less document (shorter than the shingle width, or null text)
-    carries an all-null signature and gets an EMPTY band array — it can
-    never be a candidate, matching the fused path inside
-    :func:`minhash_lsh_dedup`. (concat_ws silently drops nulls, so without
-    the guard every short doc would share the identical band md5 in every
-    band: at corpus scale one hot bucket holding millions of titles and
-    one-liners, and a quadratic all-pairs blowup inside it.)"""
-    return let(
-        sig,
-        lambda mh: F.when(
-            F.element_at(mh, 1).isNull(), F.array().cast("array<string>")
-        ).otherwise(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            "",
-                            F.lit(f"{b}|"),
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at(
-                                        mh, b * rows_per_band + r + 1
-                                    ).cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            ),
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ),
-    )
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -23,16 +23,13 @@ The codec layer:
 - ``tsdl-fake``: deterministic fake header layout for oracle-gated tests.
 - anything else (compressed images such as PNG/GIF/JPEG, compressed
   audio / video codecs): explicit ``NotImplementedError``, so
-  ``on_error='skip'`` drops such rows and :func:`media_errors` reports
-  them as ``unsupported``.
+  ``on_error='skip'`` drops such rows.
 
 Scale notes: ``mapInPandas`` streams Arrow record batches through Python
 without materializing a partition; ``spark.sql.execution.arrow.
 maxRecordsPerBatch`` bounds peak memory per batch, so executor memory sizing
 is independent of blob sizes × partition row counts. Blobs stay opaque bytes
-end-to-end (no JVM<->Python string copies), and feature extraction emits
-fixed-width vectors so downstream similarity ops (:mod:`.similarity`) apply
-unchanged.
+end-to-end (no JVM<->Python string copies).
 """
 
 from __future__ import annotations
@@ -266,20 +263,20 @@ def _decode_payload(payload: bytes, codec: str) -> tuple[int, int, int]:
     if codec is None:
         # a null meta struct carries no codec: corrupt ROW metadata (the
         # payload may be fine) — the contract ValueError, absorbed by
-        # on_error='skip' and reported by media_errors
+        # on_error='skip'
         raise ValueError("null meta struct: row carries no codec")
     if codec == "tsdl-fake":
         if payload[:4] != _MAGIC:
             # wrong magic is corrupt DATA — returning (0, 0, 0) here used
             # to let _transcode_resize 'repair' the payload into a valid
-            # zero-dim header and media_errors never flagged the row
+            # zero-dim header and no error policy ever saw the row
             raise ValueError(
                 f"not a tsdl-fake payload (magic {bytes(payload[:4])!r})"
             )
         if len(payload) < 10:
             # magic present but header cut: corrupt data, and it must be
             # the contract ValueError — a struct.error here escapes
-            # on_error='skip' AND crashes media_errors (review-found)
+            # on_error='skip'
             raise ValueError(
                 f"truncated tsdl-fake header ({len(payload)} of 10 bytes)"
             )
@@ -334,9 +331,9 @@ def _avi_dims(b: bytes) -> tuple[int, int, int]:
 def _codec_of(m) -> str | None:
     """Null-safe codec extraction from the (nullable) meta struct: a bare
     ``m['codec']`` map raises TypeError on a null meta — which no error
-    policy absorbs, so one such row crashed every operator INCLUDING the
-    media_errors audit. None propagates into the row function, whose
-    decode raises the contract ValueError instead."""
+    policy absorbs, so one such row crashed every operator. None
+    propagates into the row function, whose decode raises the contract
+    ValueError instead."""
     return m["codec"] if m is not None else None
 
 
@@ -356,15 +353,12 @@ def _row_attempt(on_error: str, fn, *args):
     one bad image must cost one row, not the job. Only the decode
     contract's errors are absorbed (ValueError = corrupt data,
     NotImplementedError = unsupported feature); anything else is a real
-    bug and still propagates. :func:`media_errors` is the audit
-    companion — it reports every row whose CONTENT is undecodable; an
-    op-level 'skip' can drop strictly more (see its docstring).
+    bug and still propagates.
 
     A NULL payload (always ``fn``'s first argument) is NO media — absence,
     not corruption: the row is skipped under BOTH policies, the same
     contract as a null measurement or a null document text; 'fail' stays
-    reserved for bytes that exist but lie. :func:`media_errors` reports
-    null payloads so corpus audits still see them.
+    reserved for bytes that exist but lie.
 
     Returns ``None`` for a skipped row (no decoder here returns None, so
     the sentinel is unambiguous — an ``object()`` sentinel would lose
@@ -433,39 +427,6 @@ def decode_media(
     return df.mapInPandas(decode, schema=DECODED_SCHEMA)
 
 
-FEATURE_DIM = 16
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Deterministic fake feature extraction: byte-histogram folded to a
-    FEATURE_DIM vector — the real embedding model slots in here. Output
-    shape matches the ``embeddings`` table so similarity ops compose."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["payload"]:
-                # vectorized: one interpreted iteration PER PAYLOAD BYTE
-                # is minutes of pure Python per GB at corpus scale; the
-                # bincount computes the identical histogram
-                hist = np.bincount(
-                    np.frombuffer(p, np.uint8) % FEATURE_DIM,
-                    minlength=FEATURE_DIM,
-                )
-                total = int(hist.sum()) or 1
-                rows.append([float(v) / total for v in hist])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": rows})
-
-    return df.mapInPandas(feats, schema=FEATURES_SCHEMA)
-
-
 def _resize_dims(w: int, h: int, max_w: int, max_h: int) -> tuple[int, int]:
     """Aspect-preserving fit in pure integer arithmetic (floor division),
     so the resize plan is reproducible in the SQL oracle bit-for-bit.
@@ -528,7 +489,7 @@ def resize_media(
     (default — integer index mapping, oracle-reproducible) or ``'area'``
     (exact-integer box filter, the anti-aliased downscale for training
     corpora — :func:`area_resize`). Output is the same media schema, so
-    resizes chain with decode/feature/frame ops. ``on_error='skip'``
+    resizes chain with decode/stats/frame ops. ``on_error='skip'``
     drops untranscodable rows (see :func:`_row_attempt`)."""
     _check_on_error(on_error)
     if method not in _RESAMPLERS:
@@ -975,9 +936,9 @@ def avi_decode(payload: bytes) -> tuple[int, "np.ndarray"]:
     # ITERATIVE chunk walk (explicit stack): a recursive descent hits
     # Python's recursion limit on ~1000 nested LIST headers, and
     # RecursionError escapes the ValueError corrupt-data contract — one
-    # crafted payload would crash the task through on_error='skip' and
-    # through media_errors. Descend-then-resume ordering preserves the
-    # recursive walk's stream order exactly.
+    # crafted payload would crash the task through on_error='skip'.
+    # Descend-then-resume ordering preserves the recursive walk's stream
+    # order exactly.
     stack = [(12, len(b))]
     while stack:
         pos, hi = stack.pop()
@@ -1082,77 +1043,3 @@ def extract_frames(df: DataFrame, every_n: int = 1, on_error: str = "fail") -> D
         MEDIA_SCHEMA.fields + [T.StructField("frame_index", T.IntegerType())]
     )
     return df.mapInPandas(expand, schema=schema)
-
-
-MEDIA_ERRORS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("error_kind", T.StringType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-def media_errors(df: DataFrame) -> DataFrame:
-    """Corpus-hygiene audit: one row per payload whose CONTENT cannot be
-    decoded at all. ``error_kind`` distinguishes ``corrupt`` (ValueError
-    — bad bytes) from ``unsupported`` (NotImplementedError — an honest
-    feature boundary such as a compressed image or AV codec), so a pipeline
-    can route the former to quarantine and the latter to a different decode
-    path. A clean corpus returns zero rows.
-
-    Runs the DEEPEST decode per codec (full pixels for bmp/ppm; full
-    sample/frame decode for wav/avi; header parse for ``tsdl-fake``), so
-    it costs about one analytics pass — an audit tool, not a free filter. A NULL payload is
-    reported as ``error_kind='null'`` — absence, not corruption; the ops
-    drop such rows silently under both error policies.
-
-    Relationship to ``on_error='skip'``: every row reported here is
-    dropped by every skip-mode op that touches it, but an op can skip
-    MORE than this audit flags, because skip also absorbs op-level
-    feature refusals on perfectly good content — e.g. pixel_stats skips
-    a VALID avi (route video through :func:`extract_frames` instead).
-    This report is about bad bytes, not about which op fits which row."""
-
-    def one(p, codec):
-        b = bytes(p)
-        if codec in _PIXEL_CODECS:
-            _PIXEL_CODECS[codec][0](b)
-        elif codec == "wav":
-            wav_decode(b)
-        elif codec == "avi":
-            avi_decode(b)
-        else:
-            _decode_payload(b, codec)
-
-    def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cods, kinds, msgs = [], [], [], []
-            for mid, p, c in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"].map(_codec_of)
-            ):
-                if p is None:
-                    # silently dropped by every op (_attempt_rows); the
-                    # audit is where a corpus run counts its missing blobs
-                    ids.append(mid); cods.append(c)
-                    kinds.append("null"); msgs.append("null payload")
-                    continue
-                try:
-                    one(p, c)
-                except ValueError as e:
-                    ids.append(mid); cods.append(c)
-                    kinds.append("corrupt"); msgs.append(str(e))
-                except NotImplementedError as e:
-                    ids.append(mid); cods.append(c)
-                    kinds.append("unsupported"); msgs.append(str(e))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "codec": pd.Series(cods, dtype="object"),
-                    "error_kind": pd.Series(kinds, dtype="object"),
-                    "error": pd.Series(msgs, dtype="object"),
-                }
-            )
-
-    return df.mapInPandas(audit, schema=MEDIA_ERRORS_SCHEMA)

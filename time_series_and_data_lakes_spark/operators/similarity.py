@@ -48,16 +48,16 @@ def require_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     loader) — NOT inside operators below a null-dropping filter:
     Catalyst's inferred join constraints evaluate derived expressions
     BELOW user filters, so an in-op guard falsely fired on already-dropped
-    rows (r10 find, reproduced with codegen off). Drop path:
-    :func:`drop_degenerate_vectors`."""
+    rows (r10 find, reproduced with codegen off). To drop such rows
+    instead, filter them out before the op."""
     v = F.col(vec_col)
     null_msg = F.lit(
         "null embedding: cosine/quantization is undefined for a NULL"
-        " vector — drop_degenerate_vectors() or impute before the op"
+        " vector — drop or impute such rows before the op"
     )
     nf_msg = F.lit(
         "non-finite embedding element: NaN/Inf makes cosine and quantization"
-        " undefined — drop_degenerate_vectors() or impute before the op"
+        " undefined — drop or impute such rows before the op"
     )
     return df.withColumn(
         vec_col,
@@ -72,32 +72,12 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def norm(v: Column) -> Column:
     """``sqrt(v·v)`` — factor the self-norm out per vector *before* a pair
     join so each interpreted-HOF dot product runs once per row, not once per
     pair (3x less HOF work; bit-identical, since ``sqrt(dot(v,v))`` is the
     same IEEE expression tree wherever it is evaluated)."""
     return F.sqrt(dot(v, v))
-
-
-def drop_degenerate_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """The scale-path pre-filter for every cosine-scoring op: drop rows
-    whose vector is NULL, has a NaN/±Inf element (NaN sorts ABOVE +Inf in
-    Spark's total order, so a NaN norm passes ``> 0`` — the r10 non-finite
-    sweep caught that silent-ranking path), or has zero norm. Cosine is
-    undefined for all three; the ops keep the LOUD contract rather than
-    ranking garbage, but at corpus scale a failed embedding job WILL ship
-    such vectors, and they should cost their own rows, not the query.
-    Survivors keep the exact same IEEE score tree — a pure no-op filter on
-    a clean corpus, pushed into the scan as a cheap predicate. Use as
-    ``cosine_topk(drop_degenerate_vectors(corpus), queries)`` — same for
-    ivf/lsh/pq/semantic_dedup inputs."""
-    v = F.col(vec_col)
-    return df.filter(v.isNotNull() & ~_has_nonfinite(v) & (norm(as_double(v)) > 0))
 
 
 def cosine_topk(
@@ -472,74 +452,6 @@ def quantize_embedding(vec: Column, bits: int = 8) -> tuple[Column, Column]:
 # --------------------------------------------------------------------------
 
 
-def _dist2(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as one sequential left fold — the same
-    deterministic-association contract as :func:`dot`."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _sub(vec: Column, m: int, sub_dim: int) -> Column:
-    """Subvector m of a flat embedding (1-based slice)."""
-    return F.slice(vec, m * sub_dim + 1, sub_dim)
-
-
-def pq_train(
-    corpus: DataFrame,
-    m_subspaces: int = 8,
-    n_codes: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-) -> list[list[list[float]]]:
-    """Train PQ codebooks: split ``dim`` into ``m_subspaces`` contiguous
-    subspaces and run the exact-DECIMAL k-means trainer
-    (:func:`kmeans_centroids`) on each — deterministic init (lowest ids),
-    deterministic sums, so the codebooks are bit-reproducible. Returns
-    ``codebooks[m][c] -> sub_dim floats`` (the only driver-side state:
-    M × n_codes × sub_dim floats, literals for the encode/search plans).
-
-    Cost: M small trainings, each iters × (one corpus scan of one slice +
-    a k×sub_dim exchange). For very large corpora train on a
-    :func:`...operators.curation.deterministic_sample` instead — PQ
-    codebooks converge on samples.
-    """
-    if dim % m_subspaces:
-        raise ValueError(f"dim {dim} not divisible by m_subspaces {m_subspaces}")
-    sub_dim = dim // m_subspaces
-    v = corpus.select(F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v"))
-    # NULL ids sort LAST (engine null-id convention): init = non-NULL ids
-    init_ids = v.orderBy(F.asc_nulls_last("vec_id")).limit(n_codes)
-    codebooks: list[list[list[float]]] = []
-    for m in range(m_subspaces):
-        sub = v.select("vec_id", _sub(F.col("v"), m, sub_dim).alias("embedding"))
-        init = init_ids.select("vec_id", _sub(F.col("v"), m, sub_dim).alias("embedding"))
-        cent = kmeans_centroids(
-            sub, init, iters=iters, checkpoint_dir=checkpoint_dir
-        )
-        rows = sorted(
-            ((r["vec_id"], list(r["embedding"])) for r in cent.collect()),
-            key=lambda t: t[0],
-        )
-        if not rows:
-            # An empty corpus yields zero centroids in every subspace; a
-            # codebook-less PQ model is meaningless, and letting it escape
-            # surfaces later as a bare IndexError inside pq_encode. Fail
-            # loudly at the training boundary instead (dirty-input
-            # contract: degenerate model inputs are ValueError).
-            raise ValueError(
-                "cannot train PQ codebooks on an empty corpus: "
-                f"no vectors in column {vec_col!r}"
-            )
-        codebooks.append([c for _, c in rows])
-    return codebooks
-
-
 def _require_codebooks(codebooks: list[list[list[float]]]) -> None:
     """Reject a degenerate PQ model (no subspaces, or a subspace with no
     centroids) before any plan is built — the symptom otherwise is a bare
@@ -560,15 +472,14 @@ def _pq_lut_frame(
     """Per-query ADC lookup tables as ``(query_id, qv, lut)`` — the
     M × n_codes squared distances from each query subvector to every
     codebook centroid, computed in ONE vectorized Arrow pass over the
-    (tiny) query side rather than as M × n_codes ``_dist2`` column trees:
+    (tiny) query side rather than as M × n_codes distance column trees:
     the expression form costs thousands of py4j round trips just to BUILD
     (measured ~4 s of driver time per invocation at M=8, k=16 — the same
     construction trap pq_encode documents), while the numpy form is an
-    explicit left fold over the sub-dims with ``_dist2``'s exact IEEE
+    explicit left fold over the sub-dims with the SQL oracle's exact IEEE
     association (acc = 0.0; acc += diff² per dim), so LUT values — and
-    therefore ADC scores and the SQL oracle hash — are bit-identical to
-    the expression form. ``qv`` (the float64 query vector) rides along for
-    callers that still probe centroids (ivf_pq_topk)."""
+    therefore ADC scores — match the SQL oracle bit for bit. ``qv`` is the
+    float64 query vector."""
 
     _require_codebooks(codebooks)
     m_subspaces = len(codebooks)
@@ -627,8 +538,8 @@ def pq_encode(
     stage (measured ~7 s at sf0.1 as column expressions vs well under a
     second vectorized), so the distances run as numpy batch arithmetic with
     an EXPLICIT left fold over the sub-dims — the same IEEE association as
-    :func:`_dist2`'s sequential aggregate, so codes (and therefore ADC
-    results and the SQL oracle) are bit-identical to the expression form.
+    the SQL oracle's sequential aggregate, so codes (and therefore ADC
+    results) match the SQL oracle bit for bit.
     One corpus scan, no shuffle; ``np.argmin`` returns the first minimum,
     matching the lowest-index tie-break.
 
@@ -653,7 +564,7 @@ def pq_encode(
             for m in range(m_subspaces):
                 sub = mat[:, m * sub_dim : (m + 1) * sub_dim]  # (n, sub_dim)
                 # (n, k) distances via explicit left fold over sub-dims:
-                # acc starts at 0.0, + term per dim — _dist2's association
+                # acc starts at 0.0, + term per dim — the oracle's association
                 acc = np.zeros((len(pdf), cb.shape[1]))
                 for i in range(sub_dim):
                     diff = sub[:, i : i + 1] - cb[m, :, i][None, :]
@@ -702,101 +613,6 @@ def pq_topk(
             "adc_dist2",
             # left-to-right subspace fold — the same association order as
             # the per-subspace reference sum, so ADC is bit-reproducible
-            functools.reduce(
-                lambda acc, term: acc + term,
-                [
-                    F.element_at(
-                        F.element_at("lut", m + 1),
-                        F.element_at("codes", m + 1) + 1,
-                    )
-                    for m in range(m_subspaces)
-                ],
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist2"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist2", "rank")
-    )
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The composed full-scale ANN stack: IVF cuts the SCAN (each query
-    touches only its ``n_probe`` nearest lists), PQ cuts the BYTES (probed
-    rows are scored by ADC over their M codes, no vector arithmetic). Both
-    assignment and probing use squared-euclidean against the broadcast
-    centroid row — the same metric ADC approximates, so the list a vector
-    lives in is the list a matching query probes.
-
-    One corpus scan computes list assignment (pure projection) and PQ codes
-    (fused Arrow pass) together; the probe join is broadcast; the only real
-    shuffle is the per-query top-k window. With ``n_probe`` equal to the
-    number of centroids this is exactly :func:`pq_topk` (every list
-    probed) — the equivalence the tests pin. ``queries`` carries the same
-    broadcast-small-and-cheap contract as :func:`pq_topk` (the LUT pass
-    runs it on one task)."""
-    cent = centroids.select(
-        F.col(id_col).alias("cid"), as_double(F.col(vec_col)).alias("cv")
-    )
-    cent_row = F.broadcast(
-        cent.agg(F.array_sort(F.collect_list(F.struct("cid", "cv"))).alias("cents"))
-    )
-
-    def d2_structs(v):
-        # struct ordering does the argmin: min distance, ties -> min cid
-        return lambda c: F.struct(_dist2(v, c["cv"]).alias("d"), c["cid"].alias("cid"))
-
-    assigned = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv"))
-        .crossJoin(cent_row)
-        .withColumn(
-            "list_id",
-            F.array_min(F.transform(F.col("cents"), d2_structs(F.col("cv"))))["cid"],
-        )
-        .drop("cents")
-        .withColumnRenamed("cv", vec_col)
-    )
-    encoded = pq_encode(assigned, codebooks, id_col="neighbor_id", vec_col=vec_col)
-
-    m_subspaces = len(codebooks)
-    # LUT from the fused Arrow pass (see _pq_lut_frame) — also fixes the
-    # expression form's per-probe-row re-evaluation (the LUT is computed
-    # once per query here, then replicated across its n_probe rows).
-    probes = (
-        _pq_lut_frame(queries, codebooks, id_col, vec_col)
-        .crossJoin(cent_row)
-        .withColumn(
-            "probe",
-            F.explode(
-                F.slice(
-                    F.array_sort(F.transform(F.col("cents"), d2_structs(F.col("qv")))),
-                    1,
-                    n_probe,
-                )
-            ),
-        )
-        .select(
-            "query_id",
-            F.col("probe")["cid"].alias("list_id"),
-            "lut",
-        )
-    )
-    scored = (
-        encoded.join(F.broadcast(probes), on="list_id", how="inner")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "adc_dist2",
             functools.reduce(
                 lambda acc, term: acc + term,
                 [

@@ -53,18 +53,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_SPLIT_RE))
 
 
-def stopword_ratio(text: Column, stopwords: list[str]) -> Column:
-    """Fraction of tokens that are stopwords — int/int division, exact."""
-    toks = tokens_col(text)
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.size(toks)
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lang: stopword_ratio(text, sw) for lang, sw in sorted(LANG_STOPWORDS.items())}
-
-
 def predicted_lang(text: Column) -> Column:
     """First language (code order) attaining the maximum stopword ratio —
     a deterministic argmax whose CASE-chain form is written identically in
@@ -192,41 +180,6 @@ def winnow_fingerprints(text: Column, k: int = 3, window: int = 4) -> Column:
         return let(kh, mins_of)
 
     return F.array_sort(F.array_distinct(let(tokens_col(text), fingerprints)))
-
-
-# ---------------------------------------------------------------------------
-# PII detection / scrubbing (training-data hygiene)
-# ---------------------------------------------------------------------------
-
-#: Conservative, linear-time patterns (no backtracking blowup): these run
-#: inside codegen over every document of the corpus, so each must be safe
-#: at 100 TB. Order matters for scrubbing: URLs first so an email-looking
-#: userinfo inside a URL is redacted as part of the URL, not left behind.
-PII_PATTERNS: dict[str, str] = {
-    "url": r"https?://\S+",
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "phone": r"\b\d{3}[-. ]\d{3}[-. ]?\d{4}\b",
-    "ipv4": r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b",
-}
-
-
-def pii_counts(text: Column) -> dict[str, Column]:
-    """Per-category PII match counts — pure column expressions
-    (``regexp_count``), one pass per pattern inside the same codegen stage,
-    no UDFs. Useful as filter features (drop docs with any hit) or corpus
-    report columns."""
-    return {name: F.regexp_count(text, F.lit(p)) for name, p in PII_PATTERNS.items()}
-
-
-def scrub_pii(text: Column, replacement: str = "[PII]") -> Column:
-    """Redact all PII categories in one chained ``regexp_replace`` pipeline
-    (URL first — see PII_PATTERNS ordering). Replacement is a fixed token so
-    downstream tokenization stays stable; the scrub is idempotent because
-    the replacement token matches none of the patterns."""
-    out = text
-    for p in PII_PATTERNS.values():
-        out = F.regexp_replace(out, p, replacement)
-    return out
 
 
 def bm25_topk(
@@ -407,19 +360,3 @@ def repetition_stats(
             )
         ).alias("top_bigram_char_frac"),
     )
-
-
-def heavy_tokens(docs, support: float = 0.01, text_col: str = "text") -> list[str]:
-    """Approximate heavy hitters over the corpus token stream: every token
-    occurring in more than ``support`` fraction of token positions is
-    returned (false positives possible, false NEGATIVES not — the
-    Karp/Shenker/Papadimitriou frequent-items guarantee behind Spark's
-    ``freqItems``). The sketch is one pass with bounded memory
-    (~1/support counters per partition, merged), which is the 100 TB
-    shape — the exact counterpart is the token-keyed aggregation of
-    ``text_top_tokens``. Returns the candidate token list (driver-side
-    model state, like the ANN centroid collects); approximate by design,
-    so it is pytest-bounded rather than oracle-gated."""
-    toks = docs.select(F.explode(tokens_col(F.col(text_col))).alias("token"))
-    row = toks.stat.freqItems(["token"], support).collect()[0]
-    return sorted(row["token_freqItems"])

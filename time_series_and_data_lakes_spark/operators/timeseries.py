@@ -428,8 +428,8 @@ def _interval_micros(step: str) -> int:
     if not math.isfinite(qty) or qty <= 0:
         # inf/nan float()-parse fine but overflow/garble the int()
         # conversion below; zero/negative steps divide-by-zero later in
-        # pick_level / time_bin — every interval this engine takes is a
-        # positive duration, so reject here, descriptively
+        # time_bin — every interval this engine takes is a positive
+        # duration, so reject here, descriptively
         raise ValueError(
             f"interval quantity must be a positive finite number, got "
             f"{parts[0]!r} in {step!r}"

@@ -595,8 +595,8 @@ def _quality_case_sql(toks_expr: str) -> str:
 
 
 def _lang_score_cols(toks: str = "toks") -> list[str]:
-    """Per-language stopword-ratio SELECT items — the SQL twin of
-    ``operators/text.py::lang_scores``, shared by the lang-id and funnel
+    """Per-language stopword-ratio SELECT items — the SQL twin of the
+    ratios in ``operators/text.py::predicted_lang``, shared by the lang-id and funnel
     oracles (whose lang copy once lost the null-text guard)."""
     cols = []
     for lang in sorted(X.LANG_STOPWORDS):
@@ -1325,9 +1325,7 @@ FROM fit f JOIN sums s USING (doc_id)
 
 # PQ/ADC gate: pluggable codebooks (sub-slices of the _PQ_CODES lowest
 # vec_ids — the same stand-in contract ann_ivf_topk uses for its centroid
-# set) so the oracle replays encode + ADC without replaying training; the
-# trained path (pq_train) is pytest-gated bit-exact against a Python
-# reference in tests/test_llm_ops.py.
+# set) so the oracle replays encode + ADC without replaying training.
 _PQ_M, _PQ_CODES, _PQ_SUBDIM = 8, 16, 8
 _PQ_NQ, _PQ_TOPK = 10, 10
 
@@ -1339,7 +1337,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup table is computed on the broadcast side BEFORE the join, so
     scoring a pair is 8 array lookups + adds. The 16-row collect here
     resolves MODEL PARAMETERS (codebooks, O(M*k*sub_dim) floats embedded as
-    plan literals — same contract as pq_train and plane_weights), not data
+    plan literals — same contract as plane_weights), not data
     movement; the corpus itself never touches the driver."""
     emb = _load_embeddings(spark, sf_dir)
     # NULL ids sort LAST (engine convention): seed = smallest NON-NULL ids
@@ -1348,7 +1346,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # degenerate model inputs are a named ValueError (r10 find)
         raise ValueError(
             "null embedding: PQ codebooks cannot train on NULL vectors — "
-            "drop_degenerate_vectors() or impute before the op"
+            "drop or impute such rows before the op"
         )
     rows = sorted((r["vec_id"], [float(x) for x in r["embedding"]]) for r in seed)
     codebooks = [
@@ -1366,8 +1364,8 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_d2_sql(a: str, b: str, m: str, sub_dim: int = _PQ_SUBDIM) -> str:
     """Squared euclidean distance of subspace ``m`` (a SQL expression) —
-    the same zip-square + sequential-left-fold IEEE tree as the Spark
-    ``_dist2`` (0.0 + first term is exact, so omitting the initial
+    the same sequential-left-fold IEEE association as the Spark side's
+    ``pq_encode`` (0.0 + first term is exact, so omitting the initial
     accumulator is bit-identical)."""
     sq = (
         f"list_transform(generate_series(1, {sub_dim}), "

@@ -27,11 +27,19 @@ def get_spark(
     cluster pass ``master=None`` with an external master URL already set, and
     size ``shuffle_partitions`` to ~2-3x total executor cores.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    raw_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cpus = int(raw_cpus)
+    except ValueError:
+        cpus = 0
+    if cpus <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw_cpus!r}"
+        )
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -4,20 +4,12 @@ from time_series_and_data_lakes_spark.sources.csv_tables import (
 )
 from time_series_and_data_lakes_spark.sources.export import export_window
 from time_series_and_data_lakes_spark.sources.catalog import crawl_and_register
-from time_series_and_data_lakes_spark.sources.bucketing import (
-    read_bucketed,
-    write_bucketed,
-)
 from time_series_and_data_lakes_spark.sources.stats import parquet_footer_max_micros
-from time_series_and_data_lakes_spark.sources.compaction import compact_partitions
 
 __all__ = [
-    "compact_partitions",
     "crawl_and_register",
     "export_window",
     "parquet_footer_max_micros",
-    "read_bucketed",
     "read_headered_csv",
     "register_view",
-    "write_bucketed",
 ]

@@ -2,16 +2,16 @@
 that swaps files, and the exactly-once micro-batch ledger around it.
 
 :func:`replace_dir` installs a staged dir over a live one (used by the
-windowed export, retention's compaction and :func:`commit_batch`): live dir
-to the hidden backup ``.replaced-{name}``, staging into place, backup
-deleted. A crash between the renames leaves the live name missing until
-:func:`recover` puts the backup back.
+windowed export and retention's compaction): live dir to the hidden
+backup ``.replaced-{name}``, staging into place, backup deleted. A crash
+between the renames leaves the live name missing until :func:`recover`
+puts the backup back.
 
-:func:`commit_batch` gives both streaming parquet sinks (the narrow store's
-ingest sink and the rollup refresh sink) exactly-once micro-batches. A bare
-write in ``foreachBatch`` is at-least-once: a crash between the write and
-the checkpoint's commit replays the batch, which duplicates an append and
-double-merges an additive fold. Protocol per micro-batch ``N``:
+:func:`commit_batch` gives the narrow store's streaming ingest sink
+exactly-once micro-batches. A bare write in ``foreachBatch`` is
+at-least-once: a crash between the write and the checkpoint's commit
+replays the batch, which duplicates its append. Protocol per micro-batch
+``N``:
 
 1. STAGE: sweep staging debris, then the sink writes the batch's
    partitioned output to the hidden ``{store}/.staging-{tag}-N`` dir
@@ -19,10 +19,9 @@ double-merges an additive fold. Protocol per micro-batch ``N``:
    renames). Live partitions are untouched; a crash here stages again.
 2. Record the ``staged`` marker. From here the staged files are the redo
    log: a replay installs them and never stages again.
-3. INSTALL by rename: append mode moves each staged file into its live
-   partition as ``b{N}-{file}``; replace mode installs each staged leaf
-   partition dir with :func:`replace_dir`. Installed entries leave
-   staging, so a replay mid-install moves only what remains.
+3. INSTALL by rename: each staged file moves into its live partition as
+   ``b{N}-{file}``. Installed files leave staging, so a replay mid-install
+   moves only what remains.
 4. Record ``applied``, then delete staging and the ``staged`` marker. A
    replay that finds ``applied`` only cleans up.
 
@@ -111,7 +110,7 @@ def _sweep_debris(pfs, store, prefix: str) -> None:
 
 
 def _leaf_partitions(pfs, root) -> list:
-    """(dir, path relative to ``root``, data files) per partition dir under
+    """(path relative to ``root``, data files) per partition dir under
     ``root`` that holds data files; ``.``/``_`` names are skipped."""
     leaves, todo = [], [(root, "")]
     while todo:
@@ -126,7 +125,7 @@ def _leaf_partitions(pfs, root) -> list:
             else:
                 files.append(s.getPath())
         if rel and files:
-            leaves.append((d, rel, files))
+            leaves.append((rel, files))
     return leaves
 
 
@@ -137,15 +136,13 @@ def commit_batch(
     store_path: str,
     tag: str,
     stage: Callable[[str], bool],
-    replace: bool,
 ) -> None:
     """Commit micro-batch ``batch_id`` into ``store_path`` exactly once.
 
     ``stage(staging_dir)`` writes the batch's partitioned output there and
     returns False when there is nothing to write (then only ``applied`` is
-    recorded). ``tag`` names the staging dir; ``replace`` picks the install
-    mode (leaf partitions replace the live ones, or files are appended as
-    ``b{batch_id}-{file}``)."""
+    recorded). ``tag`` names the staging dir; staged files are appended to
+    their live partitions as ``b{batch_id}-{file}``."""
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     conf = spark._jsc.hadoopConfiguration()
     applied = hpath(f"{checkpoint_dir}/applied_batches/{batch_id}")
@@ -182,12 +179,8 @@ def commit_batch(
         fs.create(staged, True).close()
     _maybe_fail("after_stage")
 
-    for d, rel, files in _leaf_partitions(pfs, staging):
+    for rel, files in _leaf_partitions(pfs, staging):
         dest_dir = hpath(f"{store_path}/{rel}")
-        if replace:
-            replace_dir(pfs, d, dest_dir)
-            _maybe_fail("mid_install")
-            continue
         pfs.mkdirs(dest_dir)
         for f in files:
             dest = hpath(f"{dest_dir}/b{batch_id}-{f.getName()}")

@@ -20,7 +20,6 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_and_data_lakes_spark.operators.dedup import h64
 from time_series_and_data_lakes_spark.sources.commit import recover, replace_dir
 
 
@@ -100,47 +99,3 @@ def backfill(
         w = w_end
     return paths
 
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "doc_id",
-    fmt: str = "parquet",
-) -> str:
-    """Deterministic sharded export for training pipelines: every row lands
-    in shard ``h64(id) % n_shards``, so shard membership is a pure function
-    of the id — stable across re-runs, retries, cluster sizes, and input
-    partitioning (what a resumable data loader needs to skip shards it has
-    already consumed).
-
-    Layout is ``{path}/shard=<k>/`` via ``partitionBy``: one directory per
-    shard, readable individually or as a whole (the shard column prunes).
-    Rows are sorted by id within partitions so file contents are
-    deterministic too, not just membership. The repartition keys on the
-    shard id — one shuffle, each shard written contiguously rather than
-    fragmented across every task's output.
-
-    A NULL id hashes as the empty string (r9 review find): unguarded, the
-    null propagates through the hash into a NULL shard, and partitionBy
-    strands the row in ``shard=__HIVE_DEFAULT_PARTITION__`` — OUTSIDE the
-    promised ``[0, n_shards)`` layout, silently invisible to any loader
-    iterating ``shard=0..n-1``.
-    """
-
-    sharded = df.withColumn(
-        "shard",
-        (
-            h64(F.coalesce(F.col(id_col).cast("string"), F.lit("")), seed="shard")
-            % n_shards
-        ).cast("int"),
-    )
-    (
-        sharded.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", id_col)
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )
-    return path

@@ -36,15 +36,9 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from time_series_and_data_lakes_spark.operators.timeseries import _interval_micros
-from time_series_and_data_lakes_spark.streaming.analytics_stream import _keyed_output_schema  # noqa: E501
-from time_series_and_data_lakes_spark.streaming.state_ttl import (
-    check_ttl_covers_window as _check_ttl,
-    timeout_conf as _timeout_conf,
-    ttl_millis as _ttl_millis,
-)
 
 # First field is a placeholder: the operator re-derives the key field's
 # name AND type from the input stream (_keyed_output_schema) — a hardcoded
@@ -70,6 +64,51 @@ CEP_OUTPUT_SCHEMA = T.StructType(
 # fresh MapObjects lambda ids on every micro-batch, so each batch would
 # compile them again; a string field compiles once.
 CEP_STATE_SCHEMA = T.StructType([T.StructField("state", T.StringType())])
+
+
+def _keyed_output_schema(
+    stream: DataFrame, key: str, default: T.StructType
+) -> T.StructType:
+    """Output schema with the key field named AND typed from the input —
+    a hardcoded sensor_id:string first field crashes the Arrow conversion
+    for integer keys and mislabels any custom key column."""
+    return T.StructType(
+        [T.StructField(key, stream.schema[key].dataType), *default.fields[1:]]
+    )
+
+
+def _ttl_millis(state_ttl: str | None) -> int | None:
+    """Parse a state-TTL interval to positive milliseconds.
+    Zero/negative/sub-millisecond intervals are rejected HERE, at
+    construct time — unvalidated they reach ``setTimeoutDuration`` and
+    fail the query mid-batch with an obscure executor error."""
+    if state_ttl is None:
+        return None
+
+    ttl_ms = _interval_micros(state_ttl) // 1000
+    if ttl_ms <= 0:
+        raise ValueError(
+            f"state_ttl {state_ttl!r} must be a positive interval of at "
+            f"least one millisecond"
+        )
+    return ttl_ms
+
+
+def _check_ttl(
+    ttl_ms: int | None,
+    within_us: int,
+    lateness_us: int | None,
+    state_ttl: str | None,
+) -> None:
+    """Reject a TTL shorter than the pattern's completion window
+    (``within`` + ``allowed_lateness``): eviction would drop candidates
+    that could still complete."""
+    if ttl_ms is not None and ttl_ms * 1000 < within_us + (lateness_us or 0):
+        raise ValueError(
+            f"state_ttl {state_ttl!r} is shorter than within"
+            f"{' + allowed_lateness' if lateness_us else ''} — eviction "
+            f"would drop candidates that could still complete"
+        )
 
 
 def _row_order(r: tuple) -> tuple:
@@ -370,6 +409,10 @@ def match_error_pattern_stream(
         outputStructType=_keyed_output_schema(stream, key, CEP_OUTPUT_SCHEMA),
         stateStructType=CEP_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=_timeout_conf(ttl_ms),
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if ttl_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 

@@ -173,8 +173,8 @@ def start_narrow_store_sink(
 
     Exactly-once under crash-replay on plain parquet: each micro-batch is
     staged under ``.staging-ingest-{batch_id}`` and committed by
-    :func:`...sources.commit.commit_batch` in append mode, so every staged
-    file lands in its live partition as ``b{batch_id}-{file}``. A bare
+    :func:`...sources.commit.commit_batch`, so every staged file lands in
+    its live partition as ``b{batch_id}-{file}``. A bare
     ``mode('append')`` here would be at-least-once: a crash between the
     append and the checkpoint commit replays the batch and duplicates its
     rows."""
@@ -191,7 +191,7 @@ def start_narrow_store_sink(
 
         commit_batch(
             batch.sparkSession, batch_id, checkpoint_dir, store_path,
-            "ingest", stage, replace=False,
+            "ingest", stage,
         )
 
     writer = narrow.writeStream.foreachBatch(write_batch).option(

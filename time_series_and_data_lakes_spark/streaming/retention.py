@@ -76,12 +76,8 @@ def compact_partitions(
     ingest's small-files debt — Delta's OPTIMIZE, done directly on the
     parquet store).
 
-    Sibling of :func:`...sources.compaction.compact_partitions`, which
-    packs PREDICATE-selected partitions to a fixed file count via dynamic
-    partition overwrite (one Spark job for all partitions, store readable
-    throughout). This variant instead SELECTS leaves by file-count/size
-    debt and sizes each leaf's output by bytes — the shape a scheduled TTL
-    sweep wants; pick by selection mode, the rewrite guarantees match.
+    Leaves are SELECTED by file-count/size debt and each leaf's output is
+    sized by bytes — the shape a scheduled TTL sweep wants.
 
     Streaming appends one file set per micro-batch, so a day-old partition
     holds hundreds of KB-scale files; at 100 TB that destroys scan
