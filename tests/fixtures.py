@@ -8,6 +8,23 @@ from __future__ import annotations
 
 import random
 
+from pyspark.sql import types as T
+
+#: Column contract of Spark's Kafka connector source — what a
+#: ``format("kafka")`` readStream emits per record (key/value are the raw
+#: serialized bytes; the rest is log position metadata).
+KAFKA_SOURCE_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.BinaryType()),
+        T.StructField("value", T.BinaryType()),
+        T.StructField("topic", T.StringType()),
+        T.StructField("partition", T.IntegerType()),
+        T.StructField("offset", T.LongType()),
+        T.StructField("timestamp", T.TimestampType()),
+        T.StructField("timestampType", T.IntegerType()),
+    ]
+)
+
 
 def sensor_readings(
     seed: int = 42,

@@ -1,31 +1,35 @@
-"""Census of the package's top-level defs: nothing unreached stays.
+"""Census of the package's top-level defs and constants: nothing
+unreached stays.
 
-A top-level def or class in the package must be reached from code that
-runs outside ``tests/`` — package module code, ``bench.py``,
-``__spark_entry__.py`` or perfbench's non-test modules — or be one of the
-reference capabilities in ``PUBLIC_API``. Reachability is transitive: a
-helper called only by an unreached def is unreached too. Anything else is
-a code path no query, workload or reference capability executes, so the
-test names it and fails; it also fails when a ``PUBLIC_API`` entry no
-longer exists. Pure AST scan, no Spark session.
+A top-level def, class or UPPER_CASE constant assignment in the package
+must be reached from code that runs outside ``tests/`` — package module
+code, ``bench.py``, ``__spark_entry__.py`` or perfbench's non-test modules
+— or be one of the reference capabilities in ``PUBLIC_API``. Reachability
+is transitive: a helper called only by an unreached def, or listed only in
+an unreached constant, is unreached too. Anything else is a code path or
+value no query, workload or reference capability reads, so the test names
+it and fails; it also fails when a ``PUBLIC_API`` entry no longer exists.
+Pure AST scan, no Spark session.
 
 What counts as a use: ``Name`` and ``Attribute`` nodes and identifier-like
 string constants (``getattr``/registry names), with ``import … as``
-aliases resolved. ``__all__`` entries and a def's own body do not count.
-Matching is by bare name, so a def shadowed by a same-named attribute
-elsewhere can pass; the census errs towards keeping code.
+aliases resolved. ``__all__`` entries, a def's own body and a constant's
+own assignment do not count. Matching is by bare name, so a def shadowed
+by a same-named attribute elsewhere can pass; the census errs towards
+keeping code.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "time_series_and_data_lakes_spark"
 
 #: Reference capabilities kept as public API although no query or workload
-#: calls them: "module.def" -> why (SURVEY.md §2 id or reason).
+#: reads them: "module.name" -> why (SURVEY.md §2 id or reason).
 PUBLIC_API = {
     "functions.ago": "P5: the reference's relative time filter ago(15m)",
     "operators.timeseries.sequence_grid": "W1: SEQUENCE(min, max, step) grid",
@@ -35,6 +39,8 @@ PUBLIC_API = {
     "sources.catalog.crawl_and_register": "S10: Glue crawler catalog registration",
     "sources.csv_tables.read_headered_csv": "S11: Athena external headered CSV table",
     "sources.csv_tables.register_view": "S12: CREATE OR REPLACE VIEW",
+    "sources.csv_tables.CUSTOMER_DATA_SCHEMA": "S11: the customer_data table's declared columns",
+    "sources.csv_tables.SENSOR_MAPPING_SCHEMA": "S11: the sensor_mapping table's declared columns",
     "sources.export.backfill": "S13/T12: historical backfill over past windows",
     "streaming.retention.expire_partitions": "S7: magnetic-store retention TTL",
     "streaming.retention.compact_partitions": "S7: small-file compaction of the narrow store",
@@ -45,6 +51,21 @@ PUBLIC_API = {
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_CONSTANT = re.compile(r"_?[A-Z][A-Z0-9_]*")
+
+
+def _constant_names(node: ast.stmt) -> list[str]:
+    """The UPPER_CASE names a top-level ``X = …`` / ``X: t = …`` binds;
+    empty for any other statement or target shape."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    if all(isinstance(t, ast.Name) and _CONSTANT.fullmatch(t.id) for t in targets):
+        return [t.id for t in targets]
+    return []
 
 
 def _module_name(path: Path) -> str:
@@ -75,8 +96,8 @@ def _uses(node: ast.AST, aliases: dict[str, str]) -> set[str]:
 
 
 def _scan(path: Path):
-    """(top-level def nodes, names used at module level, names used in
-    each def's body keyed by def name)."""
+    """(names used at module level outside top-level defs and constants,
+    names each def's body or constant's value uses keyed by its name)."""
     tree = ast.parse(path.read_text(), filename=str(path))
     aliases = {
         a.asname: a.name.rsplit(".", 1)[-1]
@@ -85,32 +106,38 @@ def _scan(path: Path):
         for a in n.names
         if a.asname
     }
-    defs = [n for n in tree.body if isinstance(n, _DEF)]
+    bodies: dict[str, set[str]] = {}
     top = set()
     for n in tree.body:
-        if not isinstance(n, _DEF):
+        if isinstance(n, _DEF):
+            bodies[n.name] = _uses(n, aliases)
+        elif names := _constant_names(n):
+            for name in names:
+                bodies.setdefault(name, set()).update(_uses(n.value, aliases))
+        else:
             top |= _uses(n, aliases)
-    return defs, top, {d.name: _uses(d, aliases) for d in defs}
+    return top, bodies
 
 
 def census() -> tuple[list[str], list[str]]:
-    """(unreached unlisted defs as ``module.def``, stale PUBLIC_API entries)."""
-    bodies: dict[str, set[str]] = {}  # "module.def" -> names its body uses
-    by_name: dict[str, list[str]] = {}  # def name -> its "module.def" keys
+    """(unreached unlisted defs and constants as ``module.name``, stale
+    PUBLIC_API entries)."""
+    bodies: dict[str, set[str]] = {}  # "module.name" -> names its body uses
+    by_name: dict[str, list[str]] = {}  # bare name -> its "module.name" keys
     roots: set[str] = set()
     for path in sorted(PKG.rglob("*.py")):
-        nodes, top, body_uses = _scan(path)
+        top, body_uses = _scan(path)
         roots |= top
-        for d in nodes:
-            key = f"{_module_name(path)}.{d.name}"
-            bodies[key] = body_uses[d.name]
-            by_name.setdefault(d.name, []).append(key)
+        for name in body_uses:
+            key = f"{_module_name(path)}.{name}"
+            bodies[key] = body_uses[name]
+            by_name.setdefault(name, []).append(key)
     outside = [REPO / "bench.py", REPO / "__spark_entry__.py"] + [
         p for p in sorted((REPO / "perfbench").glob("*.py"))
         if not p.name.startswith("test_")
     ]
     for path in outside:
-        _, top, body_uses = _scan(path)
+        top, body_uses = _scan(path)
         roots |= top.union(*body_uses.values())
 
     # a used name reaches every def of that name; a PUBLIC_API entry only
@@ -131,8 +158,8 @@ def census() -> tuple[list[str], list[str]]:
 def test_every_package_def_is_reached_or_public_api():
     unreached, _ = census()
     assert not unreached, (
-        "top-level defs that nothing outside tests/ reaches and that are "
-        "not in PUBLIC_API — delete them (with their tests) or list a "
+        "top-level defs and constants that nothing outside tests/ reaches "
+        "and that are not in PUBLIC_API — delete them (with their tests) or list a "
         f"reference capability they serve: {unreached}"
     )
 

@@ -17,7 +17,10 @@ plans       plan inspection / explain helpers
 streaming   structured-streaming ingest, stateful CEP, retention/TTL
 """
 
+from time_series_and_data_lakes_spark import _zipcache
 from time_series_and_data_lakes_spark.session import get_spark, stop_spark
+
+_zipcache.install()
 
 __all__ = ["get_spark", "stop_spark"]
 __version__ = "0.1.0"

@@ -469,7 +469,7 @@ def _pq_lut_frame(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Per-query ADC lookup tables as ``(query_id, qv, lut)`` — the
+    """Per-query ADC lookup tables as ``(query_id, lut)`` — the
     M × n_codes squared distances from each query subvector to every
     codebook centroid, computed in ONE vectorized Arrow pass over the
     (tiny) query side rather than as M × n_codes distance column trees:
@@ -478,8 +478,7 @@ def _pq_lut_frame(
     construction trap pq_encode documents), while the numpy form is an
     explicit left fold over the sub-dims with the SQL oracle's exact IEEE
     association (acc = 0.0; acc += diff² per dim), so LUT values — and
-    therefore ADC scores — match the SQL oracle bit for bit. ``qv`` is the
-    float64 query vector."""
+    therefore ADC scores — match the SQL oracle bit for bit."""
 
     _require_codebooks(codebooks)
     m_subspaces = len(codebooks)
@@ -488,7 +487,6 @@ def _pq_lut_frame(
     lut_schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("qv", T.ArrayType(T.DoubleType())),
             T.StructField("lut", T.ArrayType(T.ArrayType(T.DoubleType()))),
         ]
     )
@@ -509,7 +507,6 @@ def _pq_lut_frame(
             yield pd.DataFrame(
                 {
                     "query_id": pdf[id_col],
-                    "qv": [list(row) for row in mat],
                     "lut": [[list(row) for row in l] for l in luts],
                 }
             )
@@ -604,7 +601,7 @@ def pq_topk(
     pipeline (decode/UDF chains) should materialize it first.
     """
     m_subspaces = len(codebooks)
-    q = _pq_lut_frame(queries, codebooks, id_col, vec_col).select("query_id", "lut")
+    q = _pq_lut_frame(queries, codebooks, id_col, vec_col)
     scored = (
         encoded.withColumnRenamed(id_col, "neighbor_id")
         .crossJoin(F.broadcast(q))

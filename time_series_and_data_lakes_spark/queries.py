@@ -50,11 +50,6 @@ from time_series_and_data_lakes_spark.sources.stats import (
     parquet_part_files,
 )
 
-TABLE_NAMES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 GRID_STEP = "INTERVAL 1 HOUR"
 GRID_STEP_SQL = "INTERVAL 1 HOUR"
 

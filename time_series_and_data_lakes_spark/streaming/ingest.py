@@ -22,27 +22,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from time_series_and_data_lakes_spark.model import SENSOR_READING_SCHEMA
 from time_series_and_data_lakes_spark.operators.melt import melt
 from time_series_and_data_lakes_spark.sources.commit import commit_batch
-
-#: Column contract of Spark's Kafka connector source — what a
-#: ``format("kafka")`` readStream emits per record (key/value are the raw
-#: serialized bytes; the rest is log position metadata).
-KAFKA_SOURCE_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.BinaryType()),
-        T.StructField("value", T.BinaryType()),
-        T.StructField("topic", T.StringType()),
-        T.StructField("partition", T.IntegerType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("timestamp", T.TimestampType()),
-        T.StructField("timestampType", T.IntegerType()),
-    ]
-)
 
 
 def kafka_reader_options(
