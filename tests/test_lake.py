@@ -17,6 +17,10 @@ from time_series_and_data_lakes_spark.sources.csv_tables import (
 )
 from time_series_and_data_lakes_spark.sources.export import export_window
 
+# export_window reads naive bounds as UTC; frames are built from aware UTC
+# datetimes, which PySpark converts without the process's local zone
+UTC = dt.timezone.utc
+
 
 def _write_reference_shaped_dims(tmp_path):
     """Reference-shaped dimension CSVs (FIXTURES.md §5-6): 100 sensors
@@ -58,7 +62,8 @@ def test_export_csv_untyped_reread_retype(spark, tmp_path):
     embedded header rows with substr(col,1,1)='2'. Round-trip must equal the
     typed original."""
     rows = [
-        ("sensor-00", dt.datetime(2024, 1, 1, 0, 0, i), "OK", 10.0 + i) for i in range(30)
+        ("sensor-00", dt.datetime(2024, 1, 1, 0, 0, i, tzinfo=UTC), "OK", 10.0 + i)
+        for i in range(30)
     ]
     df = spark.createDataFrame(
         rows, "sensor_id string, time timestamp, status string, temperature double"
@@ -83,7 +88,7 @@ def test_export_csv_untyped_reread_retype(spark, tmp_path):
             F.col("col3").cast("double").alias("temperature"),
         )
     )
-    want = sorted(map(tuple, df.filter(F.col("time") < F.lit(end)).collect()))
+    want = sorted(map(tuple, df.filter(F.col("time") < F.lit(end.replace(tzinfo=UTC))).collect()))
     got = sorted(map(tuple, retyped.collect()))
     assert got == want
 
@@ -112,7 +117,7 @@ def test_export_formats_round_trip(spark, tmp_path):
     import pytest
 
     rows = [
-        ("sensor-01", dt.datetime(2024, 2, 1, 0, 0, i), "OK", 20.0 + i)
+        ("sensor-01", dt.datetime(2024, 2, 1, 0, 0, i, tzinfo=UTC), "OK", 20.0 + i)
         for i in range(10)
     ]
     df = spark.createDataFrame(

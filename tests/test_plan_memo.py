@@ -224,3 +224,25 @@ def test_rebuilt_flagship_compiles_no_new_classes(spark, sf_dir):
         before = codegen.METRIC_COMPILATION_TIME().getCount()
         df.collect()
         assert codegen.METRIC_COMPILATION_TIME().getCount() == before
+
+
+def test_new_export_window_compiles_no_new_classes(spark, sf_dir, tmp_path):
+    # The Airflow DAG exports the flagship for a new window every run. Its
+    # bounds must reach the fused stage above the grid explode as referenced
+    # values: as timestamp literals they were inlined into the generated
+    # code, and each new window compiled 2 new classes.
+    import datetime as dt
+
+    from time_series_and_data_lakes_spark.sources.export import export_window
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    base = str(tmp_path / "export")
+    start = dt.datetime(2024, 1, 7, 3, 17)
+    for day in range(2):
+        lo = start + dt.timedelta(days=day)
+        df = Q.q1_flagship_interpolate(spark, sf_dir)
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        path = export_window(df, base, lo, lo + dt.timedelta(days=1))
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
+        assert spark.read.parquet(path).count() > 0
+    assert compiled == 0

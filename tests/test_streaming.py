@@ -410,7 +410,11 @@ def _export_frame(spark):
     rows = sensor_readings(seed=3, sensors=4, span_seconds=60)
     df = spark.createDataFrame(
         [
-            (r["sensor_id"], dt.datetime.utcfromtimestamp(r["event_time"] / 1000.0), r["temperature"])
+            (
+                r["sensor_id"],
+                dt.datetime.fromtimestamp(r["event_time"] / 1000.0, dt.timezone.utc),
+                r["temperature"],
+            )
             for r in rows
         ],
         "sensor_id string, time timestamp, temperature double",
@@ -488,6 +492,82 @@ def test_export_rerun_failure_keeps_last_good_window(spark, tmp_path, fault):
         for d in os.listdir(base)
         if d.startswith((".staging-export-", commit.BACKUP_PREFIX))
     ]
+
+
+def test_export_refuses_empty_and_inverted_windows(spark, tmp_path):
+    import os
+
+    _, df, start, end = _export_frame(spark)
+    base = str(tmp_path / "lake")
+    path = export_window(df, base, start, end)
+    first = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert first
+    for lo, hi in [(start, start), (end, start)]:
+        with pytest.raises(ValueError, match="must end after it starts"):
+            export_window(df, base, lo, hi)
+        with pytest.raises(ValueError, match="must end after it starts"):
+            export_window(df, str(tmp_path / "fresh"), lo, hi)
+    # the refused calls touched no file: the good export is still the only dir
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == first
+    assert os.listdir(base) == [os.path.basename(path)]
+    assert not (tmp_path / "fresh").exists()
+
+
+@pytest.fixture
+def new_york_host_zone(monkeypatch):
+    """The Python process's local zone set to America/New_York (UTC-5 in
+    January) for one test."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        assert time.timezone == 5 * 3600  # the zone took effect
+        yield
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_export_reads_naive_bounds_as_utc(spark, tmp_path, new_york_host_zone):
+    # one row an hour over 2024-01-01..03 in the session zone (UTC), built
+    # in SQL so the process's local zone does not touch the data
+    df = spark.sql(
+        "SELECT id, timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, int(id), 0, 0)"
+        " AS time FROM range(72)"
+    )
+    base = str(tmp_path / "lake")
+    day = dt.datetime(2024, 1, 2)
+    path = export_window(df, base, day, day + dt.timedelta(days=1))
+    assert path == f"{base}/2024-01-02T00-00"  # the stamp names the rows' day
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(24, 48))
+    # an aware bound is converted to UTC, for the rows and the stamp alike
+    east = dt.timezone(dt.timedelta(hours=-5))
+    lo = dt.datetime(2024, 1, 1, 19, tzinfo=east)
+    assert export_window(df, base, lo, lo + dt.timedelta(days=1)) == path
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(24, 48))
+
+
+@pytest.mark.parametrize("time_type", ["timestamp", "timestamp_ntz"])
+def test_export_window_is_half_open_and_drops_null_time(spark, tmp_path, time_type):
+    df = spark.sql(
+        f"""SELECT id, CAST(t AS {time_type}) AS time FROM VALUES
+          (0, timestamp'2024-03-01 00:00:00' - INTERVAL 1 MICROSECOND),
+          (1, timestamp'2024-03-01 00:00:00'),
+          (2, timestamp'2024-03-01 00:30:00'),
+          (3, timestamp'2024-03-01 00:59:59.999999'),
+          (4, timestamp'2024-03-01 01:00:00'),
+          (5, NULL) AS v(id, t)"""
+    )
+    start, end = dt.datetime(2024, 3, 1), dt.datetime(2024, 3, 1, 1)
+    path = export_window(df, str(tmp_path / "lake"), start, end)
+    lo, hi = (F.lit(t.replace(tzinfo=dt.timezone.utc)) for t in (start, end))
+    out = spark.read.parquet(path)
+    assert out.schema["time"].dataType == df.schema["time"].dataType
+    # the row at start is kept, the row at end and the null time dropped,
+    # exactly as a filter on plain timestamp literals does
+    plain = df.filter((F.col("time") >= lo) & (F.col("time") < hi))
+    assert sorted(r.id for r in out.collect()) == sorted(r.id for r in plain.collect()) == [1, 2, 3]
 
 
 def _store(tmp_path, uri):
@@ -669,8 +749,9 @@ def test_export_sub_minute_windows_get_distinct_paths(spark, tmp_path):
         window_path(base, t0 + dt.timedelta(seconds=30))
         == f"{base}/2024-01-01T12-00-30"
     )
+    utc0 = t0.replace(tzinfo=dt.timezone.utc)
     df = spark.createDataFrame(
-        [("s1", t0 + dt.timedelta(seconds=s), float(s)) for s in range(60)],
+        [("s1", utc0 + dt.timedelta(seconds=s), float(s)) for s in range(60)],
         "sensor_id string, time timestamp, v double",
     )
     paths = backfill(
